@@ -452,7 +452,13 @@ def _exact_percentile_bounds(
     term order and cast points match the Scala source, so the produced
     double is the same bits the aggregate yields (the clip comparisons
     downstream are exact equality-sensitive).  NULL values are excluded
-    before ranking, as the aggregate excludes them."""
+    before ranking, as the aggregate excludes them.
+
+    Assumes ``val_col`` is double-typed (q_winsorize's l_extendedprice).
+    Other numeric types are cast to double before ranking, and the tie
+    branch then compares the cast values where the aggregate compares
+    original keys: two distinct long or decimal keys that collide as
+    doubles (beyond 2^53) may differ from the aggregate by one ulp."""
     from pyspark.sql.window import Window
 
     # cast to double up front — the aggregate sorts original keys and

@@ -176,7 +176,7 @@ def fan_out_small_scan(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
 
 def _parse_byte_conf(raw: str) -> int:
     """Spark byte-string conf → bytes.  Handles plain ints and the
-    human-readable k/m/g/t suffixes (with or without a trailing 'b'),
+    human-readable k/m/g/t/p suffixes (with or without a trailing 'b'),
     matching JavaUtils.byteStringAsBytes — the bare ``rstrip('b')`` it
     replaces silently fell back to 128 MB on values like '128m'
     (round-13 ADVICE)."""
@@ -184,7 +184,10 @@ def _parse_byte_conf(raw: str) -> int:
     if s.endswith("b"):
         s = s[:-1]
     mult = 1
-    for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("t", 1 << 40)):
+    for suffix, m in (
+        ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("t", 1 << 40),
+        ("p", 1 << 50),
+    ):
         if s.endswith(suffix):
             s, mult = s[: -len(suffix)], m
             break

@@ -25,6 +25,17 @@ capability-gated on this container's classpath):
 The serving table is partitioned by event_type (the reference's serving
 indexes are (city, window_start) / last_updated — init-analytics-db.sql:
 13-14; partition-on-key + in-partition sort is the Spark substitute).
+
+The three update-mode upsert runners drain without no-data micro-batches
+(`_drain_update`): in update mode the 0-row batch Spark runs after a data
+batch only advances the watermark and evicts state, so it emits no row and
+merges nothing, yet costs a full trigger (planning, a state-store commit
+per partition, the offset and commit logs).  Each drain's first batch
+still drops late rows by the watermark the skipped batch would have
+applied (streaming.sources.stream_state_partitions); inside a multi-batch
+drain a row later than the watermark is dropped one batch sooner than
+with Spark's default propagation, which keeps it or drops it as Spark's
+watermark contract allows.
 """
 
 from __future__ import annotations
@@ -148,16 +159,19 @@ def _merge_upsert_batch(spark, batch: DataFrame, table_dir: str) -> None:
         if os.path.exists(os.path.join(table_dir, _part_dirname(p)))
     ]
     if existing_parts:
-        # partition value is encoded in the path; restore it per path read
-        olds = []
-        for p in existing_parts:
-            olds.append(
-                spark.read.parquet(os.path.join(table_dir, _part_dirname(p)))
-                .withColumn(KEY_COLS[0], F.lit(p).cast("string"))
+        # one scan over every touched partition with the schema given:
+        # every file in the table was written here from a batch of this
+        # schema, so no footer needs reading to infer it.  Partition
+        # discovery under basePath restores the key column (the Hive
+        # default dir reads back as NULL, escaped names unescaped).
+        old = (
+            spark.read.schema(batch.schema)
+            .option("basePath", table_dir)
+            .parquet(
+                *(os.path.join(table_dir, _part_dirname(p))
+                  for p in existing_parts)
             )
-        old = olds[0]
-        for o in olds[1:]:
-            old = old.unionByName(o)
+        )
         # null-safe anti-join: a NULL key row must match its replay (plain
         # `=` never matches NULL → the old copy would survive every merge
         # and duplicate on replay, breaking keyed idempotence)
@@ -302,21 +316,11 @@ def run_upsert_stream_merge_into(
 ) -> None:
     """Delta/Iceberg variant of run_upsert_stream — same update-mode
     foreachBatch shape, serving table lives in a transactional format."""
-    from data_pipeline_cursor_spark.streaming.sources import (
-        record_state_progress,
-        stream_state_partitions,
+    _drain_update(
+        agg_stream,
+        lambda b, _id: merge_upsert_batch_merge_into(b, table),
+        checkpoint,
     )
-
-    with stream_state_partitions(agg_stream.sparkSession):
-        q = (
-            agg_stream.writeStream.outputMode("update")
-            .foreachBatch(lambda b, _id: merge_upsert_batch_merge_into(b, table))
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)  # prod: processingTime="10 seconds"
-            .start()
-        )
-        q.awaitTermination()
-        record_state_progress(q)
 
 
 POSTGRES_DRIVER = "org.postgresql.Driver"
@@ -423,15 +427,33 @@ def run_upsert_stream_jdbc(
 ) -> None:
     """JDBC variant of run_upsert_stream — same update-mode foreachBatch
     shape, serving table lives in the database instead of Parquet."""
+    _drain_update(
+        agg_stream,
+        lambda b, _id: merge_upsert_batch_jdbc(b, url, table),
+        checkpoint,
+    )
+
+
+def _drain_update(
+    agg_stream: DataFrame,
+    merge_batch,
+    checkpoint: str,
+    state_parts: int | None = None,
+) -> None:
+    """Drain an update-mode aggregation into ``merge_batch`` through
+    foreachBatch, shared by the three upsert runners.  No 0-row
+    micro-batches: see the module docstring."""
     from data_pipeline_cursor_spark.streaming.sources import (
         record_state_progress,
         stream_state_partitions,
     )
 
-    with stream_state_partitions(agg_stream.sparkSession):
+    with stream_state_partitions(
+        agg_stream.sparkSession, state_parts or 8, no_data_batches=False
+    ):
         q = (
             agg_stream.writeStream.outputMode("update")
-            .foreachBatch(lambda b, _id: merge_upsert_batch_jdbc(b, url, table))
+            .foreachBatch(merge_batch)
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)  # prod: processingTime="10 seconds"
             .start()
@@ -451,21 +473,12 @@ def run_upsert_stream(
     retract/upsert stream: a window's row is re-emitted and overwritten on
     every in-watermark late arrival.  ``state_parts`` pins the state-store
     shuffle width (callers derive it from input size; None keeps 8)."""
-    from data_pipeline_cursor_spark.streaming.sources import (
-        record_state_progress,
-        stream_state_partitions,
+    _drain_update(
+        agg_stream,
+        lambda b, _id: merge_upsert_batch(b, table_dir),
+        checkpoint,
+        state_parts,
     )
-
-    with stream_state_partitions(agg_stream.sparkSession, state_parts or 8):
-        q = (
-            agg_stream.writeStream.outputMode("update")
-            .foreachBatch(lambda b, _id: merge_upsert_batch(b, table_dir))
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)  # prod: processingTime="10 seconds"
-            .start()
-        )
-        q.awaitTermination()
-        record_state_progress(q)
 
 
 def read_serving_table(spark: SparkSession, table_dir: str) -> DataFrame:

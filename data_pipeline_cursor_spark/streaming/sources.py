@@ -310,7 +310,9 @@ from contextlib import contextmanager
 
 
 @contextmanager
-def stream_state_partitions(spark: SparkSession, n: int = 8):
+def stream_state_partitions(
+    spark: SparkSession, n: int = 8, no_data_batches: bool = True
+):
     """Pin the stateful-shuffle width for a streaming query's lifetime.
 
     The state-store partition count is frozen from
@@ -320,13 +322,34 @@ def stream_state_partitions(spark: SparkSession, n: int = 8):
     i.e. 2.5 s of pure commit overhead per batch at 32 partitions × 2
     stateful ops.  Size it to state volume, not to the session default: 8
     fits the fixture's ≤50 k state keys; a 100 TB deployment sizes UP
-    (state_bytes / ~100 MB per store), set once at job launch."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    (state_bytes / ~100 MB per store), set once at job launch.
+
+    ``no_data_batches=False`` turns off the 0-row micro-batch Spark runs
+    after a data batch only to advance the watermark and evict state, and
+    is for queries with ONE stateful operator whose skipped batch would
+    emit nothing (update output mode; see streaming.sinks).  Spark's
+    multi-operator watermark propagation filters late rows with the
+    previous batch's watermark, so without the 0-row batch the next data
+    batch — the next drain's first one — would keep rows the skipped batch
+    would have dropped; the single-operator propagation
+    (allowMultiple=false) filters each batch with its own watermark, which
+    at a drain boundary is the one the skipped batch applied.  Neither conf
+    is stored in the offset log, so existing checkpoints resume as is."""
+    confs = {"spark.sql.shuffle.partitions": str(n)}
+    if not no_data_batches:
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+        confs["spark.sql.streaming.statefulOperator.allowMultiple"] = "false"
+    old = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 #: Live keyed-state telemetry of the most recently drained query —

@@ -440,6 +440,57 @@ def test_upsert_bound_holds_at_large_key_cardinality(spark, tmp_path):
         sinks.merge_upsert_batch(batch, str(tmp_path / "serving_cap_large"))
 
 
+def test_upsert_merge_jobs_flat_in_touched_partitions(spark, tmp_path):
+    """The merge reads every touched partition in ONE schema-given scan,
+    so its Spark job count must not grow with the number of existing
+    partitions a batch touches (a per-partition read that infers its
+    schema from the footers launches jobs per partition).  Both merges
+    apply the same 10-key batch, so the collect, anti-join and write
+    have the same shape; only the number of existing partitions the
+    batch touches differs, 1 against 10."""
+    import uuid
+
+    from data_pipeline_cursor_spark.streaming.sinks import (
+        merge_upsert_batch,
+        read_serving_table,
+    )
+
+    schema = (
+        "event_type string, window_start string, avg_value double, "
+        "n_events long"
+    )
+    keys = [f"city{i}" for i in range(10)]
+    sc = spark.sparkContext
+
+    def merge_jobs(n_existing: int) -> int:
+        table_dir = str(tmp_path / f"serving_jobs_{n_existing}")
+        merge_upsert_batch(
+            spark.createDataFrame(
+                [(k, "2024-01-01 00:00:00", 1.0, 1) for k in keys[:n_existing]],
+                schema,
+            ),
+            table_dir,
+        )
+        group = f"merge-jobs-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, f"merge touching {n_existing} partitions")
+        try:
+            merge_upsert_batch(
+                spark.createDataFrame(
+                    [(k, "2024-01-01 00:05:00", 2.0, 2) for k in keys], schema
+                ),
+                table_dir,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        out = read_serving_table(spark, table_dir).toPandas()
+        assert len(out) == 10 + n_existing
+        assert sorted(set(out["event_type"])) == keys
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one, ten = merge_jobs(1), merge_jobs(10)
+    assert ten == one, (one, ten)
+
+
 def test_exact_percentile_bounds_matches_percentile_aggregate(spark):
     """q_winsorize's window-rank bounds (round-14 rewrite) must replicate
     the `F.percentile` exact aggregate BIT-FOR-BIT — including ties at
@@ -2198,6 +2249,7 @@ def test_parse_byte_conf_suffixes():
     assert _parse_byte_conf("128MB") == 128 * 1024 * 1024
     assert _parse_byte_conf("1g") == 1 << 30
     assert _parse_byte_conf("512k") == 512 * 1024
+    assert _parse_byte_conf("2pb") == 2 << 50
     assert _parse_byte_conf("not-a-size") == 128 * 1024 * 1024
 
 

@@ -238,3 +238,34 @@ def test_scale_parity_sf1(spark, name):
 @pytest.mark.parametrize("name", SCALE_SLICE)
 def test_scale_parity_sf10(spark, name):
     compare_query(spark, name, get_queries()[name], get_oracles()[name], SF10)
+
+
+def test_drain_state_parts_derived_widths(tmp_path):
+    """The state-store width each drain derives from the events
+    footprint (about 1 MB per partition, clamped to [2, 8]) is pinned at
+    the sizes the sized runs validated, without needing sized fixtures:
+    sparse files of the fixtures' real byte counts stand in for them.
+    sf10's events (~205 MB of part files) derive 8, sf0.1's single
+    2 MB file derives 2, and an empty events dir derives the floor 2."""
+    from pathlib import Path
+
+    from data_pipeline_cursor_spark.sources.tables import table_path
+    from data_pipeline_cursor_spark.streaming.jobs import _drain_state_parts
+
+    def sf_dir(name: str, sizes: list[int], single_file: bool = False) -> str:
+        events = Path(table_path(str(tmp_path / name), "events"))
+        if single_file:
+            events.parent.mkdir()
+            paths = [events]
+        else:
+            events.mkdir(parents=True)
+            paths = [events / f"part-{i}.parquet" for i in range(len(sizes))]
+        for path, size in zip(paths, sizes):
+            path.touch()
+            os.truncate(path, size)
+        return str(events.parent)
+
+    assert _drain_state_parts(sf_dir("sf10", [205 * (1 << 20) // 16] * 16)) == 8
+    assert _drain_state_parts(sf_dir("sf0.1", [2_045_762], single_file=True)) == 2
+    assert _drain_state_parts(sf_dir("mid", [5 << 20])) == 5
+    assert _drain_state_parts(sf_dir("empty", [])) == 2

@@ -326,6 +326,74 @@ def test_checkpoint_resume_exactly_once(spark, tmp_path):
     assert got == sorted(range(9)), got
 
 
+def test_upsert_drains_resume_without_empty_batches(spark, tmp_path, monkeypatch):
+    """Two landed files, each drained by run_upsert_stream resuming ONE
+    checkpoint: each drain runs a single data micro-batch (no 0-row
+    watermark batch), yet the watermark file 1 set still holds when file
+    2 is drained — an in-watermark row refines file 1's window row and a
+    row more than FIXTURE_WATERMARK older than file 1's maximum is
+    dropped — and the serving table equals the batch tumbling aggregate
+    of the rows kept."""
+    import json
+
+    from data_pipeline_cursor_spark.streaming import sources
+    from data_pipeline_cursor_spark.streaming.jobs import tumble_agg
+    from data_pipeline_cursor_spark.streaming.sinks import (
+        read_serving_table,
+        run_upsert_stream,
+    )
+
+    assert sources.FIXTURE_WATERMARK == "35 days"  # the late row below
+    progress = []
+    record = sources.record_state_progress
+
+    def capture(q):
+        progress.extend(json.loads(p.json) for p in q.recentProgress)
+        record(q)
+
+    monkeypatch.setattr(sources, "record_state_progress", capture)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    serving, ckpt = str(tmp_path / "serving"), str(tmp_path / "ckpt")
+
+    def land_and_drain(name, rows):
+        (landing / name).write_text(
+            "\n".join(
+                json.dumps(dict(zip(("event_id", "event_type", "value", "ts"), r)))
+                for r in rows
+            )
+        )
+        run_upsert_stream(
+            tumble_agg(sources.read_event_stream(spark, str(landing))),
+            serving,
+            ckpt,
+        )
+
+    land_and_drain("a.json", [
+        ("1", "click", "10", "2024-03-10 10:00:00"),
+        ("2", "view", "5", "2024-03-10 10:02:00"),
+        ("3", "click", "30", "2024-03-10 12:00:00"),
+    ])
+    land_and_drain("b.json", [
+        ("4", "click", "20", "2024-03-10 10:03:00"),  # refines 10:00 click
+        ("5", "view", "7", "2024-01-01 09:00:00"),  # > 35 days late: dropped
+        ("6", "view", "9", "2024-03-11 08:00:00"),
+    ])
+    assert [p["numInputRows"] for p in progress] == [3, 3], progress
+
+    got = read_serving_table(spark, serving).drop("last_updated").toPandas()
+    click = got[
+        (got["event_type"] == "click")
+        & (got["window_start"] == pd.Timestamp("2024-03-10 10:00:00"))
+    ]
+    assert list(click["n_events"]) == [2] and list(click["avg_value"]) == [15.0]
+    assert not (got["window_start"] == pd.Timestamp("2024-01-01 09:00:00")).any()
+    kept = sources._typed_events(
+        spark.read.schema(sources.EVENT_SCHEMA).json(str(landing))
+    ).filter(F.col("event_id") != 5)
+    assert_same_result(got, tumble_agg(kept, with_watermark=False).toPandas())
+
+
 def test_jdbc_upsert_sink_gate(spark):
     """The JDBC upsert sink is the reference's ACTUAL serving path
     (flink/sql/weather-aggregation.sql:29-34 writes Postgres over JDBC);
