@@ -1900,20 +1900,22 @@ def snapshot_metadata_count(
     manifest = _load_manifest(table_dir, v)
     if manifest.get("delete_files"):
         total = snapshot_read(spark, table_dir, v).count()
-        return spark.createDataFrame([(total,)], "n_rows bigint")
-    bounds = manifest.get("file_bounds", {})
-    total = 0
-    for f in manifest["files"]:
-        rec = bounds.get(f)
-        n = rec.get("_num_rows") if rec is not None else None
-        if n is None:  # legacy/no-stats: one footer read for THIS file
-            import pyarrow.parquet as pq
+    else:
+        bounds = manifest.get("file_bounds", {})
+        total = 0
+        for f in manifest["files"]:
+            rec = bounds.get(f)
+            n = rec.get("_num_rows") if rec is not None else None
+            if n is None:  # legacy/no-stats: one footer read for THIS file
+                import pyarrow.parquet as pq
 
-            n = pq.ParquetFile(
-                os.path.join(table_dir, f)
-            ).metadata.num_rows
-        total += n
-    return spark.createDataFrame([(total,)], "n_rows bigint")
+                n = pq.ParquetFile(
+                    os.path.join(table_dir, f)
+                ).metadata.num_rows
+            total += n
+    # a literal over range(1) stays in the JVM: a Python-list frame would
+    # pay a Python worker task, the whole cost of this driver-side count
+    return spark.range(1).select(F.lit(total).cast("bigint").alias("n_rows"))
 
 
 @register(
@@ -2356,7 +2358,12 @@ def _file_key_bounds(
     ordering matches parquet's stats ordering — exact for integer and
     ASCII-string keys (parquet string stats are byte-lexicographic and
     writers keep truncated stats as VALID bounds); for non-ASCII string
-    keys prefer an integer surrogate key."""
+    keys prefer an integer surrogate key.  The merge's driver-side
+    range test (_merge_candidates) compares these bounds with the
+    source's Spark-computed min/max in Python: exact for integer and
+    ASCII or UTF-8 string keys, because Python's code-point order
+    equals Spark's UTF-8 byte order; a NaN range or bound compares
+    False and falls through to the Spark-side bounds join."""
     recorded = (manifest or {}).get("file_bounds", {})
     out: dict[str, tuple | None] = {}
     legacy = []
@@ -2900,21 +2907,104 @@ def snapshot_read_time_range(
     )
 
 
-def _merge_check_source(source: DataFrame, key: str) -> DataFrame:
-    """Materialize the MERGE source once (localCheckpoint — it has four
-    consumers, same reason Delta materializes MERGE sources) and enforce
-    the unique-source-key precondition (a multiply-matched target row
-    makes MERGE nondeterministic; Delta/Iceberg raise the same way)."""
+def _merge_check_source(
+    source: DataFrame, key: str
+) -> tuple[DataFrame, tuple]:
+    """Materialize the MERGE source once (localCheckpoint — it has up to
+    four consumers: this check, the bounds join of partially
+    overlapping files, the touched-file scan and the clause join or
+    bucketed stage write; same reason Delta materializes MERGE sources)
+    and enforce the unique-source-key precondition (a multiply-matched
+    target row makes MERGE nondeterministic; Delta/Iceberg raise the
+    same way).  ONE aggregate over the per-key counts yields the
+    largest count (two NULL-key rows count as a duplicate too) and the
+    source key range, so the range costs no extra job.  Returns
+    (source, (min key, max key)); the range is (None, None) for an
+    empty or all-NULL source."""
     source = source.localCheckpoint(eager=True)
-    dup = (
-        source.groupBy(key).count().filter(F.col("count") > 1).limit(1).count()
+    st = (
+        source.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .agg(
+            F.max("_n").alias("_n"),
+            F.min(key).alias("_lo"),
+            F.max(key).alias("_hi"),
+        )
+        .first()
     )
-    if dup:
+    if st["_n"] is not None and st["_n"] > 1:
         raise ValueError(
             "snapshot_merge: duplicate source keys — MERGE requires a "
             "unique source key per target row"
         )
-    return source
+    return source, (st["_lo"], st["_hi"])
+
+
+def _merge_candidates(
+    spark: SparkSession,
+    files: list[str],
+    bounds: dict[str, tuple | None],
+    source: DataFrame,
+    key: str,
+    krange: tuple,
+) -> list[str]:
+    """Files that may hold a source key, from their recorded key bounds
+    (step 1 of the COW merge): a file without bounds always qualifies;
+    a bounded [lo, hi] file qualifies iff some non-NULL source key lies
+    in it.  Decided on the driver from the source range [smin, smax]
+    wherever that is exact — a file entirely below smin or above smax
+    holds no source key, and a file holding smin or smax holds a source
+    key — so only files strictly inside the range (neither end in
+    them) need the per-key bounds semi-join.  Any comparison with a NaN
+    end or bound is False, so NaN never prunes a file nor proves it a
+    candidate: such files fall through to the join.  Returns the
+    candidates in manifest order."""
+    smin, smax = krange
+    keep = {f for f in files if bounds[f] is None}
+    partial = []
+    if smin is not None:  # an empty or all-NULL source hits no bounded file
+        for f in files:
+            if bounds[f] is None:
+                continue
+            lo, hi = bounds[f]
+            if hi < smin or lo > smax:
+                continue
+            if lo <= smin <= hi or lo <= smax <= hi:
+                keep.add(f)
+            else:
+                partial.append((f, lo, hi))
+    if partial:
+        # built through Arrow: a JVM-side relation, no Python worker task
+        import pyarrow as pa
+        from pyspark.sql.types import StringType, StructField, StructType
+
+        kt = source.schema[key].dataType
+        names, los, his = zip(*partial)
+        bdf = spark.createDataFrame(
+            pa.table(
+                {"_bfile": list(names), "_blo": list(los), "_bhi": list(his)}
+            ),
+            StructType(
+                [
+                    StructField("_bfile", StringType()),
+                    StructField("_blo", kt),
+                    StructField("_bhi", kt),
+                ]
+            ),
+        )
+        # a left-semi join emits each bounds row (= file) at most once
+        hits = (
+            F.broadcast(bdf)
+            .join(
+                source.select(key),
+                (F.col(key) >= F.col("_blo")) & (F.col(key) <= F.col("_bhi")),
+                "left_semi",
+            )
+            .select("_bfile")
+            .collect()
+        )
+        keep.update(r["_bfile"] for r in hits)
+    return [f for f in files if f in keep]
 
 
 def _merge_detect_touched(
@@ -2923,38 +3013,21 @@ def _merge_detect_touched(
     manifest: dict,
     source: DataFrame,
     key: str,
+    krange: tuple,
 ) -> tuple[list[str], list[str]]:
     """Steps 1+2 of the COW merge, shared by the plain and bucketed
-    paths: (1) manifest-bounds file skip (zero file I/O), (2) exact
+    paths: (1) manifest-bounds file skip (zero file I/O; ``krange`` is
+    the source key range from _merge_check_source), (2) exact
     touched-file detection via a one-column semi-join scan of the
     candidates.  Returns (touched, untouched) relpaths."""
     import re
+    from urllib.parse import unquote
 
     all_files = manifest["files"]
-    src_keys = source.select(key)
-
     # 1. metadata file skip on MANIFEST key bounds (recorded at write
     #    time; footer fallback only for legacy manifests)
     bounds = _file_key_bounds(table_dir, all_files, key, manifest)
-    cand = [f for f in all_files if bounds[f] is None]
-    bounded = [(f, *bounds[f]) for f in all_files if bounds[f] is not None]
-    if bounded:
-        key_type = dict(source.dtypes)[key]
-        bdf = spark.createDataFrame(
-            bounded, f"_bfile string, _blo {key_type}, _bhi {key_type}"
-        )
-        hits = (
-            F.broadcast(bdf)
-            .join(
-                src_keys,
-                (F.col(key) >= F.col("_blo")) & (F.col(key) <= F.col("_bhi")),
-                "left_semi",
-            )
-            .select("_bfile")
-            .distinct()
-            .collect()
-        )
-        cand += [r["_bfile"] for r in hits]
+    cand = _merge_candidates(spark, all_files, bounds, source, key, krange)
 
     # 2. exact touched-file detection: key-column scan of candidates
     touched: list[str] = []
@@ -2968,14 +3041,15 @@ def _merge_detect_touched(
             F.col(key), F.col("_metadata.file_path").alias("_fp")
         )
         fps = (
-            scan.join(src_keys, on=key, how="left_semi")
+            scan.join(source.select(key), on=key, how="left_semi")
             .select("_fp")
             .distinct()
             .collect()
         )
         for r in fps:
-            p = os.path.abspath(re.sub(r"^file:/*", "/", r["_fp"]))
-            touched.append(rel_of[p])
+            # _metadata.file_path is a URI: percent-encoded past the scheme
+            p = unquote(re.sub(r"^file:/*", "/", r["_fp"]))
+            touched.append(rel_of[os.path.abspath(p)])
     touched_set = set(touched)
     untouched = [f for f in all_files if f not in touched_set]
     return touched, untouched
@@ -3014,11 +3088,18 @@ def snapshot_merge(
 
       1. FILE SKIP (metadata): per-file key (min, max) read from the
          MANIFEST — recorded once at write time by every committer,
-         exactly Iceberg's manifest lower/upper bounds — joined against
+         exactly Iceberg's manifest lower/upper bounds — tested against
          the source keys; files whose range contains no source key are
          CANDIDATE-pruned with zero file I/O (parquet footers are
          consulted only for legacy manifests that predate recorded
-         bounds).
+         bounds).  The test runs on the driver against the source key
+         range [smin, smax] (a by-product of the duplicate-key check):
+         a file outside it is pruned, a file holding smin or smax is a
+         candidate, and only files strictly inside it go through the
+         per-key bounds semi-join, over a bounds frame built through
+         Arrow (no Python worker task).  Same candidates as joining
+         every file; uuid-keyed files, whose bounds each span nearly
+         the whole key space, never need the join.
       2. TOUCHED-FILE SCAN (exact): one key-column scan of the
          candidates tagged with ``_metadata.file_path``, semi-joined
          to the source keys — Delta's touched-file detection join.
@@ -3043,8 +3124,9 @@ def snapshot_merge(
     Source keys must be unique (the Delta/Iceberg precondition — a
     multiply-matched target row makes MERGE nondeterministic; enforced
     here with a fail-stop count check at |source| grain).  The source
-    is materialized once (localCheckpoint) before its four consumers —
-    the same reason Delta materializes MERGE sources.
+    is materialized once (localCheckpoint) before its consumers (see
+    _merge_check_source) — the same reason Delta materializes MERGE
+    sources.
 
     100 TB: a small key-clustered change batch rewrites O(touched
     files), not O(table) — the whole point of COW file granularity; a
@@ -3052,8 +3134,6 @@ def snapshot_merge(
     the full rewrite (q_merge_upsert's residue batch is exactly that
     worst case, q_merge_pruned the clustered common case).  Returns
     the new version."""
-    import re
-
     versions = snapshot_versions(table_dir)
     if not versions:
         raise FileNotFoundError(f"no committed snapshot under {table_dir}")
@@ -3066,9 +3146,9 @@ def snapshot_merge(
             "layout's co-location), or snapshot_compact to rewrite it"
         )
     all_files = manifest["files"]
-    source = _merge_check_source(source, key)
+    source, krange = _merge_check_source(source, key)
     touched, untouched = _merge_detect_touched(
-        spark, table_dir, manifest, source, key
+        spark, table_dir, manifest, source, key, krange
     )
 
     # 3. rewrite touched files only (MOR deletes materialized for them)
@@ -3331,9 +3411,9 @@ def snapshot_merge_bucketed(
             "files — compact first (snapshot_compact)"
         )
     buckets = spec["buckets"]
-    source = _merge_check_source(source, key)
+    source, krange = _merge_check_source(source, key)
     touched, untouched = _merge_detect_touched(
-        spark, table_dir, manifest, source, key
+        spark, table_dir, manifest, source, key, krange
     )
     new_v = last + 1
     tag = f"m{new_v}_{_table_tag(table_dir)}"

@@ -1850,3 +1850,241 @@ def test_metadata_count_zero_data_reads(spark, tmp_path, monkeypatch):
     )
     got2 = snapshot_metadata_count(spark, tdir).collect()[0]["n_rows"]
     assert got2 == 19
+
+
+@pytest.mark.parametrize("dirname", ["lake with space", "lake%20pct"])
+def test_merge_into_table_dir_needing_url_escaping(spark, tmp_path, dirname):
+    """Touched-file detection maps Spark's ``_metadata.file_path`` (a
+    percent-encoded URI) back to manifest relpaths: a table dir holding
+    a space or a literal '%20' must merge like any other, through both
+    the plain and the bucketed writer."""
+    from data_pipeline_cursor_spark.catalog import (
+        snapshot_commit,
+        snapshot_commit_bucketed,
+        snapshot_merge,
+        snapshot_merge_bucketed,
+        snapshot_read,
+    )
+
+    base = spark.createDataFrame(
+        [(i, f"v{i}") for i in range(12)], "k bigint, v string"
+    )
+    src = spark.createDataFrame(
+        [(3, "U", False), (4, None, True), (50, "new", False)],
+        "k bigint, v string, _delete boolean",
+    )
+    want = {(i, f"v{i}") for i in range(12) if i not in (3, 4)}
+    want |= {(3, "U"), (50, "new")}
+    plain = str(tmp_path / dirname / "plain")
+    snapshot_commit(spark, plain, base.repartition(3))
+    snapshot_merge(spark, plain, src, key="k")
+    bucketed = str(tmp_path / dirname / "bucketed")
+    snapshot_commit_bucketed(spark, bucketed, base, key="k", buckets=4)
+    snapshot_merge_bucketed(spark, bucketed, src, key="k")
+    for tdir in (plain, bucketed):
+        got = {(r["k"], r["v"]) for r in snapshot_read(spark, tdir).collect()}
+        assert got == want, (tdir, got ^ want)
+
+
+def test_merge_bounds_shortcut_matches_brute_force_property(spark, tmp_path):
+    """The merge's driver-side range test (_merge_candidates) must pick
+    exactly the files a per-key bounds check picks: a file with no
+    bounds, or one whose [lo, hi] holds a non-NULL source key.  Random
+    int and ASCII-string keys and bounds over small domains (so partial
+    overlaps are common), bounds that are exact, widened, arbitrary,
+    recorded-statless or left to the legacy footer read, empty,
+    all-NULL and NULL-holding sources.  The touched set must equal the
+    candidates whose data holds a source key, computed on the driver."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from hypothesis import HealthCheck, example, given, settings
+    from hypothesis import strategies as st
+
+    from data_pipeline_cursor_spark.catalog import (
+        _file_key_bounds,
+        _merge_candidates,
+        _merge_check_source,
+        _merge_detect_touched,
+    )
+
+    nulls = spark.createDataFrame([(None,), (None,)], "k bigint")
+    with pytest.raises(ValueError, match="duplicate source keys"):
+        _merge_check_source(nulls, "k")
+
+    domains = {
+        "bigint": st.integers(-12, 12),
+        "string": st.text("abcd", max_size=3),
+    }
+    modes = ("exact", "wide", "arbitrary", "statless", "legacy")
+
+    @st.composite
+    def cases(draw):
+        kind = draw(st.sampled_from(sorted(domains)))
+        val = domains[kind]
+        n = draw(st.integers(1, 5))
+        files = [
+            draw(st.lists(st.one_of(st.none(), val), max_size=5))
+            for _ in range(n)
+        ]
+        fmodes = [draw(st.sampled_from(modes)) for _ in range(n)]
+        extra = [sorted(draw(st.tuples(val, val))) for _ in range(n)]
+        src = draw(st.lists(val, unique=True, max_size=6))
+        return kind, files, fmodes, extra, src, draw(st.booleans())
+
+    counter = [0]
+
+    @settings(
+        max_examples=10, deadline=None, suppress_health_check=list(HealthCheck)
+    )
+    @given(case=cases())
+    # empty source; all-NULL source; files strictly inside the source
+    # range, holding a source key or not, beside end-holding files
+    @example(
+        case=("bigint", [[1, 5], [7]], ["exact", "legacy"], [[0, 0]] * 2,
+              [], False)
+    )
+    @example(
+        case=("string", [["a", "c"], [None]], ["exact", "legacy"],
+              [["", ""]] * 2, [], True)
+    )
+    @example(
+        case=("bigint", [[1, 9], [4, 5], [3], [20]],
+              ["exact", "exact", "legacy", "wide"], [[0, 0]] * 4,
+              [2, 4, 6], True)
+    )
+    @example(
+        case=("string", [["b", "bb"], ["c"], ["a", "d"]],
+              ["exact", "legacy", "statless"], [["", ""]] * 3,
+              ["a", "bb", "d"], False)
+    )
+    def check(case):
+        kind, files, fmodes, extra, src, src_null = case
+        counter[0] += 1
+        tdir = str(tmp_path / f"prop{counter[0]}")
+        os.makedirs(tdir)
+        atype = pa.int64() if kind == "bigint" else pa.string()
+        rels, bounds_rec, want_bounds = [], {}, {}
+        for i, (keys, mode, (r0, r1)) in enumerate(zip(files, fmodes, extra)):
+            rel = f"f{i}.parquet"
+            pq.write_table(
+                pa.table({"k": pa.array(keys, type=atype)}),
+                os.path.join(tdir, rel),
+            )
+            rels.append(rel)
+            present = [k for k in keys if k is not None]
+            real = (min(present), max(present)) if present else None
+            b = {
+                "exact": real,
+                "wide": (min(real[0], r0), max(real[1], r1)) if real else None,
+                "arbitrary": (r0, r1),
+                "statless": None,
+                "legacy": real,  # what the footer fallback reads
+            }[mode]
+            want_bounds[rel] = b
+            if mode != "legacy":
+                bounds_rec[rel] = {} if b is None else {"k": list(b)}
+        manifest = {"files": rels, "file_bounds": bounds_rec}
+        assert _file_key_bounds(tdir, rels, "k", manifest) == want_bounds
+
+        rows = [(k,) for k in src] + ([(None,)] if src_null else [])
+        source, krange = _merge_check_source(
+            spark.createDataFrame(rows, f"k {kind}"), "k"
+        )
+        assert krange == ((min(src), max(src)) if src else (None, None))
+        cand = [
+            f
+            for f in rels
+            if want_bounds[f] is None
+            or any(want_bounds[f][0] <= k <= want_bounds[f][1] for k in src)
+        ]
+        got = _merge_candidates(spark, rels, want_bounds, source, "k", krange)
+        assert got == cand, (case, got, cand)
+
+        data = dict(zip(rels, files))
+        touched_want = {f for f in cand if set(data[f]) & set(src)}
+        touched, untouched = _merge_detect_touched(
+            spark, tdir, manifest, source, "k", krange
+        )
+        assert sorted(touched) == sorted(touched_want), (case, touched)
+        assert untouched == [f for f in rels if f not in touched_want]
+
+    check()
+
+
+def test_merge_runs_no_bounds_join_when_bounds_cover_source_range(
+    spark, tmp_path
+):
+    """uuid-keyed files each span nearly the whole key space, so every
+    file holds the source's smallest key and no bounds join can prune
+    one.  The merge must then launch exactly as many jobs as the same
+    merge on a copy whose manifest bounds were stripped (where no
+    bounds join can run) — and write the same rows."""
+    import glob
+    import json
+    import random
+    import shutil
+    import uuid
+
+    from data_pipeline_cursor_spark.catalog import (
+        _load_manifest,
+        snapshot_commit,
+        snapshot_merge,
+        snapshot_read,
+    )
+
+    rng = random.Random(11)
+
+    def uid() -> str:
+        return uuid.UUID(int=rng.getrandbits(128)).hex
+
+    schema = "event_id string, v string"
+    tdir = str(tmp_path / "uuid_lake")
+    keys: list[str] = []
+    for _ in range(3):
+        batch = [uid() for _ in range(100)]
+        keys += batch
+        snapshot_commit(
+            spark,
+            tdir,
+            spark.createDataFrame(
+                [(k, "a") for k in batch], schema
+            ).coalesce(1),
+        )
+    stripped = str(tmp_path / "uuid_lake_stripped")
+    shutil.copytree(tdir, stripped)
+    for path in glob.glob(os.path.join(stripped, "manifests", "*.json")):
+        with open(path) as fh:
+            entry = json.load(fh)
+        entry["file_bounds"] = {f: {} for f in entry.get("file_bounds", {})}
+        with open(path, "w") as fh:
+            json.dump(entry, fh)
+
+    rows = [(k, "U", False) for k in sorted(keys)[140:145]]
+    rows += [(uid(), "new", False) for _ in range(5)]
+    smin = min(r[0] for r in rows)
+    bounds = _load_manifest(tdir, 3)["file_bounds"]
+    assert len(bounds) == 3
+    assert all(
+        b["event_id"][0] <= smin <= b["event_id"][1] for b in bounds.values()
+    )
+
+    sc = spark.sparkContext
+
+    def merge_jobs(table_dir: str) -> int:
+        source = spark.createDataFrame(rows, schema + ", _delete boolean")
+        group = f"bounds-join-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "merge over uuid-keyed files")
+        try:
+            snapshot_merge(spark, table_dir, source, key="event_id")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    with_bounds, without = merge_jobs(tdir), merge_jobs(stripped)
+    assert with_bounds == without, (with_bounds, without)
+    got = [
+        sorted(tuple(r) for r in snapshot_read(spark, t).collect())
+        for t in (tdir, stripped)
+    ]
+    assert got[0] == got[1]
+    assert len(got[0]) == 305
