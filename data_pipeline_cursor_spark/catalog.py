@@ -17,8 +17,10 @@ Unity — identical statements; only the URI changes.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -808,11 +810,14 @@ def _collect_file_bounds(table_dir: str, rel_files: list[str]) -> dict:
 #     fail-stop above points at.
 #   - snapshot_rollback: restores the TARGET's state, bucket_spec
 #     included.
-# Per-FILE records (seqs/bounds/partition values/delete maps) are never
-# hand-carried by any writer: they live in the immutable per-commit
-# manifests that stay referenced by the snapshot's manifest list, which
-# kills the copied-carry bug class (round-12's file_partitions clobber)
-# structurally.
+# Per-FILE records (seqs/bounds/partition values/delete maps) are stamped
+# in ONE place — _Txn.commit, the commit path all nine writers share —
+# and never hand-carried by any writer: they live in the immutable
+# per-commit manifests that stay referenced by the snapshot's manifest
+# list, which kills the copied-carry bug class (round-12's
+# file_partitions clobber) structurally.  Each writer keeps only its
+# policy: the guards above, its DataFrame write, what it removes, and its
+# table-level markers.
 # ---------------------------------------------------------------------------
 
 
@@ -863,36 +868,12 @@ def snapshot_commit(spark: SparkSession, table_dir: str, df: DataFrame) -> int:
     (snapshot_read), so a key deleted at version D and re-appended at
     version A > D is visible again — Iceberg v2's actual equality-delete
     scoping, not a table-lifetime tombstone."""
-
-    versions = snapshot_versions(table_dir)
-    new_v = (versions[-1] if versions else 0) + 1
-    mlist, pm = _next_manifest_list(table_dir, versions)
-    _reject_bucketed_append(pm, "snapshot_commit")
-    data_dir, rel_dir = _attempt_data_dir(table_dir, "commit", new_v)
-    df.write.mode("overwrite").parquet(data_dir)
-    rel = [
-        os.path.join(rel_dir, f)
-        for f in sorted(os.listdir(data_dir))
-        if f.endswith(".parquet")
-    ]
-    # the delta manifest records ONLY this commit's files — per-file
-    # column bounds read once at write time (Iceberg's manifest stats;
-    # plan-time consumers never reopen footers).  Prior generations'
-    # records (partition values, MOR delete maps) need no carrying:
-    # they live in the earlier immutable entries this list keeps.
-    mlist.append(
-        _write_delta_manifest(
-            table_dir,
-            new_v,
-            {
-                "added_files": rel,
-                "file_seqs": {f: new_v for f in rel},
-                "file_bounds": _collect_file_bounds(table_dir, rel),
-            },
-        )
-    )
-    _publish_snapshot(table_dir, new_v, mlist, _snapshot_extras(pm))
-    return new_v
+    txn = _Txn(table_dir)
+    _reject_bucketed_append(txn.base, "snapshot_commit")
+    # the delta manifest records ONLY this commit's files (with bounds
+    # read once at write time); prior generations' records need no
+    # carrying — they live in the earlier immutable entries
+    return txn.commit(lambda d: df.write.mode("overwrite").parquet(d))
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -965,7 +946,7 @@ def _load_manifest(table_dir: str, version: int) -> dict:
 
     Legacy cumulative manifests (no manifest_list) are returned as-is;
     the first append onto one migrates its state into an immutable base
-    entry (_next_manifest_list), never rewriting published history."""
+    entry (_manifest_list), never rewriting published history."""
     import json
 
     snap = _snapshot_file(table_dir, version)
@@ -1033,31 +1014,22 @@ def _write_delta_manifest(table_dir: str, version: int, delta: dict) -> str:
     return rel
 
 
-def _next_manifest_list(
-    table_dir: str, versions: list[int]
-) -> tuple[list[str], dict | None]:
-    """The manifest list a NEW commit starts from, plus the resolved
-    previous manifest (None on an empty table).  A legacy cumulative
-    manifest is migrated ONCE: its resolved state is materialized as an
-    immutable base entry under manifests/ (the published legacy file is
-    never rewritten, so old-version reads are byte-identical)."""
-    if not versions:
-        return [], None
-    prev_v = versions[-1]
-    snap = _snapshot_file(table_dir, prev_v)
-    pm = _load_manifest(table_dir, prev_v)
+def _manifest_list(table_dir: str, version: int) -> list[str]:
+    """The manifest list of snapshot ``version``, for a new snapshot to
+    carry (a later commit extends its base's list; a rollback re-uses
+    its target's).  A legacy cumulative manifest is migrated ONCE: its
+    state is materialized as an immutable base entry under manifests/
+    (the published legacy file is never rewritten, so old-version reads
+    are byte-identical)."""
+    snap = _snapshot_file(table_dir, version)
     if "manifest_list" in snap:
-        return list(snap["manifest_list"]), pm
-    base = {
-        "added_files": pm["files"],
-        "file_seqs": pm.get("file_seqs", {}),
-        "file_bounds": pm.get("file_bounds", {}),
-        "file_partitions": pm.get("file_partitions", {}),
-        "added_delete_files": pm.get("delete_files", []),
-        "delete_seqs": pm.get("delete_seqs", {}),
-        "delete_parts": pm.get("delete_parts", {}),
-    }
-    return [_write_delta_manifest(table_dir, prev_v, base)], pm
+        return list(snap["manifest_list"])
+    # a legacy snapshot file IS its resolved manifest (_load_manifest)
+    maps = "file_seqs file_bounds file_partitions delete_seqs delete_parts"
+    base = {k: snap.get(k, {}) for k in maps.split()}
+    base["added_files"] = snap["files"]
+    base["added_delete_files"] = snap.get("delete_files", [])
+    return [_write_delta_manifest(table_dir, version, base)]
 
 
 def _publish_snapshot(
@@ -1107,6 +1079,124 @@ def snapshot_versions(table_dir: str) -> list[int]:
             except ValueError:
                 continue
     return sorted(out)
+
+
+def _committed_version(table_dir: str, version: int | None) -> int:
+    """``version`` (None = latest) checked against the committed line:
+    FileNotFoundError when the table has no snapshot, ValueError when the
+    version was never committed — the one check readers and writers share."""
+    versions = snapshot_versions(table_dir)
+    if not versions:
+        raise FileNotFoundError(f"no committed snapshot under {table_dir}")
+    v = versions[-1] if version is None else version
+    if v not in versions:
+        raise ValueError(f"version {v} not committed (have {versions})")
+    return v
+
+
+def _resolve_version(table_dir: str, version: int | None) -> tuple[int, dict]:
+    """The version resolver: (version, resolved manifest) of a committed
+    snapshot, None = latest; raises as _committed_version does."""
+    v = _committed_version(table_dir, version)
+    return v, _load_manifest(table_dir, v)
+
+
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"  # Spark's dir for a NULL value
+
+
+class _Txn:
+    """One table transaction — the ONE commit path of every catalog
+    writer (Iceberg v2's single commit protocol: one manifest list, one
+    atomic pointer swap).  Construction resolves the base version; the
+    writer applies its own policy against ``base`` (its guards, what it
+    removes, its table-level markers) and calls commit(), which owns
+    every shared step in order: the per-attempt data dir, the listing
+    of the written files, their sequence numbers and write-time bounds,
+    the delta manifest, and the first-writer-wins publish."""
+
+    def __init__(self, table_dir: str, need_base: bool = False):
+        # both list via snapshot_versions, which a race test patches
+        if need_base:
+            self.last = _committed_version(table_dir, None)
+        else:
+            self.last = max(snapshot_versions(table_dir), default=None)
+        self.table_dir = table_dir
+        self.version = (self.last or 0) + 1
+
+    @functools.cached_property
+    def base(self) -> dict | None:
+        """The resolved base manifest (None on an empty table), loaded
+        only by writers that consult it."""
+        if self.last is None:
+            return None
+        return _load_manifest(self.table_dir, self.last)
+
+    def commit(
+        self,
+        write: Callable[[str], None] | None = None,
+        *,
+        kind: str = "commit",
+        part_col: str | None = None,
+        part_record: Callable[[str, str | None], object] | None = None,
+        files: list[str] | None = None,
+        bounds: dict | None = None,
+        delta: dict | None = None,
+        mlist: list[str] | None = None,
+        extras: dict | None = None,
+    ) -> int:
+        """Publish the next version and return it.
+
+        ``write(dir)`` writes the commit's parquet into a fresh
+        per-attempt dir (kind "deletes" records them as equality-delete
+        files); ``files``/``bounds`` instead add files written earlier.
+        Partitioned writes list one level of ``part_col=value`` dirs, and
+        ``part_record(dir, value)`` gives each partition's per-file record
+        (value None for Spark's NULL dir; raising fail-stops the commit).
+        ``delta`` adds the writer's removals; ``mlist`` replaces the
+        base's manifest list (a compaction's fresh one, a rollback
+        target's); ``extras`` are the table-level markers (None = carry
+        the base's delete key and bucket spec)."""
+        td, v = self.table_dir, self.version
+        if mlist is None:
+            mlist = [] if self.last is None else _manifest_list(td, self.last)
+        parts: dict = {}
+        if write is not None:
+            data_dir, rel_dir = _attempt_data_dir(td, kind, v)
+            write(data_dir)
+            files = []
+            for pdir in sorted(os.listdir(data_dir)) if part_col else [""]:
+                if part_col and not pdir.startswith(f"{part_col}="):
+                    continue
+                added = [
+                    os.path.join(rel_dir, pdir, f)
+                    for f in sorted(os.listdir(os.path.join(data_dir, pdir)))
+                    if f.endswith(".parquet")
+                ]
+                files += added
+                if part_col:
+                    value = _parse_part_dir(pdir)[1]
+                    value = None if value == _NULL_PARTITION else value
+                    parts.update(dict.fromkeys(added, part_record(pdir, value)))
+        if files is not None:
+            seqs = {f: v for f in files}
+            if kind == "deletes":
+                entry = {
+                    "added_delete_files": files,
+                    "delete_seqs": seqs,
+                    "delete_parts": parts,
+                }
+            else:
+                entry = {"added_files": files, "file_seqs": seqs}
+                if part_col:
+                    entry["file_partitions"] = parts
+            if bounds is None:
+                bounds = _collect_file_bounds(td, files)
+            entry["file_bounds"] = bounds
+            mlist.append(_write_delta_manifest(td, v, {**entry, **(delta or {})}))
+        if extras is None:
+            extras = _snapshot_extras(self.base)
+        _publish_snapshot(td, v, mlist, extras)
+        return v
 
 
 def _parse_part_dir(s: str) -> tuple[str, str]:
@@ -1215,9 +1305,12 @@ def _read_files_with_deletes(
                 # the cast would yield NULL, the (key, pcol) anti-join
                 # never matches NULL, and that partition's deletes would
                 # be SILENTLY dropped — rows resurrecting is worse than
-                # an explicit error (r12 advisor, low)
-                if ptype != "string":
-                    vals = [_parse_part_dir(p)[1] for p in by_part]
+                # an explicit error (r12 advisor, low).  A string column
+                # casts any dir name, so its NULL dir is caught by name
+                vals = [_parse_part_dir(p)[1] for p in by_part]
+                if ptype == "string":
+                    bad = [v for v in vals if v == _NULL_PARTITION]
+                else:
                     bad = [
                         v
                         for (v, c) in zip(
@@ -1230,15 +1323,15 @@ def _read_files_with_deletes(
                         )
                         if c[0] is None
                     ]
-                    if bad:
-                        raise ValueError(
-                            f"partition-scoped delete replay: recorded "
-                            f"partition value(s) {bad!r} do not cast to "
-                            f"{pcol}:{ptype} — the scoped delete cannot "
-                            "be applied soundly (null/malformed "
-                            "partition); compact the table to "
-                            "materialize deletes"
-                        )
+                if bad:
+                    raise ValueError(
+                        f"partition-scoped delete replay: recorded "
+                        f"partition value(s) {bad!r} do not cast to "
+                        f"{pcol}:{ptype} — the scoped delete cannot "
+                        "be applied soundly (null/malformed "
+                        "partition); compact the table to "
+                        "materialize deletes"
+                    )
                 scoped_keys = reduce(
                     DataFrame.unionByName,
                     [
@@ -1286,14 +1379,7 @@ def snapshot_read(
     ONLY delete files published for that partition — or unscoped
     table-wide ones — are loaded (Iceberg's partition-scoped delete
     manifests)."""
-
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshot under {table_dir}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not committed (have {versions})")
-    manifest = _load_manifest(table_dir, v)
+    _, manifest = _resolve_version(table_dir, version)
     return _read_files_with_deletes(
         spark, table_dir, manifest["files"], manifest, partition
     )
@@ -1443,18 +1529,14 @@ def snapshot_changes(
     that checkpoints its last-seen version re-reads O(new data), not
     O(table); the file-list diff is O(files) driver-side metadata, the
     same cost profile as Iceberg's ``incremental append scan``."""
-
-    versions = snapshot_versions(table_dir)
-    for v in (from_version, to_version):
-        if v not in versions:
-            raise ValueError(f"version {v} not committed (have {versions})")
+    from_version, base = _resolve_version(table_dir, from_version)
+    to_version, target = _resolve_version(table_dir, to_version)
     if from_version >= to_version:
         raise ValueError(
             f"from_version {from_version} must precede to_version {to_version}"
         )
-    base = set(_load_manifest(table_dir, from_version)["files"])
-    target = _load_manifest(table_dir, to_version)["files"]
-    delta = [f for f in target if f not in base]
+    seen = set(base["files"])
+    delta = [f for f in target["files"] if f not in seen]
     if not delta:
         return snapshot_read(spark, table_dir, to_version).limit(0)
     return spark.read.parquet(*[os.path.join(table_dir, f) for f in delta])
@@ -1676,14 +1758,7 @@ def snapshot_files_metadata(
 
     100 TB: O(files) driver-side manifest metadata, the same cost
     Iceberg pays to serve its metadata tables."""
-
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshot under {table_dir}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not committed (have {versions})")
-    manifest = _load_manifest(table_dir, v)
+    _, manifest = _resolve_version(table_dir, version)
     recorded = manifest.get("file_bounds", {})
     fseqs = manifest.get("file_seqs", {})
     rows = []
@@ -1753,14 +1828,7 @@ def snapshot_delete_files_metadata(
     audit surface for MOR debt ("how many tombstones is every read
     paying for, and when should compaction materialize them").  Served
     from the manifest; legacy entries fall back to one footer read."""
-
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshot under {table_dir}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not committed (have {versions})")
-    manifest = _load_manifest(table_dir, v)
+    _, manifest = _resolve_version(table_dir, version)
     recorded = manifest.get("file_bounds", {})
     dseqs = manifest.get("delete_seqs", {})
     dparts = manifest.get("delete_parts", {})
@@ -1891,13 +1959,7 @@ def snapshot_metadata_count(
       - a file with no recorded count (legacy manifest or zero-stats
         part file) is counted by ONE footer read of just that file.
     Returns a one-row DataFrame so the result composes as a relation."""
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshot under {table_dir}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not committed (have {versions})")
-    manifest = _load_manifest(table_dir, v)
+    v, manifest = _resolve_version(table_dir, version)
     if manifest.get("delete_files"):
         total = snapshot_read(spark, table_dir, v).count()
     else:
@@ -2027,12 +2089,9 @@ def snapshot_partitions_metadata(
     honestly.  Unpartitioned files roll up under a NULL transform.
     Served from ``file_partitions`` + write-time row counts, zero data
     I/O: the surface an operator sizes partitions from before choosing
-    a regrain or compaction schedule."""
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshot under {table_dir}")
-    v = versions[-1] if version is None else version
-    manifest = _load_manifest(table_dir, v)
+    a regrain or compaction schedule.  Files of a NULL partition value
+    report a NULL ``part_value``."""
+    _, manifest = _resolve_version(table_dir, version)
     bounds = manifest.get("file_bounds", {})
     fparts = manifest.get("file_partitions", {})
     agg: dict[tuple, list[int]] = {}
@@ -2118,56 +2177,34 @@ def snapshot_compact(
     snapshot's files; production drives it per-partition behind a
     small-file threshold, and readers never block (the swap is one
     atomic manifest publish)."""
-    import glob
-
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshot under {table_dir}")
-    last = versions[-1]
-    manifest = _load_manifest(table_dir, last)
-    if manifest.get("compacted"):
-        return last
-    files = [os.path.join(table_dir, f) for f in manifest["files"]]
+    txn = _Txn(table_dir, need_base=True)
+    if txn.base.get("compacted"):
+        return txn.last
+    files = [os.path.join(table_dir, f) for f in txn.base["files"]]
     # read through snapshot_read so merge-on-read deletes are APPLIED and
     # therefore materialized by the rewrite (Iceberg's rewrite_data_files
     # converts delete-file tables back to pure data files); the new
     # manifest carries no delete_files
-    df = snapshot_read(spark, table_dir, last)
+    df = snapshot_read(spark, table_dir, txn.last)
     n_bytes = sum(os.path.getsize(p) for p in files)
     # ceil to 32 MB files; min_files lets a sort compaction keep enough
     # range-disjoint files for downstream skipping at fixture scale
     target = max(min_files, -(-n_bytes // (32 * 1024 * 1024)))
-    new_v = last + 1
-    data_dir, rel_dir = _attempt_data_dir(table_dir, "commit", new_v)
     if sort_by is not None:
         out = df.repartitionByRange(target, F.col(sort_by)).sortWithinPartitions(
             sort_by
         )
     else:
         out = df.coalesce(target)
-    out.write.mode("overwrite").parquet(data_dir)
-    rel = [
-        os.path.join(rel_dir, f)
-        for f in sorted(os.listdir(data_dir))
-        if f.endswith(".parquet")
-    ]
     # a FRESH one-entry manifest list: the rewrite replaces every prior
     # generation (deletes materialized, layout consumed), and rollback /
     # time travel to pre-compaction versions still resolve their own
     # untouched snapshot files
-    mlist = [
-        _write_delta_manifest(
-            table_dir,
-            new_v,
-            {
-                "added_files": rel,
-                "file_seqs": {f: new_v for f in rel},
-                "file_bounds": _collect_file_bounds(table_dir, rel),
-            },
-        )
-    ]
-    _publish_snapshot(table_dir, new_v, mlist, {"compacted": True})
-    return new_v
+    return txn.commit(
+        lambda d: out.write.mode("overwrite").parquet(d),
+        mlist=[],
+        extras={"compacted": True},
+    )
 
 
 @register(
@@ -2390,44 +2427,18 @@ def snapshot_rollback(
     content.  Metadata-only: no data file is read, copied, or moved —
     O(files) driver-side, which is why a production rollback is instant
     at any table size."""
-
-    versions = snapshot_versions(table_dir)
-    if to_version not in versions:
-        raise ValueError(
-            f"version {to_version} not committed (have {versions})"
-        )
-    last = versions[-1]
-    target_snap = _snapshot_file(table_dir, to_version)
-    target = _load_manifest(table_dir, to_version)
-    new_v = last + 1
-    if "manifest_list" in target_snap:
-        # pure pointer copy: the restored snapshot re-references the
-        # target's immutable per-commit manifests — O(commits) metadata
-        # regardless of file count
-        mlist = list(target_snap["manifest_list"])
-    else:
-        # legacy cumulative target: materialize once, never rewrite it
-        mlist = [
-            _write_delta_manifest(
-                table_dir,
-                to_version,
-                {
-                    "added_files": target["files"],
-                    "file_seqs": target.get("file_seqs", {}),
-                    "file_bounds": target.get("file_bounds", {}),
-                    "file_partitions": target.get("file_partitions", {}),
-                    "added_delete_files": target.get("delete_files", []),
-                    "delete_seqs": target.get("delete_seqs", {}),
-                    "delete_parts": target.get("delete_parts", {}),
-                },
-            )
-        ]
-    extras = _snapshot_extras(target)
-    extras.update(
-        {"rolled_back_from": last, "rolled_back_to": to_version}
-    )
-    _publish_snapshot(table_dir, new_v, mlist, extras)
-    return new_v
+    to_version, target = _resolve_version(table_dir, to_version)
+    txn = _Txn(table_dir)
+    extras = {
+        **_snapshot_extras(target),
+        "rolled_back_from": txn.last,
+        "rolled_back_to": to_version,
+    }
+    # pure pointer copy: the restored snapshot re-references the
+    # target's immutable per-commit manifests — O(commits) metadata
+    # regardless of file count (a legacy cumulative target is
+    # materialized once, never rewritten)
+    return txn.commit(mlist=_manifest_list(table_dir, to_version), extras=extras)
 
 
 ORPHAN_LIST_THREADS = 16  # listing/unlink pool width for maintenance verbs
@@ -2586,29 +2597,14 @@ def snapshot_publish(table_dir: str, name: str) -> int:
     spath = os.path.join(table_dir, f"staged-{name}.json")
     with open(spath) as fh:
         staged = json.load(fh)
-    versions = snapshot_versions(table_dir)
-    new_v = (versions[-1] if versions else 0) + 1
-    mlist, pm = _next_manifest_list(table_dir, versions)
-    _reject_bucketed_append(pm, "snapshot_publish")
-    mlist.append(
-        _write_delta_manifest(
-            table_dir,
-            new_v,
-            {
-                "added_files": staged["files"],
-                "file_seqs": {f: new_v for f in staged["files"]},
-                # bounds were computed at snapshot_stage write time;
-                # legacy staged manifests get one footer pass at publish
-                "file_bounds": staged.get("file_bounds")
-                or _collect_file_bounds(table_dir, staged["files"]),
-            },
-        )
-    )
-    _publish_snapshot(
-        table_dir,
-        new_v,
-        mlist,
-        {"published_stage": name, **_snapshot_extras(pm)},
+    txn = _Txn(table_dir)
+    _reject_bucketed_append(txn.base, "snapshot_publish")
+    new_v = txn.commit(
+        files=staged["files"],
+        # bounds were computed at snapshot_stage write time; legacy
+        # staged manifests get one footer pass at publish
+        bounds=staged.get("file_bounds"),
+        extras={"published_stage": name, **_snapshot_extras(txn.base)},
     )
     os.remove(spath)
     return new_v
@@ -2674,12 +2670,7 @@ def create_ref(
     if kind not in ("branch", "tag"):
         raise ValueError(f"ref kind must be branch|tag, got {kind!r}")
     _check_ident(name)
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshot under {table_dir}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not committed (have {versions})")
+    v = _committed_version(table_dir, version)
     refs = snapshot_refs(table_dir)
     if name in refs:
         raise ValueError(f"ref {name!r} already exists ({refs[name]})")
@@ -2699,10 +2690,7 @@ def retarget_ref(table_dir: str, name: str, version: int) -> int:
         raise KeyError(f"unknown ref {name!r}")
     if refs[name]["kind"] == "tag":
         raise ValueError(f"ref {name!r} is a tag — tags are immutable")
-    versions = snapshot_versions(table_dir)
-    if version not in versions:
-        raise ValueError(f"version {version} not committed (have {versions})")
-    refs[name]["version"] = version
+    refs[name]["version"] = version = _committed_version(table_dir, version)
     _write_refs(table_dir, refs)
     return version
 
@@ -2776,11 +2764,14 @@ def snapshot_commit_partitioned(
 ) -> int:
     """Append ``df`` as the next commit, laid out by ``transform(ts_col)``
     (hour | day) — data files land under
-    data/commit-<N>/_part=<value>/, and the manifest records EACH FILE's
-    transform + partition value (``file_partitions``), which is exactly
-    the spec-id + partition tuple an Iceberg manifest entry carries.
-    Different commits may use different transforms; readers prune each
-    file by its own recorded grain (snapshot_read_time_range).
+    data/commit-<N>-<attempt-token>/_part=<value>/, and the manifest
+    records EACH FILE's transform + partition value (``file_partitions``),
+    which is exactly the spec-id + partition tuple an Iceberg manifest
+    entry carries.  A NULL ``ts_col`` lands in Spark's default-partition
+    dir and is recorded with value None (JSON null): time-range reads
+    always scan it and the residual predicate drops its rows.  Different
+    commits may use different transforms; readers prune each file by its
+    own recorded grain (snapshot_read_time_range).
 
     The input is repartitioned on the derived partition value before the
     write (PLANS.md rewrite 3) so T tasks x P partitions cannot open
@@ -2793,46 +2784,22 @@ def snapshot_commit_partitioned(
             f"(have {sorted(PARTITION_TRANSFORMS)})"
         )
     fmt_spark = spec[0]
-    versions = snapshot_versions(table_dir)
-    new_v = (versions[-1] if versions else 0) + 1
-    mlist, pm = _next_manifest_list(table_dir, versions)
-    _reject_bucketed_append(pm, "snapshot_commit_partitioned")
-    data_dir, rel_dir = _attempt_data_dir(table_dir, "commit", new_v)
+    txn = _Txn(table_dir)
+    _reject_bucketed_append(txn.base, "snapshot_commit_partitioned")
     part = F.date_format(F.col(ts_col), fmt_spark).alias("_part")
-    (
-        df.withColumn("_part", part)
-        .repartition(F.col("_part"))
-        .write.mode("overwrite")
-        .partitionBy("_part")
-        .parquet(data_dir)
+    return txn.commit(
+        lambda d: (
+            df.withColumn("_part", part)
+            .repartition(F.col("_part"))
+            .write.mode("overwrite")
+            .partitionBy("_part")
+            .parquet(d)
+        ),
+        part_col="_part",
+        # each file's transform + partition value — Iceberg's spec-id +
+        # partition tuple, scoped to THIS commit
+        part_record=lambda _dir, value: {"transform": transform, "value": value},
     )
-    rel: list[str] = []
-    fparts: dict[str, dict] = {}
-    for pdir in sorted(os.listdir(data_dir)):
-        if not pdir.startswith("_part="):
-            continue
-        _, pval = _parse_part_dir(pdir)
-        for f in sorted(os.listdir(os.path.join(data_dir, pdir))):
-            if f.endswith(".parquet"):
-                r = os.path.join(rel_dir, pdir, f)
-                rel.append(r)
-                fparts[r] = {"transform": transform, "value": pval}
-    mlist.append(
-        _write_delta_manifest(
-            table_dir,
-            new_v,
-            {
-                "added_files": rel,
-                "file_seqs": {f: new_v for f in rel},
-                "file_bounds": _collect_file_bounds(table_dir, rel),
-                # each file's transform + partition value — Iceberg's
-                # spec-id + partition tuple, scoped to THIS commit
-                "file_partitions": fparts,
-            },
-        )
-    )
-    _publish_snapshot(table_dir, new_v, mlist, _snapshot_extras(pm))
-    return new_v
 
 
 def _time_range_files(
@@ -2843,16 +2810,16 @@ def _time_range_files(
     its OWN grain's interval intersects the range — the hour-generation
     files prune at hour grain, the day-generation files at day grain,
     in one pass, exactly Iceberg's per-spec partition pruning.  Files
-    with no recorded partition (unpartitioned generations) cannot be
-    pruned and are always kept.  Returns (kept, pruned) relpaths —
-    pure driver-side metadata, no file I/O."""
+    with no recorded partition (unpartitioned generations) or a NULL
+    partition value cannot be pruned and are always kept.  Returns
+    (kept, pruned) relpaths — pure driver-side metadata, no file I/O."""
     from datetime import datetime, timedelta
 
     fparts = manifest.get("file_partitions", {})
     kept, pruned = [], []
     for f in manifest["files"]:
         rec = fparts.get(f)
-        if rec is None:
+        if rec is None or rec["value"] is None:
             kept.append(f)
             continue
         _, fmt_py, secs = PARTITION_TRANSFORMS[rec["transform"]]
@@ -2885,11 +2852,7 @@ def snapshot_read_time_range(
     (the two failure modes of hand-rolled layout migrations)."""
     from datetime import datetime
 
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshot under {table_dir}")
-    v = versions[-1] if version is None else version
-    manifest = _load_manifest(table_dir, v)
+    _, manifest = _resolve_version(table_dir, version)
     lo_dt = datetime.strptime(lo, "%Y-%m-%d %H:%M:%S")
     hi_dt = datetime.strptime(hi, "%Y-%m-%d %H:%M:%S")
     kept, _ = _time_range_files(manifest, lo_dt, hi_dt)
@@ -3134,11 +3097,8 @@ def snapshot_merge(
     the full rewrite (q_merge_upsert's residue batch is exactly that
     worst case, q_merge_pruned the clustered common case).  Returns
     the new version."""
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshot under {table_dir}")
-    last = versions[-1]
-    mlist, manifest = _next_manifest_list(table_dir, versions)
+    txn = _Txn(table_dir, need_base=True)
+    manifest = txn.base
     if manifest.get("bucket_spec"):
         raise ValueError(
             "snapshot_merge: table is bucketed — use "
@@ -3161,34 +3121,23 @@ def snapshot_merge(
             spark, table_dir, all_files, manifest
         ).limit(0)
     merged = _merge_clause_resolve(target, source, key)
-    new_v = last + 1
-    data_dir, rel_dir = _attempt_data_dir(table_dir, "commit", new_v)
-    merged.write.mode("overwrite").parquet(data_dir)
-    rel = [
-        os.path.join(rel_dir, f)
-        for f in sorted(os.listdir(data_dir))
-        if f.endswith(".parquet")
-    ]
     # the delta manifest REMOVES the touched files (their records fall
     # out of resolution; untouched files keep seq/bounds/partition from
     # their own commits' entries) and adds the rewrite.  Delete files
     # survive only while an untouched file still needs their sequence
     # scoping — an empty untouched set means the rewrite materialized
     # every delete, so they are removed too.
-    delta = {
-        "added_files": rel,
-        "file_seqs": {f: new_v for f in rel},
-        "file_bounds": _collect_file_bounds(table_dir, rel),
-        "removed_files": sorted(touched),
-    }
+    delta = {"removed_files": sorted(touched)}
     if not untouched and manifest.get("delete_files"):
         delta["removed_delete_files"] = manifest["delete_files"]
-    mlist.append(_write_delta_manifest(table_dir, new_v, delta))
     extras = {"merged": True}
     if untouched and manifest.get("delete_files"):
         extras["delete_key"] = manifest["delete_key"]
-    _publish_snapshot(table_dir, new_v, mlist, extras)
-    return new_v
+    return txn.commit(
+        lambda d: merged.write.mode("overwrite").parquet(d),
+        delta=delta,
+        extras=extras,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3316,11 +3265,9 @@ def snapshot_commit_bucketed(
     reads through snapshot_read are plain parquet scans (bucket files
     are ordinary parquet).  The spec is fixed at first use — mixed
     specs across commits would break co-location and fail-stop."""
-
-    versions = snapshot_versions(table_dir)
-    new_v = (versions[-1] if versions else 0) + 1
+    txn = _Txn(table_dir)
     spec = {"key": key, "buckets": buckets, "schema": _schema_ddl(df)}
-    mlist, pm = _next_manifest_list(table_dir, versions)
+    pm = txn.base
     if pm is not None:
         prev_spec = pm.get("bucket_spec")
         if prev_spec and (
@@ -3346,28 +3293,11 @@ def snapshot_commit_bucketed(
                 "delete files — compact first (snapshot_compact)"
             )
         spec = prev_spec or spec
-    data_dir, rel_dir = _attempt_data_dir(table_dir, "commit", new_v)
-    _write_bucketed_files(
-        spark, df, key, buckets, data_dir, f"c{new_v}_{_table_tag(table_dir)}"
+    tag = f"c{txn.version}_{_table_tag(table_dir)}"
+    return txn.commit(
+        lambda d: _write_bucketed_files(spark, df, key, buckets, d, tag),
+        extras={"bucket_spec": spec},
     )
-    rel = [
-        os.path.join(rel_dir, f)
-        for f in sorted(os.listdir(data_dir))
-        if f.endswith(".parquet")
-    ]
-    mlist.append(
-        _write_delta_manifest(
-            table_dir,
-            new_v,
-            {
-                "added_files": rel,
-                "file_seqs": {f: new_v for f in rel},
-                "file_bounds": _collect_file_bounds(table_dir, rel),
-            },
-        )
-    )
-    _publish_snapshot(table_dir, new_v, mlist, {"bucket_spec": spec})
-    return new_v
 
 
 def snapshot_merge_bucketed(
@@ -3394,11 +3324,8 @@ def snapshot_merge_bucketed(
     rows at all; the rewrite is O(touched buckets)."""
 
     global LAST_BUCKETED_MERGE_PLAN
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshot under {table_dir}")
-    last = versions[-1]
-    mlist, manifest = _next_manifest_list(table_dir, versions)
+    txn = _Txn(table_dir, need_base=True)
+    manifest = txn.base
     spec = manifest.get("bucket_spec")
     if not spec or spec["key"] != key:
         raise ValueError(
@@ -3415,8 +3342,7 @@ def snapshot_merge_bucketed(
     touched, untouched = _merge_detect_touched(
         spark, table_dir, manifest, source, key, krange
     )
-    new_v = last + 1
-    tag = f"m{new_v}_{_table_tag(table_dir)}"
+    tag = f"m{txn.version}_{_table_tag(table_dir)}"
 
     # target side: touched bucket files as a bucketed table (empty
     # touched set -> empty view over zero symlinks, same schema)
@@ -3446,38 +3372,19 @@ def snapshot_merge_bucketed(
         LAST_BUCKETED_MERGE_PLAN = (
             merged._jdf.queryExecution().executedPlan().toString()
         )
-        data_dir, rel_dir = _attempt_data_dir(table_dir, "commit", new_v)
-        _write_bucketed_files(
-            spark, merged, key, buckets, data_dir, f"o{tag}",
-            pre_shuffle=False,  # SMJ output is already bucket-distributed
+        return txn.commit(
+            lambda d: _write_bucketed_files(
+                spark, merged, key, buckets, d, f"o{tag}",
+                pre_shuffle=False,  # SMJ output is already bucket-distributed
+            ),
+            delta={"removed_files": sorted(touched)},
+            extras={"bucket_spec": spec, "merged": True},
         )
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tgt_tbl}")
         spark.sql(f"DROP TABLE IF EXISTS {src_tbl}")
         shutil.rmtree(link_dir, ignore_errors=True)
         shutil.rmtree(stage_dir, ignore_errors=True)
-
-    rel = [
-        os.path.join(rel_dir, f)
-        for f in sorted(os.listdir(data_dir))
-        if f.endswith(".parquet")
-    ]
-    mlist.append(
-        _write_delta_manifest(
-            table_dir,
-            new_v,
-            {
-                "added_files": rel,
-                "file_seqs": {f: new_v for f in rel},
-                "file_bounds": _collect_file_bounds(table_dir, rel),
-                "removed_files": sorted(touched),
-            },
-        )
-    )
-    _publish_snapshot(
-        table_dir, new_v, mlist, {"bucket_spec": spec, "merged": True}
-    )
-    return new_v
 
 
 def snapshot_read_bucketed(
@@ -3494,14 +3401,7 @@ def snapshot_read_bucketed(
     The view is registered per (table, version) and reused; it pins the
     version's exact file list (symlink scan — manifest-scoped), so
     later commits cannot leak in."""
-
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshot under {table_dir}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not committed (have {versions})")
-    manifest = _load_manifest(table_dir, v)
+    v, manifest = _resolve_version(table_dir, version)
     spec = manifest.get("bucket_spec")
     if not spec:
         raise ValueError(
@@ -4550,64 +4450,44 @@ def snapshot_delete_keys(
     100 TB: publishing is O(keys); every read pays one broadcast
     anti-join until compaction — the exact trade Iceberg documents, and
     why MOR tables schedule regular rewrites."""
-
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no committed snapshot under {table_dir}")
-    last = versions[-1]
-    mlist, manifest = _next_manifest_list(table_dir, versions)
-    prev_key = manifest.get("delete_key")
+    txn = _Txn(table_dir, need_base=True)
+    prev_key = txn.base.get("delete_key")
     if prev_key is not None and prev_key != key:
         raise ValueError(
             f"delete key mismatch: table uses {prev_key!r}, got {key!r}"
         )
-    new_v = last + 1
-    ddir, rel_dir = _attempt_data_dir(table_dir, "deletes", new_v)
-    rel: list[str] = []
-    parts: dict[str, str] = {}
-    if partition_col is None:
-        keys.select(key).write.mode("overwrite").parquet(ddir)
-        rel = [
-            os.path.join(rel_dir, f)
-            for f in sorted(os.listdir(ddir))
-            if f.endswith(".parquet")
-        ]
-    else:
-        keys.select(key, partition_col).write.mode("overwrite").partitionBy(
-            partition_col
-        ).parquet(ddir)
-        for pdir in sorted(os.listdir(ddir)):
-            if not pdir.startswith(f"{partition_col}="):
-                continue
-            for f in sorted(os.listdir(os.path.join(ddir, pdir))):
-                if f.endswith(".parquet"):
-                    r = os.path.join(rel_dir, pdir, f)
-                    rel.append(r)
-                    parts[r] = pdir
+    cols = [key] if partition_col is None else [key, partition_col]
+    writer = keys.select(*cols).write
+    if partition_col is not None:
+        writer = writer.partitionBy(partition_col)
+
+    def scope(pdir: str, value: str | None) -> str:
+        # a NULL value lands in Spark's default-partition dir, which the
+        # replay would anti-join as a literal string, deleting nothing:
+        # fail-stop before publishing (the attempt's files are orphans)
+        if value is None:
+            raise ValueError(
+                f"snapshot_delete_keys: NULL {partition_col!r} in a "
+                "partition-scoped delete cannot be replayed — delete those "
+                "keys without partition_col"
+            )
+        return pdir
+
     # the delta records ONLY this commit's delete files; prior delete
     # commits keep their own entries.  Delete FILES get write-time
     # stats too (Iceberg's delete-file manifest entries carry
     # record_count/bounds like data files) — the delete-files metadata
     # table serves from these, zero read I/O.
-    mlist.append(
-        _write_delta_manifest(
-            table_dir,
-            new_v,
-            {
-                "added_delete_files": rel,
-                "delete_seqs": {r: new_v for r in rel},
-                "delete_parts": parts,
-                "file_bounds": _collect_file_bounds(table_dir, rel),
-            },
-        )
-    )
     # bucket_spec carries: delete files are pure metadata beside the
     # (still bucketed) data files, and both bucketed read paths
     # fail-stop until snapshot_compact materializes deletes
-    extras = _snapshot_extras(manifest)
-    extras["delete_key"] = key
-    _publish_snapshot(table_dir, new_v, mlist, extras)
-    return new_v
+    return txn.commit(
+        writer.mode("overwrite").parquet,
+        kind="deletes",
+        part_col=partition_col,
+        part_record=scope,
+        extras={**_snapshot_extras(txn.base), "delete_key": key},
+    )
 
 
 @register(

@@ -1753,6 +1753,77 @@ def test_manifest_list_bounds_per_commit_metadata(spark, tmp_path):
     )
     assert {r["k"] for r in snapshot_read(spark, tdir).collect()} == before
 
+    # on-disk format pin: the exact keys each of the nine writers puts in
+    # its per-commit manifest and in its snapshot file
+    import json
+
+    from pyspark.sql import functions as F
+
+    from data_pipeline_cursor_spark.catalog import (
+        snapshot_commit_bucketed,
+        snapshot_commit_partitioned,
+        snapshot_delete_keys,
+        snapshot_merge,
+        snapshot_merge_bucketed,
+        snapshot_publish,
+        snapshot_rollback,
+        snapshot_stage,
+        snapshot_versions,
+    )
+
+    def frame(ks, tag):
+        return spark.createDataFrame(
+            [(k, f"{tag}{k}", f"2024-01-01 0{k % 3}:00:00") for k in ks],
+            "k bigint, v string, ts string",
+        ).withColumn("ts", F.col("ts").cast("timestamp"))
+
+    def upsert(ks):
+        return frame(ks, "u").withColumn("_delete", F.lit(False))
+
+    data = ["added_files", "file_seqs", "file_bounds"]
+    deletes = ["added_delete_files", "delete_seqs", "delete_parts"]
+    snap = ["version", "manifest_list"]
+    fmt, fmtb = str(tmp_path / "fmt"), str(tmp_path / "fmtb")
+    writers = [
+        (fmt, lambda: snapshot_commit(spark, fmt, frame(range(4), "c")),
+         data, snap),
+        (fmt, lambda: snapshot_commit_partitioned(
+            spark, fmt, frame(range(10, 14), "p"), "hour"),
+         data + ["file_partitions"], snap),
+        (fmt, lambda: snapshot_delete_keys(
+            spark, fmt, spark.createDataFrame([(11,)], "k bigint"), key="k"),
+         deletes + ["file_bounds"], snap + ["delete_key"]),
+        (fmt, lambda: snapshot_merge(spark, fmt, upsert([1]), key="k"),
+         data + ["removed_files"], snap + ["delete_key", "merged"]),
+        (fmt, lambda: snapshot_publish(
+            fmt, snapshot_stage(spark, fmt, frame([20], "s"), "s1")),
+         data, snap + ["delete_key", "published_stage"]),
+        (fmt, lambda: snapshot_rollback(spark, fmt, 3),
+         None, snap + ["delete_key", "rolled_back_from", "rolled_back_to"]),
+        (fmt, lambda: snapshot_compact(spark, fmt),
+         data, snap + ["compacted"]),
+        (fmtb, lambda: snapshot_commit_bucketed(
+            spark, fmtb, frame(range(8), "b"), "k", 2),
+         data, snap + ["bucket_spec"]),
+        (fmtb, lambda: snapshot_merge_bucketed(
+            spark, fmtb, upsert([2, 30]), key="k"),
+         data + ["removed_files"], snap + ["bucket_spec", "merged"]),
+    ]
+    for td, write, entry_keys, snap_keys in writers:
+        before = snapshot_versions(td)
+        base = _snapshot_file(td, before[-1]) if before else {}
+        v = write()
+        s = _snapshot_file(td, v)
+        assert sorted(s) == sorted(snap_keys), (v, sorted(s))
+        if entry_keys is None:  # rollback: a pure pointer copy
+            assert s["manifest_list"] == _snapshot_file(td, 3)["manifest_list"]
+            continue
+        carried = [] if s.get("compacted") else base.get("manifest_list", [])
+        assert s["manifest_list"][:-1] == carried, v
+        with open(_os.path.join(td, s["manifest_list"][-1])) as fh:
+            entry = json.load(fh)
+        assert sorted(entry) == sorted(entry_keys), (v, sorted(entry))
+
 
 def test_legacy_cumulative_manifest_migration(spark, tmp_path):
     """A table whose last manifest predates the manifest-list layout
@@ -1806,6 +1877,132 @@ def test_legacy_cumulative_manifest_migration(spark, tmp_path):
     }
     m2 = _load_manifest(tdir, 2)
     assert all(f in m2["file_seqs"] and f in m2["file_bounds"] for f in m2["files"])
+
+
+def test_partitioned_commit_null_ts_partition(spark, tmp_path):
+    """A NULL ``ts`` lands in Spark's default-partition dir.  Its file is
+    recorded with a NULL partition value, so a later time-range read
+    still plans: it always scans that file and the residual predicate
+    drops the NULL row.  t$partitions reports the file with a NULL
+    part_value."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_cursor_spark.catalog import (
+        _load_manifest,
+        snapshot_commit_partitioned,
+        snapshot_partitions_metadata,
+        snapshot_read_time_range,
+    )
+
+    tdir = str(tmp_path / "nullts")
+    rows = [
+        (1, "2024-01-01 00:10:00"),
+        (2, "2024-01-01 01:20:00"),
+        (3, "2024-01-01 03:00:00"),
+        (4, None),
+    ]
+    df = spark.createDataFrame(rows, "k bigint, ts string").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+    snapshot_commit_partitioned(spark, tdir, df, "hour")
+    fparts = _load_manifest(tdir, 1)["file_partitions"]
+    assert None in {r["value"] for r in fparts.values()}
+    got = snapshot_read_time_range(
+        spark, tdir, "2024-01-01 00:00:00", "2024-01-01 02:00:00"
+    )
+    assert sorted(r["k"] for r in got.collect()) == [1, 2]
+    parts = {
+        (r["transform"], r["part_value"]): r["n_rows"]
+        for r in snapshot_partitions_metadata(spark, tdir).collect()
+    }
+    assert parts == {
+        ("hour", "2024-01-01-00"): 1,
+        ("hour", "2024-01-01-01"): 1,
+        ("hour", "2024-01-01-03"): 1,
+        ("hour", None): 1,
+    }
+
+
+def test_partition_scoped_delete_null_string_partition(
+    spark, tmp_path, monkeypatch
+):
+    """A partition-scoped delete with a NULL string partition value lands
+    in Spark's default-partition dir, and replaying that dir name as a
+    literal would delete nothing.  The writer fail-stops before
+    publishing; a table that recorded such a dir (as writers did before
+    the fail-stop) raises on read instead of bringing the key back."""
+    import data_pipeline_cursor_spark.catalog as cat
+
+    tdir = str(tmp_path / "nullpart")
+    cat.snapshot_commit(
+        spark, tdir,
+        spark.createDataFrame(
+            [(1, None), (2, "x"), (3, "y")], "k bigint, p string"
+        ),
+    )
+    keys = spark.createDataFrame([(1, None), (2, "x")], "k bigint, p string")
+    with pytest.raises(ValueError, match="NULL 'p'"):
+        cat.snapshot_delete_keys(spark, tdir, keys, key="k", partition_col="p")
+    assert cat.snapshot_versions(tdir) == [1]
+
+    # the older listing took the default-partition dir name as a value
+    monkeypatch.setattr(cat, "_NULL_PARTITION", "<no such dir>")
+    cat.snapshot_delete_keys(spark, tdir, keys, key="k", partition_col="p")
+    monkeypatch.undo()
+    with pytest.raises(ValueError, match="__HIVE_DEFAULT_PARTITION__"):
+        cat.snapshot_read(spark, tdir)
+
+
+@pytest.fixture(scope="module")
+def committed_table(spark, tmp_path_factory):
+    from pyspark.sql import functions as F
+
+    tdir = str(tmp_path_factory.mktemp("resolver") / "t")
+    catalog.snapshot_commit(
+        spark, tdir,
+        spark.createDataFrame(
+            [(1, "2024-01-01 00:00:00")], "k bigint, ts string"
+        ).withColumn("ts", F.col("ts").cast("timestamp")),
+    )
+    return tdir
+
+
+@pytest.mark.parametrize(
+    "read",
+    [
+        lambda s, t: catalog.snapshot_read(s, t, version=9),
+        lambda s, t: catalog.read_snapshot_sql(s, t, version=9),
+        lambda s, t: catalog.snapshot_changes(s, t, 1, 9),
+        lambda s, t: catalog.snapshot_files_metadata(s, t, "k", version=9),
+        lambda s, t: catalog.snapshot_delete_files_metadata(
+            s, t, "k", version=9
+        ),
+        lambda s, t: catalog.snapshot_metadata_count(s, t, version=9),
+        lambda s, t: catalog.snapshot_partitions_metadata(s, t, version=9),
+        lambda s, t: catalog.snapshot_read_time_range(
+            s, t, "2024-01-01 00:00:00", "2024-01-02 00:00:00", version=9
+        ),
+        lambda s, t: catalog.snapshot_read_bucketed(s, t, version=9),
+    ],
+    ids=[
+        "read", "read_sql", "changes", "files", "delete_files", "count",
+        "partitions", "time_range", "bucketed",
+    ],
+)
+def test_uncommitted_version_raises_same_error(spark, committed_table, read):
+    """Every reader that takes a version refuses an uncommitted one with
+    the same ValueError, before launching any Spark job."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "uncommitted version read")
+    try:
+        with pytest.raises(ValueError, match="version 9 not committed"):
+            read(spark, committed_table)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_metadata_count_zero_data_reads(spark, tmp_path, monkeypatch):
