@@ -135,12 +135,12 @@ def get_spark(app_name: str = "data-pipeline-cursor-spark") -> SparkSession:
             "spark.sql.sources.bucketing.autoBucketedScan.enabled",
             "false",
         )
-        # Streaming drains harvest live-state peaks from recentProgress
-        # (sources.record_state_progress); the default window of 100
-        # progress updates silently drops earlier batches' peaks on long
+        # Every drain reports its progress from recentProgress
+        # (sources.DrainReport); the default window of 100 progress
+        # updates silently drops earlier batches' records on long
         # ordered-fixture drains, understating the sized table's honest
         # bounded-state number.  10k covers every fixture drain; the
-        # harvester still flags saturation if a drain ever exceeds it.
+        # report still flags saturation if a drain ever exceeds it.
         .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
     )
     for k, v in _RUNTIME_SQL_CONFS.items():

@@ -42,9 +42,9 @@ from data_pipeline_cursor_spark.sources import load_table
 from data_pipeline_cursor_spark.streaming.sources import (
     FIXTURE_WATERMARK,
     FLUSH_TYPE,
+    DrainReport,
+    drain,
     read_event_stream,
-    record_state_progress,
-    run_to_completion,
     stream_state_partitions,
     write_landing_fixture,
     write_ordered_landing_fixture,
@@ -202,6 +202,16 @@ def _drain_state_parts(sf_dir: str) -> int:
     return int(min(8, max(2, -(-ev // (1 << 20)))))
 
 
+def _drain(
+    name: str, sf_dir: str, stream_df: DataFrame, sink=None, **kw
+) -> DrainReport:
+    """A registered job's drain: a fresh checkpoint named for the job and
+    the state width derived from ``sf_dir``'s events footprint."""
+    return drain(
+        stream_df, _ckpt(name), sink, state_parts=_drain_state_parts(sf_dir), **kw
+    )
+
+
 # Watermark delay for jobs replaying the ORDERED fixture: the disorder
 # bound there is zero across micro-batch boundaries (range slices), so any
 # positive delay is drop-safe; one hour keeps a realistic late-data margin
@@ -349,11 +359,7 @@ def tumble_agg(df: DataFrame, with_watermark: bool = True) -> DataFrame:
 def s_tumble(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C1+C2+C3: event-time parse → watermark → tumbling AVG/COUNT,
     append mode (finalized windows only)."""
-    return run_to_completion(
-        tumble_agg(_stream(spark, sf_dir)),
-        _ckpt("tumble"),
-        state_parts=_drain_state_parts(sf_dir),
-    )
+    return _drain("tumble", sf_dir, tumble_agg(_stream(spark, sf_dir))).table
 
 
 @register(
@@ -391,9 +397,7 @@ def s_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return run_to_completion(
-        agg, _ckpt("sliding"), state_parts=_drain_state_parts(sf_dir)
-    )
+    return _drain("sliding", sf_dir, agg).table
 
 
 @register(
@@ -444,9 +448,7 @@ def s_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return run_to_completion(
-        agg, _ckpt("session"), state_parts=_drain_state_parts(sf_dir)
-    )
+    return _drain("session", sf_dir, agg).table
 
 
 @register(
@@ -478,9 +480,7 @@ def s_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = agg.select(
         F.col("window.start").alias("window_start"), "event_type", "n_unique"
     )
-    return run_to_completion(
-        out, _ckpt("dedup"), state_parts=_drain_state_parts(sf_dir)
-    )
+    return _drain("dedup", sf_dir, out).table
 
 
 @register(
@@ -527,16 +527,7 @@ def s_lakehouse_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism, F.col("hour"))
     )
     out_dir = _work("lakehouse", uuid.uuid4().hex[:8])
-    q = (
-        df.writeStream.format("parquet")
-        .partitionBy("hour")
-        .option("path", out_dir)
-        .option("checkpointLocation", _ckpt("lakehouse"))
-        .trigger(availableNow=True)  # prod: processingTime="10 seconds"
-        .start()
-    )
-    q.awaitTermination()
-    record_state_progress(q)
+    drain(df, _ckpt("lakehouse"), (out_dir, ["hour"]))
     written = spark.read.parquet(out_dir)
     return written.groupBy("hour").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -624,11 +615,7 @@ def s_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.to_timestamp("ts", "yyyy-MM-dd HH:mm:ss").alias("event_time"),
     )
     agg = tumble_agg(typed.withWatermark("event_time", "5 minutes"), False)
-    return run_to_completion(
-        agg,
-        os.path.join(work, "ckpt"),
-        state_parts=_drain_state_parts(sf_dir),
-    )
+    return _drain("late", sf_dir, agg).table
 
 
 @register(
@@ -774,12 +761,7 @@ def s_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    log = run_to_completion(
-        emitted,
-        _ckpt("custom-state"),
-        out_mode="update",
-        state_parts=_drain_state_parts(sf_dir),
-    )
+    log = _drain("custom-state", sf_dir, emitted, out_mode="update").table
     # the memory sink logs every per-batch emission; the final state per key
     # is the row with the highest batch_seq
     w = Window.partitionBy("event_type").orderBy(F.desc("batch_seq"))
@@ -920,12 +902,7 @@ def s_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 outputMode="Update",
                 timeMode="None",
             )
-            log = run_to_completion(
-                emitted,
-                _ckpt("tws"),
-                out_mode="update",
-                state_parts=_drain_state_parts(sf_dir),
-            )
+            log = _drain("tws", sf_dir, emitted, out_mode="update").table
         finally:
             if old is None:
                 spark.conf.unset(provider_key)
@@ -948,12 +925,7 @@ def s_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             "update",
             GroupStateTimeout.NoTimeout,
         )
-        log = run_to_completion(
-                emitted,
-                _ckpt("tws"),
-                out_mode="update",
-                state_parts=_drain_state_parts(sf_dir),
-            )
+        log = _drain("tws", sf_dir, emitted, out_mode="update").table
     w = Window.partitionBy("event_type").orderBy(F.desc("batch_seq"))
     return (
         log.withColumn("rn", F.row_number().over(w))
@@ -1005,12 +977,7 @@ def s_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("n_above"),
         F.count(F.lit(1)).alias("n_events"),
     )
-    return run_to_completion(
-        agg,
-        _ckpt("static-join"),
-        out_mode="complete",
-        state_parts=_drain_state_parts(sf_dir),
-    )
+    return _drain("static-join", sf_dir, agg, out_mode="complete").table
 
 
 @register(
@@ -1082,9 +1049,7 @@ def s_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             <= F.col("error_time") + F.expr("INTERVAL 1 MINUTE")
         ),
     )
-    drained = run_to_completion(
-        pairs, _ckpt("stream-join"), state_parts=_drain_state_parts(sf_dir)
-    )
+    drained = _drain("stream-join", sf_dir, pairs).table
     return drained.groupBy(
         F.date_format("click_time", "yyyy-MM-dd").alias("day")
     ).agg(F.count(F.lit(1)).alias("n_pairs"))
@@ -1194,16 +1159,7 @@ def s_stream_join_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in rows:
             counts[r["day"]] = counts.get(r["day"], 0) + r["n"]
 
-    with stream_state_partitions(spark, _drain_state_parts(sf_dir)):
-        q = (
-            pairs.writeStream.foreachBatch(fold_batch)
-            .outputMode("append")
-            .option("checkpointLocation", _ckpt("stream-join-keyed"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        record_state_progress(q)
+    _drain("stream-join-keyed", sf_dir, pairs, fold_batch)
     return spark.createDataFrame(
         sorted(counts.items()), "day string, n_pairs long"
     )
@@ -1296,12 +1252,7 @@ def s_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    log = run_to_completion(
-        emitted,
-        _ckpt("fill-forward"),
-        out_mode="update",
-        state_parts=_drain_state_parts(sf_dir),
-    )
+    log = _drain("fill-forward", sf_dir, emitted, out_mode="update").table
     w = Window.partitionBy("event_type").orderBy(F.desc("batch_seq"))
     return (
         log.withColumn("rn", F.row_number().over(w))
@@ -1370,9 +1321,7 @@ def s_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_buckets",
         )
     )
-    return run_to_completion(
-        second, _ckpt("chained"), state_parts=_drain_state_parts(sf_dir)
-    )
+    return _drain("chained", sf_dir, second).table
 
 
 _TOPK_K = 3
@@ -1446,12 +1395,7 @@ def s_topk_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    log = run_to_completion(
-        emitted,
-        _ckpt("topk-state"),
-        out_mode="update",
-        state_parts=_drain_state_parts(sf_dir),
-    )
+    log = _drain("topk-state", sf_dir, emitted, out_mode="update").table
     w = Window.partitionBy("event_type", "rnk").orderBy(F.desc("batch_seq"))
     return (
         log.withColumn("rn", F.row_number().over(w))
@@ -1553,16 +1497,7 @@ def s_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.rename(tmp, data)
         shutil.rmtree(old, ignore_errors=True)
 
-    df = _stream(spark, sf_dir)
-    q = (
-        df.writeStream.outputMode("append")
-        .foreachBatch(apply_cdc)
-        .option("checkpointLocation", _ckpt("cdc-apply"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    record_state_progress(q)
+    drain(_stream(spark, sf_dir), _ckpt("cdc-apply"), apply_cdc)
     data = os.path.join(table_dir, "data")
     return (
         spark.read.schema(schema)
@@ -1588,114 +1523,37 @@ def s_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s_query_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming OBSERVABILITY via `StreamingQueryListener` (the
-    Structured Streaming metrics surface — Flink's metric reporters /
-    the reference dashboard's poll loop, §3.4, as first-class data): a
-    listener accumulates every micro-batch's progress while the flagship
-    tumble job drains, and the harvested counters come back AS A TABLE.
+    """Streaming OBSERVABILITY from the StreamingQueryProgress payload
+    (the Structured Streaming metrics surface — Flink's metric reporters /
+    the reference dashboard's poll loop, §3.4, as first-class data): the
+    flagship tumble job drains, and the counters summed over its
+    DrainReport's per-batch progress records come back AS A TABLE.
 
     Exactly-once makes observability oracle-able: total numInputRows
     over the drain is a pure function of the fixture (events + the flush
     sentinel), so the emitted counter carries a real DuckDB oracle —
     batch COUNTS and durations are run-shaped, so only the deterministic
-    counter is emitted.  At 100 TB this listener is what feeds lag/
+    counter is emitted.  At 100 TB this payload is what feeds lag/
     throughput dashboards and autoscaling; the plan cost is the job it
     observes."""
-    import threading
-    import time
-    import uuid
-
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    class _Harvest(StreamingQueryListener):
-        """Buffers (query_id, numInputRows) pairs for EVERY query — the
-        caller sums only its own query's entries after the drain.  No
-        query-id guard in the callback: a guard set after start() would
-        race (events from a concurrent query could slip in while the id
-        is still unset); attributing in the callback's data and filtering
-        at read time is order-safe by construction."""
-
-        def __init__(self):
-            self.progress = []  # (query_id_str, rows) pairs
-            self.terminated = set()
-            self.lock = threading.Lock()
-
-        def onQueryStarted(self, event):
-            pass
-
-        def onQueryProgress(self, event):
-            p = event.progress
-            with self.lock:
-                self.progress.append((str(p.id), int(p.numInputRows)))
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            with self.lock:
-                self.terminated.add(str(event.id))
-
-    listener = _Harvest()
-    spark.streams.addListener(listener)
-    try:
-        from data_pipeline_cursor_spark.streaming.sources import (
-            read_event_stream,
-            stream_state_partitions,
-            write_landing_fixture,
+    landing = write_landing_fixture(spark, sf_dir, _work("landing"))
+    df = read_event_stream(spark, landing, derived_trigger_width(landing))
+    report = _drain("metrics", sf_dir, tumble_agg(df))
+    if report.progress_window_saturated:
+        raise RuntimeError(
+            f"s_query_metrics: the drain filled the {len(report.progress)}-"
+            "record progress window; its earliest batches' counts are gone"
         )
-
-        landing = write_landing_fixture(spark, sf_dir, _work("landing"))
-        df = read_event_stream(spark, landing, derived_trigger_width(landing))
-        agg = tumble_agg(df)
-        name = "metrics_" + uuid.uuid4().hex[:8]
-        with stream_state_partitions(spark, _drain_state_parts(sf_dir)):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", _ckpt("metrics"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            qid = str(q.id)
-            q.awaitTermination()
-            record_state_progress(q)
-        # Listener callbacks arrive asynchronously; the bus is ordered per
-        # query, so once OUR terminated event lands every progress event
-        # for qid has too.  Bounded public-API wait — no private
-        # listenerBus drain.
-        deadline = time.monotonic() + 30.0
-        drained = False
-        while time.monotonic() < deadline:
-            with listener.lock:
-                if qid in listener.terminated:
-                    drained = True
-                    break
-            time.sleep(0.05)
-        if not drained:
-            # the listener bus DROPS events past queue capacity rather than
-            # blocking — a silent undercount here would emit a wrong metric
-            # with no signal, so fail loudly instead
-            raise RuntimeError(
-                f"streaming-metrics listener never saw termination of {qid} "
-                "within 30s; progress events may have been dropped"
-            )
-    finally:
-        spark.streams.removeListener(listener)
-    with listener.lock:
-        rows = sum(n for i, n in listener.progress if i == qid)
-    # A delivered TERMINATION event does not prove every PROGRESS event
-    # survived the bounded listener bus (round-6 ADVICE): a dropped
-    # progress event with termination intact would silently undercount —
-    # the one failure mode an observability pipeline must never have.
-    # Under an availableNow drain the true ingested total is a pure batch
-    # line count of the landing fixture; cross-check and fail loudly.
+    rows = sum(p["numInputRows"] for p in report.progress)
+    # A silent undercount is the one failure mode an observability
+    # pipeline must never have.  Under an availableNow drain the true
+    # ingested total is a pure batch line count of the landing fixture;
+    # cross-check and fail loudly.
     expected = spark.read.text(os.path.join(landing, "*.json")).count()
     if rows != expected:
         raise RuntimeError(
-            f"streaming-metrics listener undercounted: progress-event sum "
-            f"{rows} != landing fixture rows {expected}; the listener bus "
-            "dropped progress events"
+            f"s_query_metrics undercounted: progress sum {rows} != landing "
+            f"fixture rows {expected}"
         )
     return spark.createDataFrame(
         [("total_input_rows", rows)], "metric string, value long"
@@ -1925,12 +1783,7 @@ def ewma_emitted_log(
         GroupStateTimeout.NoTimeout,
     )
     name = "ewma-horizon" if horizon else "ewma-state"
-    return run_to_completion(
-        emitted,
-        _ckpt(name),
-        out_mode="update",
-        state_parts=_drain_state_parts(sf_dir),
-    )
+    return _drain(name, sf_dir, emitted, out_mode="update").table
 
 
 @register("s_ewma_horizon", oracle=_EWMA_STATE_ORACLE)
@@ -2202,12 +2055,7 @@ def funnel_emitted_log(spark: SparkSession, sf_dir: str) -> DataFrame:
         GroupStateTimeout.NoTimeout,
     )
     try:
-        return run_to_completion(
-            emitted,
-            _ckpt("funnel"),
-            out_mode="update",
-            state_parts=_drain_state_parts(sf_dir),
-        )
+        return _drain("funnel", sf_dir, emitted, out_mode="update").table
     finally:
         # drain complete — the memory-sink table no longer references the
         # cached enrichment side
@@ -2350,9 +2198,7 @@ def s_cms_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("window.start").alias("window_start"), "r", "pos", "cell"
         )
     )
-    return run_to_completion(
-        agg, _ckpt("cms_window"), state_parts=_drain_state_parts(sf_dir)
-    )
+    return _drain("cms_window", sf_dir, agg).table
 
 
 SHLL_M = 64  # registers per window; state = m rows/window, cardinality-free
@@ -2418,9 +2264,7 @@ def s_hll_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("window.start").alias("window_start"), "bucket", "m_rank"
         )
     )
-    return run_to_completion(
-        agg, _ckpt("hll_window"), state_parts=_drain_state_parts(sf_dir)
-    )
+    return _drain("hll_window", sf_dir, agg).table
 
 
 _DRIFT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -2513,9 +2357,7 @@ def s_drift_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("kl_uniform"),
         )
     )
-    return run_to_completion(
-        agg, _ckpt("drift_window"), state_parts=_drain_state_parts(sf_dir)
-    )
+    return _drain("drift_window", sf_dir, agg).table
 
 
 # --- C26: streaming ANN serving ------------------------------------------
@@ -2574,14 +2416,7 @@ def s_ann_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         res = _sim_topk(spark, sf_dir, queries=batch_df)
         res.write.mode("append").parquet(out_dir)
 
-    q = (
-        src.writeStream.foreachBatch(_score_batch)
-        .option("checkpointLocation", _ckpt("annserve"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    record_state_progress(q)
+    drain(src, _ckpt("annserve"), _score_batch)
     return spark.read.parquet(out_dir)
 
 
@@ -2662,9 +2497,7 @@ def s_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "version_from"
         ),
     )
-    return run_to_completion(
-        joined, _ckpt("scd2-lookup"), state_parts=_drain_state_parts(sf_dir)
-    )
+    return _drain("scd2-lookup", sf_dir, joined).table
 
 
 DQ_RANGE_MAX_CENTS = 40_000  # value <= 400.00 passes the range rule
@@ -2733,9 +2566,7 @@ def s_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_events") >= DQ_MIN_ROWS).alias("volume_pass"),
         )
     )
-    return run_to_completion(
-        agg, _ckpt("quality-gate"), state_parts=_drain_state_parts(sf_dir)
-    )
+    return _drain("quality-gate", sf_dir, agg).table
 
 
 @register(
@@ -2827,15 +2658,7 @@ def s_gdpr_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 batch.sparkSession, table_dir, batch, key="event_id"
             )
 
-        with stream_state_partitions(spark, _drain_state_parts(sf_dir)):
-            q = (
-                src.writeStream.foreachBatch(apply_deletes)
-                .option("checkpointLocation", _ckpt("gdpr"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            record_state_progress(q)
+        _drain("gdpr", sf_dir, src, apply_deletes)
     snap = snapshot_read(spark, table_dir)
     return snap.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -2975,15 +2798,7 @@ def s_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 return
             snapshot_merge(sp, table_dir, source, key="event_id")
 
-        with stream_state_partitions(spark, _drain_state_parts(sf_dir)):
-            q = (
-                src.writeStream.foreachBatch(apply_merge)
-                .option("checkpointLocation", _ckpt("merge-stream"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            record_state_progress(q)
+        _drain("merge-stream", sf_dir, src, apply_merge)
     snap = snapshot_read(spark, table_dir)
     return snap.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -3024,8 +2839,6 @@ def s_snapshot_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads only its commits' added files.  The engine checkpoint makes
     restarts resume at the next unconsumed version — no bookkeeping in
     the source."""
-    import uuid
-
     from data_pipeline_cursor_spark.catalog import snapshot_events_table
     from data_pipeline_cursor_spark.sources.snapshot_feed import (
         register_snapshot_feed,
@@ -3047,18 +2860,7 @@ def s_snapshot_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("ending_version", str(SNAPSHOT_COMMITS))
         .load()
     )
-    name = "snapfeed_" + uuid.uuid4().hex[:8]
-    with stream_state_partitions(spark, _drain_state_parts(sf_dir)):
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _ckpt("snapshot-feed"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        record_state_progress(q)
-    out = spark.table(name)
+    out = _drain("snapshot-feed", sf_dir, sdf).table
     return out.groupBy(
         F.col("_commit_version").alias("commit_version"), "event_type"
     ).agg(
@@ -3067,9 +2869,6 @@ def s_snapshot_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "checksum"
         ),
     )
-
-
-LAST_PACED_FEED_BATCHES: int | None = None  # pacing-test capture
 
 
 @register(
@@ -3090,7 +2889,7 @@ def s_feed_paced(spark: SparkSession, sf_dir: str) -> DataFrame:
     maxFilesPerTrigger / Kafka's maxOffsetsPerTrigger at commit
     granularity.  A consumer starting behind a 3-commit backlog drains
     it capped at ONE version per micro-batch: the engine plans >= 3
-    batches (captured in LAST_PACED_FEED_BATCHES and plan-asserted)
+    batches (counted from its progress records and asserted)
     instead of one giant replay batch — at 100 TB the difference
     between bounded, checkpointable catch-up batches and a single
     batch sized by the whole backlog.
@@ -3101,7 +2900,6 @@ def s_feed_paced(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time
     import uuid
 
-    global LAST_PACED_FEED_BATCHES
     from data_pipeline_cursor_spark.catalog import (
         SNAPSHOT_COMMITS,
         snapshot_events_table,
@@ -3161,16 +2959,13 @@ def s_feed_paced(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             q.stop()
             raise TimeoutError("s_feed_paced: did not catch up in 120 s")
-        record_state_progress(q)
-        ingesting = [
-            p for p in q.recentProgress if p["numInputRows"] > 0
-        ]
-        LAST_PACED_FEED_BATCHES = len(ingesting)
+        report = DrainReport.of(q, spark)
         q.stop()
         q.awaitTermination()
-    if LAST_PACED_FEED_BATCHES < SNAPSHOT_COMMITS:
+    n_batches = sum(1 for p in report.progress if p["numInputRows"] > 0)
+    if n_batches < SNAPSHOT_COMMITS:
         raise AssertionError(
-            f"s_feed_paced: backlog drained in {LAST_PACED_FEED_BATCHES} "
+            f"s_feed_paced: backlog drained in {n_batches} "
             f"batches — max_versions_per_batch=1 must cut >= "
             f"{SNAPSHOT_COMMITS} (admission control regressed)"
         )

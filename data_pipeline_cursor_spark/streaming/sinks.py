@@ -26,13 +26,10 @@ The serving table is partitioned by event_type (the reference's serving
 indexes are (city, window_start) / last_updated — init-analytics-db.sql:
 13-14; partition-on-key + in-partition sort is the Spark substitute).
 
-The three update-mode upsert runners drain without no-data micro-batches
-(`_drain_update`): in update mode the 0-row batch Spark runs after a data
-batch only advances the watermark and evicts state, so it emits no row and
-merges nothing, yet costs a full trigger (planning, a state-store commit
-per partition, the offset and commit logs).  Each drain's first batch
-still drops late rows by the watermark the skipped batch would have
-applied (streaming.sources.stream_state_partitions); inside a multi-batch
+The three update-mode upsert runners drain through
+`streaming.sources.drain` without 0-row micro-batches (`drain` says why
+that is sound in update mode), at a state width of 8 unless the caller
+derives one, and return the drain's `DrainReport`.  Inside a multi-batch
 drain a row later than the watermark is dropped one batch sooner than
 with Spark's default propagation, which keeps it or drops it as Spark's
 watermark contract allows.
@@ -46,6 +43,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from data_pipeline_cursor_spark.streaming.sources import DrainReport, drain
 
 KEY_COLS = ("event_type", "window_start")
 
@@ -313,13 +312,16 @@ def merge_upsert_batch_merge_into(batch: DataFrame, table: str) -> None:
 
 def run_upsert_stream_merge_into(
     agg_stream: DataFrame, table: str, checkpoint: str
-) -> None:
+) -> DrainReport:
     """Delta/Iceberg variant of run_upsert_stream — same update-mode
     foreachBatch shape, serving table lives in a transactional format."""
-    _drain_update(
+    return drain(
         agg_stream,
-        lambda b, _id: merge_upsert_batch_merge_into(b, table),
         checkpoint,
+        lambda b, _id: merge_upsert_batch_merge_into(b, table),
+        out_mode="update",
+        state_parts=8,
+        no_data_batches=False,
     )
 
 
@@ -424,42 +426,17 @@ def merge_upsert_batch_jdbc(
 
 def run_upsert_stream_jdbc(
     agg_stream: DataFrame, url: str, table: str, checkpoint: str
-) -> None:
+) -> DrainReport:
     """JDBC variant of run_upsert_stream — same update-mode foreachBatch
     shape, serving table lives in the database instead of Parquet."""
-    _drain_update(
+    return drain(
         agg_stream,
-        lambda b, _id: merge_upsert_batch_jdbc(b, url, table),
         checkpoint,
+        lambda b, _id: merge_upsert_batch_jdbc(b, url, table),
+        out_mode="update",
+        state_parts=8,
+        no_data_batches=False,
     )
-
-
-def _drain_update(
-    agg_stream: DataFrame,
-    merge_batch,
-    checkpoint: str,
-    state_parts: int | None = None,
-) -> None:
-    """Drain an update-mode aggregation into ``merge_batch`` through
-    foreachBatch, shared by the three upsert runners.  No 0-row
-    micro-batches: see the module docstring."""
-    from data_pipeline_cursor_spark.streaming.sources import (
-        record_state_progress,
-        stream_state_partitions,
-    )
-
-    with stream_state_partitions(
-        agg_stream.sparkSession, state_parts or 8, no_data_batches=False
-    ):
-        q = (
-            agg_stream.writeStream.outputMode("update")
-            .foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)  # prod: processingTime="10 seconds"
-            .start()
-        )
-        q.awaitTermination()
-        record_state_progress(q)
 
 
 def run_upsert_stream(
@@ -467,17 +444,19 @@ def run_upsert_stream(
     table_dir: str,
     checkpoint: str,
     state_parts: int | None = None,
-) -> None:
+) -> DrainReport:
     """Drive a windowed aggregation stream (update mode) into the serving
     table via foreachBatch MERGE — refinement semantics like Flink's
     retract/upsert stream: a window's row is re-emitted and overwritten on
     every in-watermark late arrival.  ``state_parts`` pins the state-store
     shuffle width (callers derive it from input size; None keeps 8)."""
-    _drain_update(
+    return drain(
         agg_stream,
-        lambda b, _id: merge_upsert_batch(b, table_dir),
         checkpoint,
-        state_parts,
+        lambda b, _id: merge_upsert_batch(b, table_dir),
+        out_mode="update",
+        state_parts=state_parts or 8,
+        no_data_batches=False,
     )
 
 

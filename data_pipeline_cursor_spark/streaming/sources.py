@@ -17,7 +17,12 @@ schema-on-read behavior (SURVEY.md §1.1).
 
 from __future__ import annotations
 
+import json
 import os
+import uuid
+from collections.abc import Callable, Sequence
+from contextlib import contextmanager
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -306,12 +311,9 @@ def write_event_stream_kafka(
     )
 
 
-from contextlib import contextmanager
-
-
 @contextmanager
 def stream_state_partitions(
-    spark: SparkSession, n: int = 8, no_data_batches: bool = True
+    spark: SparkSession, n: int | None = 8, no_data_batches: bool = True
 ):
     """Pin the stateful-shuffle width for a streaming query's lifetime.
 
@@ -322,20 +324,14 @@ def stream_state_partitions(
     i.e. 2.5 s of pure commit overhead per batch at 32 partitions × 2
     stateful ops.  Size it to state volume, not to the session default: 8
     fits the fixture's ≤50 k state keys; a 100 TB deployment sizes UP
-    (state_bytes / ~100 MB per store), set once at job launch.
+    (state_bytes / ~100 MB per store), set once at job launch.  ``n=None``
+    leaves the session's width as it is.
 
-    ``no_data_batches=False`` turns off the 0-row micro-batch Spark runs
-    after a data batch only to advance the watermark and evict state, and
-    is for queries with ONE stateful operator whose skipped batch would
-    emit nothing (update output mode; see streaming.sinks).  Spark's
-    multi-operator watermark propagation filters late rows with the
-    previous batch's watermark, so without the 0-row batch the next data
-    batch — the next drain's first one — would keep rows the skipped batch
-    would have dropped; the single-operator propagation
-    (allowMultiple=false) filters each batch with its own watermark, which
-    at a drain boundary is the one the skipped batch applied.  Neither conf
-    is stored in the offset log, so existing checkpoints resume as is."""
-    confs = {"spark.sql.shuffle.partitions": str(n)}
+    ``no_data_batches=False`` turns off 0-row micro-batches and switches
+    to the single-operator watermark propagation; ``drain`` says when that
+    is sound.  Every conf set here is restored on exit, also when the
+    query fails."""
+    confs = {} if n is None else {"spark.sql.shuffle.partitions": str(n)}
     if not no_data_batches:
         confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
         confs["spark.sql.streaming.statefulOperator.allowMultiple"] = "false"
@@ -352,84 +348,104 @@ def stream_state_partitions(
                 spark.conf.set(k, v)
 
 
-#: Live keyed-state telemetry of the most recently drained query —
-#: peak stateOperators[].memoryUsedBytes / numRowsTotal across its
-#: micro-batches.  This is the HONEST bounded-state number for the sized
-#: streaming table (round-10 VERDICT item 3): the checkpoint directory's
-#: byte total measures cumulative RocksDB snapshot retention across all
-#: ordered-fixture batches, not what the operator actually holds live.
-LAST_STATE_PROGRESS: dict = {}
+@dataclass(frozen=True)
+class DrainReport:
+    """What one drain did, read once from its query after it stopped.
+
+    ``progress`` holds the query's StreamingQueryProgress records as dicts,
+    one per micro-batch: input rows, per-phase ``durationMs`` and the
+    ``stateOperators`` (live state rows and bytes — the honest bounded-
+    state number; a checkpoint directory's size measures snapshot
+    retention, not what the operators hold).  A drain run with
+    ``no_data_batches=False`` (the update-mode upsert drains) has no record
+    for the 0-row batch Spark would otherwise run after each data batch:
+    in update mode that batch emits no row and merges nothing, so it is
+    never run.
+
+    ``table`` is the drained result for the memory sink, else None.
+
+    ``progress_window_saturated``: the query keeps only the last
+    ``spark.sql.streaming.numRecentProgressUpdates`` records (10k in
+    session.py); when a drain fills that window its earliest records are
+    gone and any sum or peak over ``progress`` understates the drain."""
+
+    progress: tuple[dict, ...]
+    table: DataFrame | None
+    progress_window_saturated: bool
+
+    @classmethod
+    def of(
+        cls, q, spark: SparkSession, table: DataFrame | None = None
+    ) -> "DrainReport":
+        """The report of query ``q`` from its ``recentProgress``."""
+        progress = tuple(json.loads(p.json) for p in q.recentProgress)
+        cap = int(spark.conf.get("spark.sql.streaming.numRecentProgressUpdates"))
+        return cls(progress, table, len(progress) >= cap)
 
 
-def record_state_progress(q) -> None:
-    """Harvest per-operator live state peaks from a drained query's
-    progress history (the same StreamingQueryProgress payload
-    s_query_metrics serves) into LAST_STATE_PROGRESS."""
-    import json as _json
-
-    try:
-        mem, rows = [], []
-        progress = q.recentProgress
-        for p in progress:
-            d = p if isinstance(p, dict) else _json.loads(p.json)
-            for so in d.get("stateOperators", []):
-                mem.append(so.get("memoryUsedBytes") or 0)
-                rows.append(so.get("numRowsTotal") or 0)
-        # recentProgress retains only numRecentProgressUpdates entries
-        # (raised to 10k in session.py); if a drain ever saturates the
-        # window, the peak may be understated — flag it rather than
-        # report a silently-truncated number
-        from pyspark.sql import SparkSession as _SS
-
-        sess = _SS.getActiveSession()
-        cap = int(
-            sess.conf.get(
-                "spark.sql.streaming.numRecentProgressUpdates", "100"
-            )
-            if sess is not None
-            else "100"
-        )
-        LAST_STATE_PROGRESS.clear()
-        LAST_STATE_PROGRESS.update(
-            {
-                "state_bytes_peak": max(mem) if mem else 0,
-                "state_rows_peak": max(rows) if rows else 0,
-                "n_batches": len(progress),
-                "progress_window_saturated": len(progress) >= cap,
-            }
-        )
-    except Exception:
-        LAST_STATE_PROGRESS.clear()
-
-
-def run_to_completion(
+def drain(
     stream_df: DataFrame,
     checkpoint: str,
+    sink: Callable[[DataFrame, int], None] | tuple[str, Sequence[str]] | None = None,
+    *,
     out_mode: str = "append",
     state_parts: int | None = None,
-):
-    """Drain a stream with trigger(availableNow) into an in-memory sink and
-    return the result as a batch DataFrame.  The memory sink is test/driver
-    plumbing only — production sinks are the lakehouse appender and the
-    upsert sink (streaming.sinks).  ``state_parts`` pins the state-store
-    shuffle width for the drain (callers derive it from the input
-    footprint via jobs._drain_state_parts; None keeps the legacy 8)."""
-    import uuid
+    no_data_batches: bool = True,
+) -> DrainReport:
+    """Run ``stream_df`` with trigger(availableNow) until it has consumed
+    everything its source held at start, then report the drain.
 
+    ``sink`` is one of:
+    - None: the memory sink; the report's ``table`` is the drained result
+      as a batch DataFrame.  This is driver plumbing for the registered
+      jobs — the production sinks are the other two;
+    - a ``(batch_df, batch_id)`` callable, run through foreachBatch;
+    - a ``(path, partition_cols)`` pair: parquet files appended under
+      ``path``, one directory level per partition column.
+
+    ``state_parts`` pins the state-store shuffle width for the drain
+    (stream_state_partitions; callers derive it from the input footprint,
+    jobs._drain_state_parts); None keeps the session's width.
+
+    ``no_data_batches=False`` turns off the 0-row micro-batch Spark runs
+    after a data batch only to advance the watermark and evict state.  It
+    is for queries with ONE stateful operator whose skipped batch would
+    emit nothing: in update output mode that batch emits no row and
+    merges nothing, yet costs a full trigger (planning, a state-store
+    commit per partition, the offset and commit logs).  Spark's
+    multi-operator watermark propagation filters late rows with the
+    previous batch's watermark, so without the 0-row batch the next data
+    batch — the next drain's first one — would keep rows the skipped batch
+    would have dropped; the single-operator propagation
+    (allowMultiple=false) filters each batch with its own watermark, which
+    at a drain boundary is the one the skipped batch applied.  Neither conf
+    is stored in the offset log, so existing checkpoints resume as is.
+
+    A failing query (a foreachBatch that raises) raises here, with the
+    confs restored."""
     spark = stream_df.sparkSession
-    name = "m" + uuid.uuid4().hex[:12]
-    with stream_state_partitions(spark, state_parts or 8):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(out_mode)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+    writer = (
+        stream_df.writeStream.outputMode(out_mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)  # prod: processingTime="10 seconds"
+    )
+    name = None
+    if sink is None:
+        name = "m" + uuid.uuid4().hex[:12]
+        writer = writer.format("memory").queryName(name)
+    elif callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        path, partition_cols = sink
+        writer = (
+            writer.format("parquet")
+            .option("path", path)
+            .partitionBy(*partition_cols)
         )
+    with stream_state_partitions(spark, state_parts, no_data_batches):
+        q = writer.start()
         q.awaitTermination()
-        record_state_progress(q)
-    return spark.table(name)
+    return DrainReport.of(q, spark, spark.table(name) if name else None)
 
 
 def write_query_landing_fixture(

@@ -1,7 +1,10 @@
 """Streaming-at-scale evidence (round-7 item 5): drain the stateful
 streaming jobs over the sf1 events fixture (~1 M events, 10x the bench
 fixture) with the ROCKSDB state store provider, and record per-job wall
-drain time, output rows, and on-disk checkpoint/state size.
+drain time, output rows, on-disk checkpoint size, and the streaming
+layers perfbench reports (perfbench/fold.py's fold_progress over a
+StreamingQueryListener's progress records): per-batch trigger phases,
+state commit, batch count, start/stop time and peak live state.
 
 RocksDB matters because it is the provider a 100 TB deployment runs:
 state lives off-heap/on-disk with incremental snapshots, so per-key
@@ -20,7 +23,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 
 JOBS = ["s_tumble", "s_upsert_foreachbatch", "s_ewma_state", "s_funnel"]
 
@@ -36,9 +41,44 @@ def du(path: str) -> int:
     return total
 
 
+def _progress_listener():
+    """A StreamingQueryListener keeping every progress record as a dict,
+    with started/terminated counts to wait on (events arrive async)."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Listener(StreamingQueryListener):
+        def __init__(self):
+            self.progress: list[dict] = []
+            self.started = 0
+            self.terminated = 0
+
+        def onQueryStarted(self, event):
+            self.started += 1
+
+        def onQueryProgress(self, event):
+            self.progress.append(json.loads(event.progress.json))
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.terminated += 1
+
+        def wait(self, timeout: float = 30.0) -> None:
+            deadline = time.monotonic() + timeout
+            while self.terminated < self.started:
+                if time.monotonic() > deadline:
+                    raise RuntimeError("listener missed a query termination")
+                time.sleep(0.05)
+
+    return Listener()
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scaledata/sf1"
     jobs = sys.argv[2].split(",") if len(sys.argv) > 2 else JOBS
+
+    from fold import fold_progress
 
     from data_pipeline_cursor_spark.registry import get_queries
     from data_pipeline_cursor_spark.session import (
@@ -52,9 +92,6 @@ def main() -> None:
         "spark.sql.streaming.stateStore.providerClass",
         ROCKSDB_STATE_PROVIDER,
     )
-    from data_pipeline_cursor_spark.streaming.sources import (
-        LAST_STATE_PROGRESS,
-    )
 
     qs = get_queries()
     ckpt_root = _work("ckpt")
@@ -63,38 +100,33 @@ def main() -> None:
         before = (
             set(os.listdir(ckpt_root)) if os.path.isdir(ckpt_root) else set()
         )
-        LAST_STATE_PROGRESS.clear()
-        t0 = time.perf_counter()
-        df = qs[name](spark, sf_dir)
-        n = df.count()
-        dt = round(time.perf_counter() - t0, 1)
+        listener = _progress_listener()
+        spark.streams.addListener(listener)
+        try:
+            t0, w0 = time.perf_counter(), time.time()
+            df = qs[name](spark, sf_dir)
+            n = df.count()
+            w1 = time.time()
+            dt = round(time.perf_counter() - t0, 1)
+            listener.wait()
+        finally:
+            spark.streams.removeListener(listener)
         new = (
             sorted(set(os.listdir(ckpt_root)) - before)
             if os.path.isdir(ckpt_root)
             else []
         )
         size = sum(du(os.path.join(ckpt_root, d)) for d in new)
+        # streaming.* layers over the job's wall span: per-batch means of
+        # the trigger phases and state commit, the batch count, and peak
+        # LIVE state (per batch summed over stateful operators, max over
+        # batches; 0 for jobs whose state lives outside the state store).
+        # start_stop_s is the job's wall time outside its triggers.
+        layers = fold_progress(listener.progress, [(w0, w1)])
         out[name] = {
             "drain_sec": dt,
             "out_rows": n,
-            # LIVE state at peak, from StreamingQueryProgress
-            # stateOperators[].memoryUsedBytes — the honest bounded-state
-            # number (r10 VERDICT item 3); 0 for stateless/foreachBatch-
-            # folded jobs whose state lives outside the state store
-            "live_state_bytes_peak": LAST_STATE_PROGRESS.get(
-                "state_bytes_peak", 0
-            ),
-            "live_state_rows_peak": LAST_STATE_PROGRESS.get(
-                "state_rows_peak", 0
-            ),
-            "n_batches": LAST_STATE_PROGRESS.get("n_batches", 0),
-            # True would mean recentProgress rolled over its (10k)
-            # window and the peak MAY be understated (ADVICE r11) —
-            # always False at fixture batch counts, recorded so a
-            # silent truncation can never masquerade as a real peak
-            "progress_window_saturated": LAST_STATE_PROGRESS.get(
-                "progress_window_saturated", False
-            ),
+            **{k: round(v, 3) for k, v in layers.items()},
             # cumulative on-disk checkpoint retention across the drain's
             # micro-batches — RETENTION, not live state; kept for the
             # storage-footprint story only

@@ -255,8 +255,8 @@ def test_stream_tolerates_malformed_records(spark, tmp_path):
     import json
 
     from data_pipeline_cursor_spark.streaming.sources import (
+        drain,
         read_event_stream,
-        run_to_completion,
     )
 
     landing = tmp_path / "landing"
@@ -268,10 +268,10 @@ def test_stream_tolerates_malformed_records(spark, tmp_path):
          "ts": "not-a-time"},
     ]
     (landing / "a.json").write_text("\n".join(json.dumps(r) for r in recs))
-    out = run_to_completion(
+    out = drain(
         read_event_stream(spark, str(landing)),
         str(tmp_path / "ckpt"),
-    ).toPandas()
+    ).table.toPandas()
     assert len(out) == 2
     bad = out[out["event_type"] == "click"].sort_values("event_id", na_position="last")
     assert bad["value"].isna().sum() == 1

@@ -5,6 +5,7 @@ semantics-specific checks (late-drop, upsert refinement, dedup)."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_cursor_spark.functions.math_ops import stable_round4
@@ -326,7 +327,7 @@ def test_checkpoint_resume_exactly_once(spark, tmp_path):
     assert got == sorted(range(9)), got
 
 
-def test_upsert_drains_resume_without_empty_batches(spark, tmp_path, monkeypatch):
+def test_upsert_drains_resume_without_empty_batches(spark, tmp_path):
     """Two landed files, each drained by run_upsert_stream resuming ONE
     checkpoint: each drain runs a single data micro-batch (no 0-row
     watermark batch), yet the watermark file 1 set still holds when file
@@ -345,13 +346,6 @@ def test_upsert_drains_resume_without_empty_batches(spark, tmp_path, monkeypatch
 
     assert sources.FIXTURE_WATERMARK == "35 days"  # the late row below
     progress = []
-    record = sources.record_state_progress
-
-    def capture(q):
-        progress.extend(json.loads(p.json) for p in q.recentProgress)
-        record(q)
-
-    monkeypatch.setattr(sources, "record_state_progress", capture)
     landing = tmp_path / "landing"
     landing.mkdir()
     serving, ckpt = str(tmp_path / "serving"), str(tmp_path / "ckpt")
@@ -363,11 +357,12 @@ def test_upsert_drains_resume_without_empty_batches(spark, tmp_path, monkeypatch
                 for r in rows
             )
         )
-        run_upsert_stream(
+        report = run_upsert_stream(
             tumble_agg(sources.read_event_stream(spark, str(landing))),
             serving,
             ckpt,
         )
+        progress.extend(report.progress)
 
     land_and_drain("a.json", [
         ("1", "click", "10", "2024-03-10 10:00:00"),
@@ -392,6 +387,68 @@ def test_upsert_drains_resume_without_empty_batches(spark, tmp_path, monkeypatch
         spark.read.schema(sources.EVENT_SCHEMA).json(str(landing))
     ).filter(F.col("event_id") != 5)
     assert_same_result(got, tumble_agg(kept, with_watermark=False).toPandas())
+
+
+@pytest.mark.parametrize("prior", ["set", "unset"])
+def test_drain_failure_raises_and_restores_confs(spark, tmp_path, prior):
+    """A foreachBatch that raises on batch 1 surfaces from drain, and the
+    three confs drain sets for an update-mode drain are back as they were
+    before it: a value set earlier is restored, an unset one is unset."""
+    import json
+
+    from pyspark.errors import StreamingQueryException
+
+    from data_pipeline_cursor_spark.streaming.sources import (
+        drain,
+        read_event_stream,
+    )
+
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+        "spark.sql.streaming.statefulOperator.allowMultiple",
+    )
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    before = (
+        dict(zip(keys, ("5", "true", "true")))
+        if prior == "set"
+        else dict.fromkeys(keys)
+    )
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    for i in range(2):  # one file per micro-batch: batches 0 and 1
+        (landing / f"{i}.json").write_text(json.dumps({
+            "event_id": str(i), "event_type": "click", "value": "1",
+            "ts": "2024-01-01 10:00:00",
+        }))
+    seen = []
+
+    def fail_on_batch_1(batch, batch_id):
+        seen.append(batch_id)
+        if batch_id == 1:
+            raise ValueError("boom on batch 1")
+
+    def set_confs(confs):
+        for k, v in confs.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+    try:
+        set_confs(before)
+        with pytest.raises(StreamingQueryException, match="boom on batch 1"):
+            drain(
+                read_event_stream(spark, str(landing), 1),
+                str(tmp_path / "ckpt"),
+                fail_on_batch_1,
+                state_parts=3,
+                no_data_batches=False,
+            )
+        assert seen == [0, 1]
+        assert {k: spark.conf.get(k, None) for k in keys} == before
+    finally:
+        set_confs(saved)
 
 
 def test_jdbc_upsert_sink_gate(spark):
