@@ -83,16 +83,11 @@ def main() -> None:
         skipped_streaming = sorted(k for k in queries if k.startswith("s_"))
         queries = {k: v for k, v in queries.items() if not k.startswith("s_")}
 
-    # Suite-run pair sharing (BENCH_SHARE_PAIRS, default on): the eight
-    # dedup-graph consumers derive their pair set from ONE checkpointed
-    # scored-candidate table per session instead of re-running the
-    # signature→candidate→verify pipeline each (~30-60 s apiece at sf10).
-    # Hashes are unchanged (consumers filter/round the same materialized
-    # raw score); standalone paths outside the bench are untouched.
-    from data_pipeline_cursor_spark.text.dedup import enable_pair_sharing
-
+    # Suite-run artifact sharing (BENCH_SHARE_PAIRS, default on): the
+    # queries that declare register(..., uses=) read ONE checkpointed copy
+    # of each shared dedup artifact instead of rebuilding it (~30-60 s
+    # apiece at sf10); hashes are unchanged.
     share_pairs = os.environ.get("BENCH_SHARE_PAIRS", "1") == "1"
-    enable_pair_sharing(share_pairs)
 
     # Warm the JVM + parquet footer cache once so per-query times measure the
     # query, not session start-up.
@@ -103,60 +98,25 @@ def main() -> None:
 
     repeats = max(1, int(os.environ.get("BENCH_REPEATS", "2")))
     timings: dict[str, float] = {}
-    ordered = sorted(queries)
-    # Once the LAST shared-pair consumer has run, release the session's
-    # scored-candidate checkpoint: the pinned blocks otherwise stay
-    # resident for the rest of the suite and tax unrelated late queries
-    # (x_lang_ngram_profile 38 s → 111 s at sf10, round-9 VERDICT item 7).
-    from data_pipeline_cursor_spark.text.dedup import (
-        BASE_ARTIFACT_CONSUMERS,
-        PAIR_SHARING_CONSUMERS,
-        release_shared_base_artifacts,
-        release_shared_pairs,
-    )
+    from data_pipeline_cursor_spark.registry import ArtifactScope
 
-    # Run the consumers of BOTH shared memos as one CONTIGUOUS block (at
-    # the position of the first one): alphabetical order interleaves
-    # non-consumers between them (x_lang_ngram_profile sorts mid-block),
-    # which would leave checkpoints pinned across exactly the queries the
-    # release protects.  Each memo is released the moment ITS last
-    # consumer finishes — the scored-candidate checkpoint is tiny but the
-    # base artifacts carry the shingle-set bulk.
-    SHARED_BLOCK = PAIR_SHARING_CONSUMERS | BASE_ARTIFACT_CONSUMERS
-    consumers_sorted = [n for n in ordered if n in SHARED_BLOCK]
-    if consumers_sorted:
-        first = consumers_sorted[0]
-        ordered = [n for n in ordered if n == first or n not in SHARED_BLOCK]
-        i = ordered.index(first)
-        ordered[i : i + 1] = consumers_sorted
-    remaining_pairs = set(consumers_sorted) & PAIR_SHARING_CONSUMERS
-    remaining_base = set(consumers_sorted) & BASE_ARTIFACT_CONSUMERS
-    share_pairs_released = False
-    base_arts_released = False
-    for name in ordered:
-        fn = queries[name]
-        best = None
-        for _ in range(repeats):
-            t0 = time.perf_counter()
-            try:
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                dt = round(time.perf_counter() - t0, 3)
-                best = dt if best is None else min(best, dt)
-            except Exception as exc:  # record the failure, keep benching
-                # keep trying the remaining repeats — BENCH_REPEATS exists
-                # BECAUSE the co-tenant host flakes; a query is failed only
-                # when EVERY attempt failed
-                print(f"# bench FAIL {name}: {exc}", file=sys.stderr)
-        timings[name] = -1.0 if best is None else best
-        remaining_pairs.discard(name)
-        remaining_base.discard(name)
-        if share_pairs and not share_pairs_released and not remaining_pairs:
-            release_shared_pairs(spark)
-            share_pairs_released = True
-        if share_pairs and not base_arts_released and not remaining_base:
-            release_shared_base_artifacts(spark)
-            base_arts_released = True
+    with ArtifactScope(sorted(queries), share=share_pairs) as scope:
+        for name in scope.order:
+            best = None
+            with scope.running(name):
+                for _ in range(repeats):
+                    t0 = time.perf_counter()
+                    try:
+                        df = queries[name](spark, sf_dir)
+                        df.write.format("noop").mode("overwrite").save()
+                        dt = round(time.perf_counter() - t0, 3)
+                        best = dt if best is None else min(best, dt)
+                    except Exception as exc:  # record it, keep benching
+                        # keep trying the remaining repeats — BENCH_REPEATS
+                        # exists BECAUSE the co-tenant host flakes; a query
+                        # is failed only when EVERY attempt failed
+                        print(f"# bench FAIL {name}: {exc}", file=sys.stderr)
+            timings[name] = -1.0 if best is None else best
 
     failed = sorted(k for k, t in timings.items() if t < 0)
     total = round(sum(t for t in timings.values() if t >= 0), 3)
@@ -269,8 +229,7 @@ def main() -> None:
         "worst_batch_query": worst_batch_q,
         "worst_vs_prev_streaming": worst_stream_ratio,
         "worst_streaming_query": worst_stream_q,
-        "pairs_released_after_last_consumer": share_pairs_released,
-        "base_artifacts_released_after_last_consumer": base_arts_released,
+        "released_artifacts": scope.released,
         "baseline": base_src,
     }
     # Persist the COMPLETE payload to a file (BENCH_OUT) — the committed

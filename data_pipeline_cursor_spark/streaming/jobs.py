@@ -69,7 +69,9 @@ def _prune_stale(max_age_s: int = 6 * 3600) -> None:
     import time
 
     cutoff = time.time() - max_age_s
-    for family in ("ckpt", "lakehouse", "serving", "serving-backfill", "late"):
+    for family in (
+        "ckpt", "lakehouse", "serving", "serving-backfill", "late", "annserve"
+    ):
         root = os.path.join(_WORK_ROOT, family)
         if not os.path.isdir(root):
             continue
@@ -737,7 +739,6 @@ def s_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     input); the operator shuffles once on the grouping key; the Python
     boundary is Arrow-batched.  Use watermark + timeouts (here NoTimeout)
     to bound keyspace when keys churn."""
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from pyspark.sql.window import Window
@@ -847,7 +848,6 @@ def s_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(keys) fixed-size state), but RocksDB keeps state off-heap and
     changelog-checkpoints incrementally — the right provider when keyspace
     outgrows executor heap."""
-    import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
@@ -2919,7 +2919,6 @@ def s_feed_paced(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     name = "pacedfeed_" + uuid.uuid4().hex[:8]
-    expected = None
     with stream_state_partitions(spark, _drain_state_parts(sf_dir)):
         # availableNow's single-batch fallback would collapse the paced
         # batches, so drive with a tight processingTime trigger and stop

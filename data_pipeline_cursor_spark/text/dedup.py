@@ -36,8 +36,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_cursor_spark.registry import register
+from data_pipeline_cursor_spark.registry import (
+    artifact,
+    read_artifact,
+    register,
+)
 from data_pipeline_cursor_spark.sources import load_table
+from data_pipeline_cursor_spark.sources.tables import table_path, tree_fingerprint
 from data_pipeline_cursor_spark.text.packing import duck_splits_cte, split_col
 
 
@@ -341,6 +346,7 @@ _DUCK_MINHASH_WIDE = f"""
 
 @register(
     "x_dedup_minhash_wide",
+    uses=("minhash_base",),
     # UNION of per-band equi-joins (hash-joinable) — see
     # x_dedup_minhash_narrow's oracle note for why the OR form is banned
     oracle=_DUCK_MINHASH_WIDE + "\n    " + _duck_band_union(WIDE_BANDS),
@@ -363,10 +369,9 @@ def dedup_minhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     the measured wide-config candidate counts scale ~linearly with the
     corpus.  Same plan shape — two equi-joins on 4-hash tuple keys,
     UNION, distinct; the extra md5 is one per shingle."""
-    art = shared_base_artifacts(spark, sf_dir)
+    sig, _sets = read_artifact("minhash_base", spark, sf_dir) or (None, None)
     return minhash_wide_candidates_df(
-        load_table(spark, sf_dir, "documents"),
-        sig=art[0] if art is not None else None,
+        load_table(spark, sf_dir, "documents"), sig=sig
     )
 
 
@@ -377,7 +382,7 @@ def minhash_wide_candidates_df(
     docs DataFrame with (doc_id, text) — the reusable core of
     x_dedup_minhash_wide, also consumed by x_split_leakage's
     injected-duplicate corpus.  Pass ``sig`` (doc_id, mh0..mh7) to reuse a
-    precomputed signature table (shared_base_artifacts); results are
+    precomputed signature table (the shared minhash_base); results are
     identical because the signature is a pure function of each doc's
     text."""
     if sig is None:
@@ -662,184 +667,52 @@ def duck_wide_verified_pairs(src: str = "documents") -> str:
 
 
 # ---------------------------------------------------------------------------
-# Opt-in SHARED pair pipeline (round-8 VERDICT item 5): eight operators
-# (x_dedup_cluster, x_canonical_pick, x_pagerank, x_triangles,
-# x_component_stats, x_graph_bfs, x_cross_source_dup,
-# x_dedup_threshold_sweep) consume the same wide-band signature →
-# candidate → exact-Jaccard pipeline (~30-60 s each at sf10).  With
-# sharing enabled (bench suite runs), the UNTHRESHOLDED scored candidate
-# table (doc_a, doc_b, jraw) is computed once per (session, sf_dir) and
-# localCheckpoint'ed; every consumer then derives its exact current
-# expression from the materialized column — the verified family filters
-# raw >= JACCARD_THRESHOLD, the sweep rounds then compares — so hashes
-# are unchanged by construction.  Default OFF: per-query standalone
-# paths (including their plan shapes under test) are untouched.
-_PAIR_SHARING = False
-_SCORED_CACHE: dict[tuple, tuple] = {}
-# (sf_dir, documents fingerprint) → (session, sig8 df, shingle-sets df):
-# the PER-DOCUMENT artifacts every minhash pipeline starts from.  A doc's
-# signature and shingle set depend only on its own text — never on the
-# corpus around it — so the BASE table's artifacts are reusable not just
-# by base-corpus pipelines but by every DERIVED corpus the registry
-# builds from the same rows (x_split_leakage's injected copies carry the
-# same text under a re-keyed id; x_curation_pipeline's gated corpus is an
-# id-preserving subset).  At sf10 the signature pass alone is ~33 s and
-# the set projection ~15 s, paid once here instead of once per pipeline.
-_BASE_ART_CACHE: dict[tuple, tuple] = {}
+# Shared artifacts (round-8 VERDICT item 5): the data-heavy prefixes the
+# dedup-graph family and the derived minhash pipelines start from (~30-60 s
+# each at sf10), eagerly localCheckpoint'ed — see registry.ArtifactScope.
 
 
-def enable_pair_sharing(on: bool = True) -> None:
-    """Turn the per-(session, sf_dir) scored-candidate and base-artifact
-    memos on/off.  Turning it off drops both memos (the checkpoint blocks
-    are freed by the session's ContextCleaner once unreferenced)."""
-    global _PAIR_SHARING
-    _PAIR_SHARING = on
-    if not on:
-        _SCORED_CACHE.clear()
-        _BASE_ART_CACHE.clear()
+def _documents_stamp(sf_dir: str) -> str:
+    # Data-file fingerprint, not the table's own inode stat: an in-place
+    # part-file overwrite leaves a DIRECTORY's mtime+size unchanged
+    # (round-9 ADVICE item 2 — the sf1/sf10 fixtures are directories).
+    # Without it a long-lived session would silently serve pre-rewrite
+    # pairs from a regenerated documents fixture at the same path.
+    return tree_fingerprint(table_path(sf_dir, "documents"))
 
 
-# Registered queries that read the shared scored-candidate memo when
-# sharing is on (directly or through dedup_cluster/dedup_minhash_verified).
-# Suite runners use this to RELEASE the checkpoint once the block is done:
-# at sf10 the pinned blocks inflated an unrelated query that ran late in
-# the session 38 s → 111 s via block-manager residency (round-9 VERDICT
-# item 7).
-PAIR_SHARING_CONSUMERS = frozenset(
-    {
-        "x_canonical_pick",
-        "x_component_stats",
-        "x_cross_source_dup",
-        "x_dedup_cluster",
-        "x_dedup_minhash_verified",
-        "x_dedup_threshold_sweep",
-        "x_graph_bfs",
-        "x_graph_modularity",
-        "x_pagerank",
-        "x_pair_table",
-        "x_triangles",
-    }
-)
-
-
-def release_shared_pairs(spark=None) -> None:
-    """Drop the scored-candidate memo while leaving sharing ENABLED (a
-    later consumer would recompute).  Freeing the localCheckpoint blocks
-    is the ContextCleaner's job once the JVM references die — a driver
-    GC nudge makes that prompt instead of eventual."""
-    _SCORED_CACHE.clear()
-    if spark is not None:
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass  # cleanup is best-effort; the cleaner will get there
-
-
-# Registered queries that read the shared BASE-ARTIFACT memo when sharing
-# is on: the five derived/parameterized minhash pipelines that cannot ride
-# the scored-candidate checkpoint (different corpus or different band
-# config) but share its per-document prefix, plus the wide-candidate query
-# itself.  Same release discipline as PAIR_SHARING_CONSUMERS — the shingle
-# sets are the block-manager-resident bulk (round-9 VERDICT item 7).
-BASE_ARTIFACT_CONSUMERS = frozenset(
-    {
-        "x_curation_pipeline",
-        "x_dedup_containment",
-        "x_dedup_incremental",
-        "x_dedup_minhash_wide",
-        "x_minhash_accuracy",
-        "x_split_leakage",
-    }
-)
-
-
-def release_shared_base_artifacts(spark=None) -> None:
-    """Drop the base-artifact memo while leaving sharing ENABLED (a later
-    consumer would recompute)."""
-    _BASE_ART_CACHE.clear()
-    if spark is not None:
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass  # cleanup is best-effort; the cleaner will get there
-
-
-def shared_base_artifacts(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame] | None:
-    """(8-hash signatures, shingle sets) over the BASE documents table
-    when sharing is enabled (None otherwise) — both eagerly
-    localCheckpoint'ed, keyed and invalidated exactly like
-    shared_scored_candidates.  Derived corpora reconstruct their own
-    artifacts from these with id arithmetic instead of re-hashing text:
-    same-text copies keep their signature under a re-keyed id, subsets
-    are an id join, and a 4-hash signature is a projection of the 8-hash
-    one (mh0..3 come from the same md5 slices)."""
-    if not _PAIR_SHARING:
-        return None
-    from data_pipeline_cursor_spark.sources.tables import table_path, tree_fingerprint
-
-    key = (sf_dir, tree_fingerprint(table_path(sf_dir, "documents")))
-    hit = _BASE_ART_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1], hit[2]
-    for k in [
-        k
-        for k, v in _BASE_ART_CACHE.items()
-        if k[0] == sf_dir or v[0] is not spark
-    ]:
-        del _BASE_ART_CACHE[k]
+@artifact("minhash_base", _documents_stamp)
+def _minhash_base(spark: SparkSession, sf_dir: str):
+    """(8-hash signatures, shingle sets) over the BASE documents table:
+    the PER-DOCUMENT artifacts every minhash pipeline starts from.  A
+    doc's signature and shingle set depend only on its own text — never on
+    the corpus around it — so they serve every DERIVED corpus the registry
+    builds from the same rows by id arithmetic instead of re-hashing text:
+    x_split_leakage's injected copies keep their signature under a
+    re-keyed id, x_curation_pipeline's gated corpus is an id join, and a
+    4-hash signature is a projection of the 8-hash one (mh0..3 come from
+    the same md5 slices).  At sf10 the signature pass alone is ~33 s and
+    the set projection ~15 s, paid once instead of once per pipeline."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     sig = _minhash_signature(docs, 8).localCheckpoint(eager=True)
     sets = docs.select(
         "doc_id", F.array_distinct(shingles_col(tokens_col())).alias("ss")
     ).localCheckpoint(eager=True)
-    _BASE_ART_CACHE[key] = (spark, sig, sets)
     return sig, sets
 
 
-def shared_scored_candidates(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame | None:
-    """The memoized scored candidate table when sharing is enabled (None
-    otherwise).  Keyed by (sf_dir, documents mtime+size) and bound to the
-    owning SparkSession — a different session recomputes rather than
-    touching another session's checkpoint blocks, and a REGENERATED
-    documents fixture at the same path invalidates naturally (the same
-    mtime+size discipline as write_landing_fixture; without it a
-    long-lived session would silently serve pre-rewrite pairs)."""
-    if not _PAIR_SHARING:
-        return None
-    from data_pipeline_cursor_spark.sources.tables import table_path, tree_fingerprint
-
-    # Data-file fingerprint, not the table's own inode stat: an in-place
-    # part-file overwrite leaves a DIRECTORY's mtime+size unchanged
-    # (round-9 ADVICE item 2 — the sf1/sf10 fixtures are directories).
-    key = (sf_dir, tree_fingerprint(table_path(sf_dir, "documents")))
-    hit = _SCORED_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    # Evict superseded entries before inserting (round-9 ADVICE item 1):
-    # a regenerated fixture at the same sf_dir, or a dead SparkSession,
-    # would otherwise keep pinning its localCheckpoint blocks for the
-    # rest of the process.
-    for k in [
-        k
-        for k, (owner, _df) in _SCORED_CACHE.items()
-        if k[0] == sf_dir or owner is not spark
-    ]:
-        del _SCORED_CACHE[k]
-    docs = load_table(spark, sf_dir, "documents")
-    # build from the shared per-document artifacts (computed here if this
-    # is the session's first sharing consumer): the scored checkpoint
-    # itself is tiny (candidate-grain), the artifacts carry the bulk
-    art = shared_base_artifacts(spark, sf_dir)
-    sig, sets = art if art is not None else (None, None)
-    sc = scored_candidates_df(docs, sig=sig, sets=sets).localCheckpoint(
-        eager=True
-    )
-    _SCORED_CACHE[key] = (spark, sc)
-    return sc
+@artifact("scored_pairs", _documents_stamp, needs=("minhash_base",))
+def _scored_pairs(spark: SparkSession, sf_dir: str, base) -> DataFrame:
+    """The UNTHRESHOLDED scored candidate table (doc_a, doc_b, jraw):
+    every consumer derives its exact current expression from the
+    materialized column — the verified family filters raw >=
+    JACCARD_THRESHOLD, the sweep rounds then compares — so hashes are
+    unchanged by construction.  The checkpoint itself is tiny
+    (candidate-grain); minhash_base carries the bulk."""
+    sig, sets = base
+    return scored_candidates_df(
+        load_table(spark, sf_dir, "documents"), sig=sig, sets=sets
+    ).localCheckpoint(eager=True)
 
 
 def _verified_pairs_checkpointed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -847,23 +720,18 @@ def _verified_pairs_checkpointed(spark: SparkSession, sf_dir: str) -> DataFrame:
     x_dedup_minhash_verified's wide-band + exact-Jaccard-verified pairs,
     eagerly localCheckpoint'ed (materialized AND lineage-truncated) so
     iterative consumers don't re-run the signature/verify pipeline per
-    reference.  Under enable_pair_sharing the pairs are a cheap filter
+    reference.  Inside an artifact scope the pairs are a cheap filter
     over the session's shared scored-candidate checkpoint instead of a
     per-consumer pipeline run."""
-    sc = shared_scored_candidates(spark, sf_dir)
-    if sc is not None:
-        return sc.filter(F.col("jraw") >= JACCARD_THRESHOLD).select(
-            "doc_a", "doc_b"
-        )
-    return (
-        dedup_minhash_verified(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
+    pairs = dedup_minhash_verified(spark, sf_dir).select("doc_a", "doc_b")
+    if read_artifact("scored_pairs", spark, sf_dir) is not None:
+        return pairs
+    return pairs.localCheckpoint(eager=True)
 
 
 @register(
     "x_pair_table",
+    uses=("scored_pairs",),
     oracle=f"""
     WITH {_DUCK_WIDE_VERIFIED_PAIRS}
     SELECT doc_a,
@@ -908,6 +776,7 @@ def pair_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x_dedup_cluster",
+    uses=("scored_pairs",),
     oracle=f"""
     WITH RECURSIVE {_DUCK_WIDE_VERIFIED_PAIRS},
     edges AS (
@@ -956,7 +825,7 @@ def dedup_cluster(
     (x_canonical_pick passes one so cluster + PageRank share a single
     Jaccard computation — the x_pair_table pattern); default recomputes."""
     owns_pairs = pairs is None
-    if owns_pairs and shared_scored_candidates(spark, sf_dir) is not None:
+    if owns_pairs and read_artifact("scored_pairs", spark, sf_dir) is not None:
         # suite-run sharing: the checkpointed scored table already
         # materialized the data-heavy stage once for the whole session
         pairs = _verified_pairs_checkpointed(spark, sf_dir)
@@ -1079,7 +948,9 @@ _PAGERANK_ORACLE = f"""
 """
 
 
-@register("x_pagerank", oracle=_PAGERANK_ORACLE)
+@register(
+    "x_pagerank", oracle=_PAGERANK_ORACLE, uses=("scored_pairs",)
+)
 def pagerank(
     spark: SparkSession, sf_dir: str, pairs: DataFrame | None = None
 ) -> DataFrame:
@@ -1107,7 +978,9 @@ def pagerank(
     ``pairs``: an already-materialized (doc_a, doc_b) candidate table
     (x_canonical_pick shares one across cluster + PageRank); default
     recomputes and caches its own."""
-    if pairs is None and shared_scored_candidates(spark, sf_dir) is not None:
+    if pairs is None and (
+        read_artifact("scored_pairs", spark, sf_dir) is not None
+    ):
         pairs = _verified_pairs_checkpointed(spark, sf_dir)  # suite sharing
     elif pairs is None:
         pairs = (
@@ -1159,6 +1032,7 @@ def pagerank(
 
 @register(
     "x_minhash_accuracy",
+    uses=("minhash_base",),
     # candidate pairs via per-band equi-joins + UNION (hash-joinable; the
     # OR form nested-loops — x_dedup_minhash_narrow oracle note), then
     # re-join the signatures to count agreeing components
@@ -1207,7 +1081,7 @@ def minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs); the exact-Jaccard verification touches only candidate rows —
     O(corpus + candidates), the same bound as x_dedup_jaccard."""
     docs = load_table(spark, sf_dir, "documents")
-    art = shared_base_artifacts(spark, sf_dir)
+    art = read_artifact("minhash_base", spark, sf_dir)
     if art is not None:
         # a 4-hash signature is a projection of the shared 8-hash one:
         # mh0..3 are the same md5 slices in both widths
@@ -1345,7 +1219,9 @@ _CANONICAL_ORACLE = _CANONICAL_PREFIX_ORACLE.replace(
 )
 
 
-@register("x_canonical_pick", oracle=_CANONICAL_ORACLE)
+@register(
+    "x_canonical_pick", oracle=_CANONICAL_ORACLE, uses=("scored_pairs",)
+)
 def canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical-copy selection — the dedup stack's capstone composition:
     connected components label every near-dup cluster (x_dedup_cluster),
@@ -1375,6 +1251,7 @@ def canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x_triangles",
+    uses=("scored_pairs",),
     oracle=f"""
     WITH {_DUCK_WIDE_VERIFIED_PAIRS},
     tri AS (
@@ -1429,6 +1306,7 @@ def triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x_split_leakage",
+    uses=("minhash_base",),
     oracle=f"""
     WITH corpus AS (
         SELECT doc_id, text FROM documents
@@ -1484,20 +1362,16 @@ def split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signature/shingle set is a pure per-document function of the text —
     # so the widened corpus's artifacts derive from the shared base ones
     # by id arithmetic, no re-hashing (identical values by construction)
-    art = shared_base_artifacts(spark, sf_dir)
+    art = read_artifact("minhash_base", spark, sf_dir)
     sig = sets = None
     if art is not None:
-        sig_b, sets_b = art
-        is_copy = F.col("doc_id") % 5 == 0
-        sig = sig_b.unionByName(
-            sig_b.filter(is_copy).withColumn(
-                "doc_id", _rekey_synthetic(F.col("doc_id"))
+        sig, sets = (
+            t.unionByName(
+                t.filter(F.col("doc_id") % 5 == 0).withColumn(
+                    "doc_id", _rekey_synthetic(F.col("doc_id"))
+                )
             )
-        )
-        sets = sets_b.unionByName(
-            sets_b.filter(is_copy).withColumn(
-                "doc_id", _rekey_synthetic(F.col("doc_id"))
-            )
+            for t in art
         )
     pairs = minhash_verified_pairs_df(corpus, sig=sig, sets=sets)
     edges = pairs.select(
@@ -1528,6 +1402,7 @@ def split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x_dedup_incremental",
+    uses=("minhash_base",),
     # per-band equi-joins + UNION (hash-joinable; the OR form
     # nested-loops — x_dedup_minhash_narrow oracle note)
     oracle=_DUCK_MINHASH_WIDE
@@ -1558,7 +1433,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     background rate instead of inheriting the narrow-band quadratic one
     (round-6 VERDICT weak item)."""
     docs = load_table(spark, sf_dir, "documents")
-    art = shared_base_artifacts(spark, sf_dir)
+    art = read_artifact("minhash_base", spark, sf_dir)
     sig = art[0] if art is not None else _minhash_signature(docs, 8).cache()
     is_new = F.col("doc_id") % 10 == 7
     new_sig = sig.filter(is_new)
@@ -1588,6 +1463,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x_dedup_minhash_verified",
+    uses=("scored_pairs",),
     oracle=f"""
     WITH {_DUCK_WIDE_VERIFIED_PAIRS}
     SELECT doc_a, doc_b, jaccard FROM pairs
@@ -1608,7 +1484,7 @@ def dedup_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB: two equi-joins on 4-hash band tuples + a candidate-sized
     shingle-set join; no stage is quadratic in the corpus."""
-    sc = shared_scored_candidates(spark, sf_dir)
+    sc = read_artifact("scored_pairs", spark, sf_dir)
     if sc is not None:
         return sc.filter(F.col("jraw") >= JACCARD_THRESHOLD).select(
             "doc_a", "doc_b", F.round("jraw", 4).alias("jaccard")
@@ -1630,7 +1506,7 @@ def scored_candidates_df(
     rounding equals the historical inline expressions exactly).
 
     ``sig``/``sets`` accept precomputed per-document artifacts
-    (shared_base_artifacts, or a derivation for a derived corpus); when
+    (the shared minhash_base, or a derivation for a derived corpus); when
     given they replace the in-plan computation — identical results, both
     are pure per-document functions of the text."""
     cand = minhash_wide_candidates_df(docs, sig=sig)
@@ -1677,6 +1553,7 @@ CONTAINMENT_THRESHOLD = 0.7  # |A∩B|/|smaller side| for subset-style dup
 
 @register(
     "x_dedup_containment",
+    uses=("minhash_base",),
     oracle=f"""
     WITH {_DUCK_WIDE_CAND_SETS},
     cont AS (
@@ -1719,13 +1596,9 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes bands over the SMALLER doc's shingles (prefix bands) — the
     detector here scores whatever candidate family feeds it."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    art = shared_base_artifacts(spark, sf_dir)
-    cand = minhash_wide_candidates_df(
-        docs, sig=art[0] if art is not None else None
-    )
-    if art is not None:
-        sets = art[1]
-    else:
+    sig, sets = read_artifact("minhash_base", spark, sf_dir) or (None, None)
+    cand = minhash_wide_candidates_df(docs, sig=sig)
+    if sets is None:
         sets = docs.select(
             "doc_id",
             F.array_distinct(shingles_col(tokens_col())).alias("ss"),
@@ -2078,6 +1951,7 @@ def dup_inflation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x_component_stats",
+    uses=("scored_pairs",),
     oracle=f"""
     WITH RECURSIVE {_DUCK_WIDE_VERIFIED_PAIRS},
     edges AS (
@@ -2132,6 +2006,7 @@ BFS_MAX_HOPS = 4  # bounded radius: guarantees SQL recursion terminates
 
 @register(
     "x_graph_bfs",
+    uses=("scored_pairs",),
     oracle=f"""
     WITH RECURSIVE {duck_wide_verified_pairs()},
     edges AS (
@@ -2418,6 +2293,7 @@ SWEEP_THRESHOLDS = [0.5, 0.6, 0.7, 0.8, 0.9]
 
 @register(
     "x_dedup_threshold_sweep",
+    uses=("scored_pairs",),
     oracle=f"""
     WITH {_DUCK_WIDE_CAND_SETS},
     scored AS (
@@ -2460,7 +2336,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sweep is candidates × |thresholds| rows through one hash agg —
     count(distinct doc_b) expands to (threshold, doc_b) grain first,
     still candidate-bounded."""
-    scored_src = shared_scored_candidates(spark, sf_dir)
+    scored_src = read_artifact("scored_pairs", spark, sf_dir)
     if scored_src is None:
         scored_src = scored_candidates_df(
             load_table(spark, sf_dir, "documents")
@@ -2485,6 +2361,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x_cross_source_dup",
+    uses=("scored_pairs",),
     oracle=f"""
     WITH {_DUCK_WIDE_VERIFIED_PAIRS},
     tagged AS (
@@ -2649,6 +2526,7 @@ def line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x_graph_modularity",
+    uses=("scored_pairs",),
     oracle=f"""
     WITH {_DUCK_WIDE_VERIFIED_PAIRS},
     e AS (

@@ -37,13 +37,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_cursor_spark.registry import register
+from data_pipeline_cursor_spark.registry import read_artifact, register
 from data_pipeline_cursor_spark.sources import load_table
 from data_pipeline_cursor_spark.text.dedup import (
     duck_wide_verified_pairs,
     minhash_verified_pairs_df,
     phash,
-    shared_base_artifacts,
 )
 
 MIN_CHARS, MAX_CHARS = 50, 10_000
@@ -85,7 +84,7 @@ _ORACLE = f"""
 """
 
 
-@register("x_curation_pipeline", oracle=_ORACLE)
+@register("x_curation_pipeline", oracle=_ORACLE, uses=("minhash_base",))
 def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality gate → exact dedup → greedy near-dup drop → stratified
     sample → audit summary, as one lazy Spark plan (module docstring)."""
@@ -106,12 +105,11 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its per-document artifacts are an id join against the shared base
     # ones — no re-hashing (signature rows for shingle-less docs are
     # absent in both constructions, so the inner join is exact)
-    art = shared_base_artifacts(spark, sf_dir)
+    art = read_artifact("minhash_base", spark, sf_dir)
     sig = sets = None
     if art is not None:
         ids = exact_deduped.select("doc_id")
-        sig = art[0].join(ids, "doc_id")
-        sets = art[1].join(ids, "doc_id")
+        sig, sets = (t.join(ids, "doc_id") for t in art)
     dropped = (
         minhash_verified_pairs_df(exact_deduped, sig=sig, sets=sets)
         .select(F.col("doc_b").alias("doc_id"))

@@ -1994,53 +1994,36 @@ def test_derived_n_planes_matches_sql_rule():
 
 
 def test_pair_sharing_preserves_hashes(spark):
-    """enable_pair_sharing (the round-9 suite-run amortization): every
-    consumer of the shared scored-candidate checkpoint must hash-match
-    its DuckDB oracle EXACTLY as in standalone mode — the shared table
+    """Suite-run artifact sharing (the round-9 amortization): every query
+    that declares a shared artifact with ``uses=`` must hash-match its
+    DuckDB oracle EXACTLY as in standalone mode — the shared scored table
     carries the unthresholded raw score and each consumer applies its
-    historical filter/round, so sharing must be invisible in results.
-    Also pins that the memo actually engages (one entry per sf_dir) and
-    clears on disable."""
-    from data_pipeline_cursor_spark.registry import get_oracles
-    from data_pipeline_cursor_spark.text import dedup
+    historical filter/round, and derived corpora rebuild their artifacts
+    from the shared per-document ones (re-key union, id-subset join,
+    4-hash projection), so sharing must be invisible in results.  Also
+    pins that each declared artifact is in the memo while its reader runs
+    and that the memo is empty once the scope exits."""
+    from data_pipeline_cursor_spark.registry import (
+        ArtifactScope,
+        get_oracles,
+        get_uses,
+    )
     from tests.oracle_harness import compare_query
 
-    consumers = [
-        "x_dedup_minhash_verified",
-        "x_dedup_cluster",
-        "x_pagerank",
-        "x_canonical_pick",
-        "x_triangles",
-        "x_component_stats",
-        "x_graph_bfs",
-        "x_cross_source_dup",
-        "x_dedup_threshold_sweep",
-        # round-10 base-artifact consumers: derived/parameterized
-        # pipelines that rebuild their corpus artifacts from the shared
-        # per-document signature/set tables (re-key union, id-subset
-        # join, 4-hash projection) instead of re-hashing text — each must
-        # hash-match its oracle exactly as standalone
-        "x_dedup_minhash_wide",
-        "x_minhash_accuracy",
-        "x_dedup_incremental",
-        "x_dedup_containment",
-        "x_split_leakage",
-        "x_curation_pipeline",
-    ]
+    uses = get_uses()
+    assert len(uses) >= 17, sorted(uses)
     oracles = get_oracles()
     qs = get_queries()
-    dedup.enable_pair_sharing(True)
-    try:
-        for name in consumers:
-            compare_query(spark, name, qs[name], oracles[name], SF_ORACLE)
-        # memo engaged — keyed by (sf_dir, documents mtime, size) since
-        # the round-9 staleness fix
-        assert any(k[0] == SF_ORACLE for k in dedup._SCORED_CACHE)
-        assert any(k[0] == SF_ORACLE for k in dedup._BASE_ART_CACHE)
-    finally:
-        dedup.enable_pair_sharing(False)
-    assert not dedup._SCORED_CACHE  # disable clears the memo
-    assert not dedup._BASE_ART_CACHE
+    with ArtifactScope(sorted(uses)) as scope:
+        for name in scope.order:
+            with scope.running(name):
+                compare_query(spark, name, qs[name], oracles[name], SF_ORACLE)
+                for art in uses[name]:
+                    assert any(
+                        k[:2] == (art, SF_ORACLE) for k in scope.memo
+                    ), (name, art)
+    assert scope.memo == {}
+    assert all(scope.released.values()), scope.released
 
 
 def test_embed_outliers_tournament_is_exact(spark):

@@ -1171,3 +1171,29 @@ def test_snapshot_feed_splits_huge_commits_and_flags_expired_offsets(
     snapshot_expire(tdir, retain_last=1)        # v1, v2 gone
     with pytest.raises(OffsetExpiredError, match="expired"):
         reader.partitions({"version": 1}, {"version": 3})
+
+
+def test_prune_stale_removes_aged_ann_serve_outputs(tmp_path, monkeypatch):
+    """s_ann_serve writes a fresh uuid dir under the annserve family on
+    every run; the once-per-process prune must age those out like the
+    other uuid families, and keep a fresh one."""
+    import os
+    import time
+
+    from data_pipeline_cursor_spark.streaming import jobs
+
+    monkeypatch.setattr(jobs, "_WORK_ROOT", str(tmp_path))
+    monkeypatch.setattr(jobs, "_PRUNED", False)
+    old = tmp_path / "annserve" / "0a1b2c3d"
+    fresh = tmp_path / "annserve" / "4e5f6a7b"
+    for d in (old, fresh):
+        d.mkdir(parents=True)
+        (d / "part-0.parquet").write_bytes(b"x")
+    aged = time.time() - 7 * 3600
+    os.utime(old / "part-0.parquet", (aged, aged))
+    os.utime(old, (aged, aged))
+
+    jobs._prune_stale()
+
+    assert not old.exists()
+    assert fresh.exists()
