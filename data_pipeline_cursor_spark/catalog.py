@@ -406,7 +406,6 @@ def compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.text.dedup import phash
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "value")
     frag_dir = _work_dir(sf_dir, "frag")
@@ -421,12 +420,7 @@ def compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     frag.coalesce(target).write.mode("overwrite").parquet(compact_dir)
 
     out = spark.read.schema(ev.schema).parquet(compact_dir)
-    return out.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "cp")).alias(
-            "checksum"
-        ),
-    )
+    return _count_checksum(out, "cp")
 
 
 # --- x_zorder_layout -------------------------------------------------------
@@ -1385,12 +1379,10 @@ def snapshot_read(
     )
 
 
-def snapshot_events_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once fixture table: the events table committed in
-    SNAPSHOT_COMMITS deterministic slices (commit k = event_id % 3 ==
-    k-1), so any version's content is replayable in the oracle as a
-    plain residue predicate.  Keyed by (pid, sf, fixture fingerprint) —
-    same reuse discipline as the landing fixtures."""
+def _fixture_dir(sf_dir: str, name: str) -> str:
+    """Work dir ``<name>-<fp>`` of a fixture derived from the events
+    table, keyed by (pid, sf, the events table's content fingerprint) —
+    the same reuse discipline as the landing fixtures."""
     from data_pipeline_cursor_spark.sources.formats import _work_dir
     from data_pipeline_cursor_spark.sources.tables import (
         table_path,
@@ -1398,15 +1390,100 @@ def snapshot_events_table(spark: SparkSession, sf_dir: str) -> str:
     )
 
     fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    table_dir = _work_dir(sf_dir, f"snaptable-{fp}")
-    if len(snapshot_versions(table_dir)) >= SNAPSHOT_COMMITS:
+    return _work_dir(sf_dir, f"{name}-{fp}")
+
+
+FixtureStep = Callable[[str, DataFrame], object]
+
+
+def _fixture_table(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    steps: list[FixtureStep],
+    cols: tuple[str, ...] = ("event_id", "event_type"),
+) -> str:
+    """Build, or resume building, a manifest-versioned fixture table and
+    return its dir.  ``steps[i](table_dir, ev)`` commits exactly version
+    ``i + 1`` from ``ev``, the events table's ``cols``; only the steps
+    after the latest committed version run, so a build interrupted after
+    any commit resumes where it stopped instead of re-committing.  A
+    table at or past ``len(steps)`` versions is complete (a later
+    maintenance commit, such as a shared table's compaction, does not
+    reopen it) and costs no Spark job: ``ev`` is built only when a step
+    is left.  A step that commits no version or more than one
+    fail-stops, because resuming by version number is sound only while
+    version ``i + 1`` is step ``i``'s."""
+    table_dir = _fixture_dir(sf_dir, name)
+    last = max(snapshot_versions(table_dir), default=0)
+    if last >= len(steps):
         return table_dir
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    for k in range(1, SNAPSHOT_COMMITS + 1):
-        snapshot_commit(
-            spark, table_dir, ev.filter(F.col("event_id") % 3 == k - 1)
-        )
+    ev = load_table(spark, sf_dir, "events").select(*cols)
+    for i in range(last, len(steps)):
+        steps[i](table_dir, ev)
+        now = max(snapshot_versions(table_dir), default=0)
+        if now != i + 1:
+            raise RuntimeError(
+                f"fixture {name}: step {i + 1} left {table_dir} at "
+                f"version {now}, expected {i + 1}"
+            )
     return table_dir
+
+
+def _commit_where(spark: SparkSession, cond=None) -> FixtureStep:
+    """Fixture step: append ``ev`` (the rows matching ``cond``)."""
+    return lambda d, ev: snapshot_commit(
+        spark, d, ev if cond is None else ev.filter(cond)
+    )
+
+
+def _delete_where(spark: SparkSession, cond) -> FixtureStep:
+    """Fixture step: one equality-delete commit of the keys of the ``ev``
+    rows matching ``cond``."""
+    return lambda d, ev: snapshot_delete_keys(
+        spark, d, ev.filter(cond).select("event_id"), key="event_id"
+    )
+
+
+def _residue_commits(
+    spark: SparkSession, n: int = SNAPSHOT_COMMITS
+) -> list[FixtureStep]:
+    """Fixture steps committing ``event_id % 3 == k`` for k < ``n``, so
+    version v holds the residues below v — replayable in an oracle as a
+    plain residue predicate."""
+    return [_commit_where(spark, F.col("event_id") % 3 == k) for k in range(n)]
+
+
+def _mor_steps(spark: SparkSession) -> list[FixtureStep]:
+    """Fixture steps of the merge-on-read tables: the events at v1, then
+    equality deletes of event_id % 11 = 0 (v2) and % 13 = 0 (v3)."""
+    return [_commit_where(spark)] + [
+        _delete_where(spark, F.col("event_id") % m == 0) for m in (11, 13)
+    ]
+
+
+def _count_checksum(
+    df: DataFrame, seed: str, *by, n: str = "n_rows"
+) -> DataFrame:
+    """Per-``by`` row count ``n`` and the order-insensitive checksum
+    ``bit_xor(phash(event_id, seed))`` — the aggregate the lakehouse
+    oracles replay, so a lost, doubled or leaked row flips it."""
+    from data_pipeline_cursor_spark.text.dedup import phash
+
+    return df.groupBy(*by).agg(
+        F.count(F.lit(1)).alias(n),
+        F.bit_xor(phash(F.col("event_id").cast("string"), seed)).alias(
+            "checksum"
+        ),
+    )
+
+
+def snapshot_events_table(spark: SparkSession, sf_dir: str) -> str:
+    """The shared fixture table: the events table committed in
+    SNAPSHOT_COMMITS residue slices (commit k = event_id % 3 == k-1), so
+    any version's content is replayable in the oracle as a plain residue
+    predicate.  q_snapshot_compaction adds a rewrite version on top."""
+    return _fixture_table(spark, sf_dir, "snaptable", _residue_commits(spark))
 
 
 @register(
@@ -1437,16 +1514,9 @@ def time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain Parquet scan of a pinned file list, so pruning/pushdown and
     scan parallelism are unchanged from the live-table path — which is
     exactly why Iceberg time travel is cheap in production."""
-    from data_pipeline_cursor_spark.text.dedup import phash
-
     table_dir = snapshot_events_table(spark, sf_dir)
     snap = snapshot_read(spark, table_dir, version=2)
-    return snap.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "tt")).alias(
-            "checksum"
-        ),
-    )
+    return _count_checksum(snap, "tt", "event_type", n="n_events")
 
 
 def read_snapshot_sql(
@@ -1570,16 +1640,9 @@ def snapshot_changes_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: the file-list diff is driver-side metadata; the scan reads
     ONLY the delta files (here 2/3 of the table, in production typically
     a sliver), with pushdown/pruning intact — O(new data), not O(table)."""
-    from data_pipeline_cursor_spark.text.dedup import phash
-
     table_dir = snapshot_events_table(spark, sf_dir)
     delta = snapshot_changes(spark, table_dir, from_version=1, to_version=3)
-    return delta.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_new"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "sc")).alias(
-            "checksum"
-        ),
-    )
+    return _count_checksum(delta, "sc", "event_type", n="n_new")
 
 
 @register(
@@ -1616,30 +1679,16 @@ def mv_snapshot_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: refresh cost is O(delta + |MV|), not O(table) — the entire
     reason snapshot-based change tracking beats scheduled full
     recomputes for warehouse rollups."""
-    from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.sources.tables import (
-        table_path,
-        tree_fingerprint,
-    )
-    from data_pipeline_cursor_spark.text.dedup import phash
-
     table_dir = snapshot_events_table(spark, sf_dir)
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    mv_dir = _work_dir(sf_dir, f"snapmv-{fp}")
-    mv_path = os.path.join(mv_dir, "mv_v2")
+    mv_path = os.path.join(_fixture_dir(sf_dir, "snapmv"), "mv_v2")
 
-    def agg(df, seed):
-        return df.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.bit_xor(phash(F.col("event_id").cast("string"), seed)).alias(
-                "checksum"
-            ),
-        )
+    def agg(df):
+        return _count_checksum(df, "mv2", "event_type", n="n_events")
 
     if not os.path.exists(os.path.join(mv_path, "_SUCCESS")):
         # one-time MV materialization as of version 2 (the checkpointed
         # consumer's last refresh)
-        agg(snapshot_read(spark, table_dir, version=2), "mv2").write.mode(
+        agg(snapshot_read(spark, table_dir, version=2)).write.mode(
             "overwrite"
         ).parquet(mv_path)
     base = spark.read.parquet(mv_path).select(
@@ -1648,8 +1697,7 @@ def mv_snapshot_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("checksum").alias("b_c"),
     )
     delta = agg(
-        snapshot_changes(spark, table_dir, from_version=2, to_version=3),
-        "mv2",
+        snapshot_changes(spark, table_dir, from_version=2, to_version=3)
     ).select(
         "event_type",
         F.col("n_events").alias("d_n"),
@@ -1879,27 +1927,7 @@ def delete_files_metadata_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     one key too few/many, or bounds off by one at the envelope edge,
     flips the match).  This is how an operator audits MOR debt before
     scheduling the compaction that materializes it (A15's trade)."""
-    from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.sources.tables import (
-        table_path,
-        tree_fingerprint,
-    )
-
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    table_dir = _work_dir(sf_dir, f"snapdfm-{fp}")
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        snapshot_commit(spark, table_dir, ev)
-        versions = [1]
-    if versions[-1] < 3:
-        for mod in (11, 13)[versions[-1] - 1 :]:
-            snapshot_delete_keys(
-                spark,
-                table_dir,
-                ev.filter(F.col("event_id") % mod == 0).select("event_id"),
-                key="event_id",
-            )
+    table_dir = _fixture_table(spark, sf_dir, "snapdfm", _mor_steps(spark))
     meta = snapshot_delete_files_metadata(spark, table_dir, key="event_id")
     return meta.groupBy("delete_version").agg(
         F.sum("n_keys").alias("n_keys"),
@@ -1913,37 +1941,25 @@ EVOLUTION_RANGE = ("2024-01-14 00:00:00", "2024-01-18 00:00:00")
 
 
 def _evolution_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once partition-EVOLUTION fixture (A30): the events table's
-    first half committed hour(ts)-partitioned, the second half
-    day(ts)-partitioned — a production table that outgrew hourly
-    partitions and regrained without rewriting history."""
-    from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.sources.tables import (
-        table_path,
-        tree_fingerprint,
-    )
+    """Partition-EVOLUTION fixture (A30): the events table's first half
+    committed hour(ts)-partitioned, the second half day(ts)-partitioned —
+    a production table that outgrew hourly partitions and regrained
+    without rewriting history."""
+    split = F.lit(EVOLUTION_SPLIT).cast("timestamp")
 
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    table_dir = _work_dir(sf_dir, f"snapevol-{fp}")
-    versions = snapshot_versions(table_dir)
-    if len(versions) == 1:
-        raise RuntimeError(
-            f"partition-evolution fixture half-built at {table_dir} "
-            "(hour generation committed, day generation missing) — clear "
-            "the directory"
+    def generation(cond, grain):
+        return lambda d, ev: snapshot_commit_partitioned(
+            spark, d, ev.filter(cond), grain
         )
-    if not versions:
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id", "ts", "event_type"
-        )
-        split = F.lit(EVOLUTION_SPLIT).cast("timestamp")
-        snapshot_commit_partitioned(
-            spark, table_dir, ev.filter(F.col("ts") < split), "hour"
-        )
-        snapshot_commit_partitioned(
-            spark, table_dir, ev.filter(F.col("ts") >= split), "day"
-        )
-    return table_dir
+
+    return _fixture_table(
+        spark,
+        sf_dir,
+        "snapevol",
+        [generation(F.col("ts") < split, "hour"),
+         generation(F.col("ts") >= split, "day")],
+        cols=("event_id", "ts", "event_type"),
+    )
 
 
 def snapshot_metadata_count(
@@ -2229,17 +2245,10 @@ def snapshot_compaction_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     row anywhere in the rewrite would flip count or checksum.  The
     isolation half (old manifests byte-unchanged, pre-compaction reads
     identical, idempotent re-run) is pinned by the invariant test."""
-    from data_pipeline_cursor_spark.text.dedup import phash
-
     table_dir = snapshot_events_table(spark, sf_dir)
     v = snapshot_compact(spark, table_dir)
     snap = snapshot_read(spark, table_dir, version=v)
-    return snap.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "sk")).alias(
-            "checksum"
-        ),
-    )
+    return _count_checksum(snap, "sk", "event_type", n="n_events")
 
 
 def snapshot_expire(table_dir: str, retain_last: int = 1) -> dict:
@@ -2341,33 +2350,16 @@ def snapshot_expire_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit/compact/expire chain.  The destructive half (expired
     version unreadable, unreferenced files unlinked, retained reads
     byte-identical) is pinned by the invariant test."""
-    from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.sources.tables import (
-        table_path,
-        tree_fingerprint,
+    table_dir = _fixture_table(
+        spark,
+        sf_dir,
+        "snapexpire",
+        _residue_commits(spark) + [lambda d, ev: snapshot_compact(spark, d)],
     )
-    from data_pipeline_cursor_spark.text.dedup import phash
-
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    table_dir = _work_dir(sf_dir, f"snapexpire-{fp}")
-    versions = snapshot_versions(table_dir)
-    if not (len(versions) == 1 and versions[0] == SNAPSHOT_COMMITS + 1):
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id", "event_type"
-        )
-        for k in range(len(versions) + 1, SNAPSHOT_COMMITS + 1):
-            snapshot_commit(
-                spark, table_dir, ev.filter(F.col("event_id") % 3 == k - 1)
-            )
-        snapshot_compact(spark, table_dir)
-        snapshot_expire(table_dir, retain_last=1)
+    # a no-op once only the compaction version is left
+    snapshot_expire(table_dir, retain_last=1)
     snap = snapshot_read(spark, table_dir)
-    return snap.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "se")).alias(
-            "checksum"
-        ),
-    )
+    return _count_checksum(snap, "se", "event_type", n="n_events")
 
 
 def _file_key_bounds(
@@ -3445,6 +3437,101 @@ def snapshot_read_bucketed(
 MERGE_INSERT_OFFSET = 1_000_000_000  # insert keys live above every fixture id
 
 
+def _insert_safe_max_id(ev: DataFrame) -> int:
+    """max(event_id) of ``ev`` (a 1-row bounded collect), fail-stopping
+    unless MERGE_INSERT_OFFSET clears it: an "insert" key at or below an
+    existing id silently collides with an unmatched target key
+    (ADVICE r10)."""
+    max_id = ev.agg(F.max("event_id")).first()[0]
+    if max_id >= MERGE_INSERT_OFFSET:
+        raise ValueError(
+            f"max event_id {max_id} >= MERGE_INSERT_OFFSET "
+            f"{MERGE_INSERT_OFFSET}: insert keys would collide"
+        )
+    return max_id
+
+
+def _merge_changes(ev: DataFrame, cut: int | None = None) -> DataFrame:
+    """The fixture MERGE change batch over ``ev``: DELETE event_id % 5 = 0,
+    UPDATE % 5 = 1 to an 'upd_'-prefixed type, INSERT % 7 = 3 as new keys
+    MERGE_INSERT_OFFSET above.  ``cut=k`` scopes the batch to the lowest
+    k-th of the key range (event_id <= max_id // k), the clustered batch
+    of the pruned merges."""
+    max_id = _insert_safe_max_id(ev)
+    if cut is not None:
+        ev = ev.filter(F.col("event_id") <= max_id // cut)
+    deletes = ev.filter(F.col("event_id") % 5 == 0).select(
+        "event_id",
+        F.lit(None).cast("string").alias("event_type"),
+        F.lit(True).alias("_delete"),
+    )
+    updates = ev.filter(F.col("event_id") % 5 == 1).select(
+        "event_id",
+        F.concat(F.lit("upd_"), F.col("event_type")).alias("event_type"),
+        F.lit(False).alias("_delete"),
+    )
+    inserts = ev.filter(F.col("event_id") % 7 == 3).select(
+        (F.col("event_id") + MERGE_INSERT_OFFSET).alias("event_id"),
+        F.lit("ins").alias("event_type"),
+        F.lit(False).alias("_delete"),
+    )
+    return deletes.unionByName(updates).unionByName(inserts)
+
+
+def _clustered_merge(
+    spark: SparkSession, query: str, why: str, merge=snapshot_merge
+) -> FixtureStep:
+    """Fixture step: ``merge`` the low-eighth change batch, fail-stopping
+    unless it carried a data file by reference — otherwise the pruning
+    ``why`` names regressed."""
+
+    def step(d, ev):
+        v = merge(spark, d, _merge_changes(ev, cut=8), key="event_id")
+        m = _load_manifest(d, v)
+        if all(m["file_seqs"][f] == v for f in m["files"]):
+            raise AssertionError(
+                f"{query}: merge carried no file by reference — {why}"
+            )
+
+    return step
+
+
+def _range_slices(n: int, commit) -> list[FixtureStep]:
+    """Fixture steps committing ``ev`` in ``n`` disjoint event_id ranges
+    (``commit(table_dir, df)`` writes one), so per-commit footer bounds
+    are disjoint — the layout manifest-bounds merge skipping prunes.  The
+    key range is read once, by the first step that runs."""
+    top: list[int] = []
+
+    def step(k):
+        def run(d, ev):
+            if not top:
+                top.append(_insert_safe_max_id(ev) + 1)
+            lo, hi = k * top[0] // n, (k + 1) * top[0] // n
+            key = F.col("event_id")
+            commit(d, ev.filter((key >= lo) & (key < hi)))
+
+        return run
+
+    return [step(k) for k in range(n)]
+
+
+def _merge_fixture(spark: SparkSession, sf_dir: str) -> str:
+    """q_merge_upsert's table: the events at v1, the three-clause change
+    batch merged at v2 (q_change_feed diffs the two)."""
+    return _fixture_table(
+        spark,
+        sf_dir,
+        "snapmerge",
+        [
+            _commit_where(spark),
+            lambda d, ev: snapshot_merge(
+                spark, d, _merge_changes(ev), key="event_id"
+            ),
+        ],
+    )
+
+
 @register(
     "q_merge_upsert",
     oracle=f"""
@@ -3478,62 +3565,12 @@ def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     clause-exact semantics: a resurrected delete, missed update, lost
     insert, or double-applied clause each flips count or checksum.
     Runs on its OWN fixture table (merge rewrites the visible snapshot;
-    the shared 3-commit table must keep serving q_time_travel), and the
-    version guard makes re-runs read, not re-merge — idempotency a
-    bench repeat relies on.  Pre-merge time travel (version 1
-    unchanged) is pinned by the invariant test."""
-    from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.sources.tables import (
-        table_path,
-        tree_fingerprint,
-    )
-    from data_pipeline_cursor_spark.text.dedup import phash
-
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    table_dir = _work_dir(sf_dir, f"snapmerge-{fp}")
-    versions = snapshot_versions(table_dir)
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    if not versions:
-        snapshot_commit(spark, table_dir, ev)
-        versions = [1]
-    if versions[-1] == 1:
-        # the insert-key offset must clear every existing id or an
-        # "insert" silently collides with an unmatched target key
-        # (ADVICE r10) — 1-row bounded collect, fail-stop
-        max_id = ev.agg(F.max("event_id")).first()[0]
-        if max_id >= MERGE_INSERT_OFFSET:
-            raise ValueError(
-                f"max event_id {max_id} >= MERGE_INSERT_OFFSET "
-                f"{MERGE_INSERT_OFFSET}: insert keys would collide"
-            )
-        deletes = ev.filter(F.col("event_id") % 5 == 0).select(
-            "event_id",
-            F.lit(None).cast("string").alias("event_type"),
-            F.lit(True).alias("_delete"),
-        )
-        updates = ev.filter(F.col("event_id") % 5 == 1).select(
-            "event_id",
-            F.concat(F.lit("upd_"), F.col("event_type")).alias("event_type"),
-            F.lit(False).alias("_delete"),
-        )
-        inserts = ev.filter(F.col("event_id") % 7 == 3).select(
-            (F.col("event_id") + MERGE_INSERT_OFFSET).alias("event_id"),
-            F.lit("ins").alias("event_type"),
-            F.lit(False).alias("_delete"),
-        )
-        snapshot_merge(
-            spark,
-            table_dir,
-            deletes.unionByName(updates).unionByName(inserts),
-            key="event_id",
-        )
-    snap = snapshot_read(spark, table_dir)
-    return snap.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "mg")).alias(
-            "checksum"
-        ),
-    )
+    the shared 3-commit table must keep serving q_time_travel);
+    _fixture_table resumes after the last committed version, so re-runs
+    read, not re-merge — idempotency a bench repeat relies on.  Pre-merge
+    time travel (version 1 unchanged) is pinned by the invariant test."""
+    snap = snapshot_read(spark, _merge_fixture(spark, sf_dir))
+    return _count_checksum(snap, "mg", "event_type")
 
 
 @register(
@@ -3573,7 +3610,8 @@ def sort_compact_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds), and THEN the clustered low-eighth change batch merges.
     The builder fail-stops unless the post-compaction merge carried
     files by reference — the pruning that the layout, not the merge
-    code, had been blocking.
+    code, had been blocking.  A build interrupted between the compaction
+    and the merge resumes with the merge.
 
     The DuckDB oracle replays the scoped clauses algebraically (same
     algebra as q_merge_pruned, its own seed): a hash match proves the
@@ -3584,81 +3622,24 @@ def sort_compact_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustered but my table layout is not' — one range-shuffle rewrite
     converts every subsequent clustered MERGE from O(table) to
     O(touched files); production schedules exactly this pairing."""
-
-    from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.sources.tables import (
-        table_path,
-        tree_fingerprint,
+    table_dir = _fixture_table(
+        spark,
+        sf_dir,
+        "snapsort",
+        _residue_commits(spark)
+        + [
+            lambda d, ev: snapshot_compact(
+                spark, d, sort_by="event_id", min_files=8
+            ),
+            _clustered_merge(
+                spark,
+                "q_sort_compact_merge",
+                "the sort rewrite failed to enable skipping",
+            ),
+        ],
     )
-    from data_pipeline_cursor_spark.text.dedup import phash
-
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    table_dir = _work_dir(sf_dir, f"snapsort-{fp}")
-    versions = snapshot_versions(table_dir)
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    if len(versions) < 3:
-        for k in range(len(versions), 3):
-            snapshot_commit(
-                spark, table_dir, ev.filter(F.col("event_id") % 3 == k)
-            )
-        versions = snapshot_versions(table_dir)
-    if versions[-1] == 4:
-        # crash between the sort-compact commit (v4) and the merge (v5):
-        # falling through to the read path would silently serve the
-        # un-merged table as if the chain completed (ADVICE r11) — the
-        # fresh-uuid checkpointless builder cannot resume either half
-        raise RuntimeError(
-            f"q_sort_compact_merge: half-built fixture at {table_dir} "
-            "(sort compaction committed, merge missing) — clear the "
-            "directory"
-        )
-    if versions[-1] == 3:
-        v = snapshot_compact(
-            spark, table_dir, sort_by="event_id", min_files=8
-        )
-        max_id = ev.agg(F.max("event_id")).first()[0]
-        if max_id >= MERGE_INSERT_OFFSET:
-            raise ValueError(
-                f"max event_id {max_id} >= MERGE_INSERT_OFFSET "
-                f"{MERGE_INSERT_OFFSET}: insert keys would collide"
-            )
-        cut = max_id // 8
-        low = ev.filter(F.col("event_id") <= cut)
-        deletes = low.filter(F.col("event_id") % 5 == 0).select(
-            "event_id",
-            F.lit(None).cast("string").alias("event_type"),
-            F.lit(True).alias("_delete"),
-        )
-        updates = low.filter(F.col("event_id") % 5 == 1).select(
-            "event_id",
-            F.concat(F.lit("upd_"), F.col("event_type")).alias("event_type"),
-            F.lit(False).alias("_delete"),
-        )
-        inserts = low.filter(F.col("event_id") % 7 == 3).select(
-            (F.col("event_id") + MERGE_INSERT_OFFSET).alias("event_id"),
-            F.lit("ins").alias("event_type"),
-            F.lit(False).alias("_delete"),
-        )
-        mv = snapshot_merge(
-            spark,
-            table_dir,
-            deletes.unionByName(updates).unionByName(inserts),
-            key="event_id",
-        )
-        m = _load_manifest(table_dir, mv)
-        carried = [f for f in m["files"] if m["file_seqs"][f] != mv]
-        if not carried:
-            raise AssertionError(
-                "q_sort_compact_merge: post-compaction merge carried no "
-                "file — the sort rewrite failed to enable skipping"
-            )
     snap = snapshot_read(spark, table_dir)
-    return snap.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "so")).alias(
-            "checksum"
-        ),
-    )
+    return _count_checksum(snap, "so", "event_type")
 
 
 @register(
@@ -3689,39 +3670,25 @@ def snapshot_rollback_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     version's files — no data is read, copied, or moved, so restore
     time is independent of table size (the whole point of
     manifest-versioned layouts)."""
-    from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.sources.tables import (
-        table_path,
-        tree_fingerprint,
-    )
-    from data_pipeline_cursor_spark.text.dedup import phash
-
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    table_dir = _work_dir(sf_dir, f"snaproll-{fp}")
-    versions = snapshot_versions(table_dir)
-    if versions != [1, 2, 3, 4]:
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id", "event_type"
-        )
-        for k in (0, 1):
-            snapshot_commit(
-                spark, table_dir, ev.filter(F.col("event_id") % 3 == k)
-            )
-        snapshot_commit(
-            spark,
-            table_dir,
-            ev.filter(F.col("event_id") % 3 == 2).select(
-                "event_id", F.lit("corrupt").alias("event_type")
+    corrupt = F.lit("corrupt").alias("event_type")
+    table_dir = _fixture_table(
+        spark,
+        sf_dir,
+        "snaproll",
+        _residue_commits(spark, 2)
+        + [
+            lambda d, ev: snapshot_commit(
+                spark,
+                d,
+                ev.filter(F.col("event_id") % 3 == 2).select(
+                    "event_id", corrupt
+                ),
             ),
-        )
-        snapshot_rollback(spark, table_dir, to_version=2)
-    snap = snapshot_read(spark, table_dir)
-    return snap.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "rb")).alias(
-            "checksum"
-        ),
+            lambda d, ev: snapshot_rollback(spark, d, to_version=2),
+        ],
     )
+    snap = snapshot_read(spark, table_dir)
+    return _count_checksum(snap, "rb", "event_type")
 
 
 @register(
@@ -3750,35 +3717,22 @@ def orphan_cleanup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: reconciliation is O(files) driver metadata (manifest union
     vs directory walk) plus the unlinks; production runs it on a
     schedule with an age threshold so in-flight writers are safe."""
-    from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.sources.tables import (
-        table_path,
-        tree_fingerprint,
-    )
-    from data_pipeline_cursor_spark.text.dedup import phash
 
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    table_dir = _work_dir(sf_dir, f"snaporph-{fp}")
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    if not snapshot_versions(table_dir):
-        snapshot_commit(spark, table_dir, ev)
+    def commit_then_clean(d, ev):
+        snapshot_commit(spark, d, ev)
         # crashed writer: data files, no manifest
         ev.filter(F.col("event_id") % 5 == 0).write.mode(
             "overwrite"
-        ).parquet(os.path.join(table_dir, "data", "commit-crashed"))
-        res = remove_orphan_files(table_dir)
-        if res["deleted_files"] == 0:
+        ).parquet(os.path.join(d, "data", "commit-crashed"))
+        if remove_orphan_files(d)["deleted_files"] == 0:
             raise AssertionError(
                 "q_orphan_cleanup: expected the crashed commit's files "
                 "to be reclaimed — cleanup deleted nothing"
             )
+
+    table_dir = _fixture_table(spark, sf_dir, "snaporph", [commit_then_clean])
     snap = snapshot_read(spark, table_dir)
-    return snap.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "oc")).alias(
-            "checksum"
-        ),
-    )
+    return _count_checksum(snap, "oc", "event_type")
 
 
 @register(
@@ -3819,95 +3773,71 @@ def wap_publish_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries scan only the staged files; publish is one atomic manifest
     rename — this is exactly why WAP is the production pattern instead
     of write-then-delete-on-failure."""
-    from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.sources.tables import (
-        table_path,
-        tree_fingerprint,
-    )
-    from data_pipeline_cursor_spark.text.dedup import phash
 
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    table_dir = _work_dir(sf_dir, f"snapwap-{fp}")
-    versions = snapshot_versions(table_dir)
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    if not versions:
-        snapshot_commit(spark, table_dir, ev.filter(F.col("event_id") % 2 == 0))
-        versions = [1]
-    if versions[-1] == 1:
+    def audited_publish(d, ev):
         dirty = ev.filter(F.col("event_id") % 2 == 1).select(
             "event_id",
             F.when(F.col("event_id") % 10 == 3, F.lit("corrupt"))
             .otherwise(F.col("event_type"))
             .alias("event_type"),
         )
-        snapshot_stage(spark, table_dir, dirty, name="load1")
+        snapshot_stage(spark, d, dirty, name="load1")
         n_bad = (
-            staged_read(spark, table_dir, "load1")
+            staged_read(spark, d, "load1")
             .filter(F.col("event_type") == "corrupt")
             .count()
         )
         if n_bad:  # audit REJECTS: discard, clean, re-stage
-            discard_staged(table_dir, "load1")
+            discard_staged(d, "load1")
             clean = dirty.filter(F.col("event_type") != "corrupt")
-            snapshot_stage(spark, table_dir, clean, name="load1_fixed")
+            snapshot_stage(spark, d, clean, name="load1_fixed")
             n_bad2 = (
-                staged_read(spark, table_dir, "load1_fixed")
+                staged_read(spark, d, "load1_fixed")
                 .filter(F.col("event_type") == "corrupt")
                 .count()
             )
             if n_bad2:
                 raise AssertionError("q_wap_publish: audit failed twice")
-            snapshot_publish(table_dir, "load1_fixed")
+            snapshot_publish(d, "load1_fixed")
         else:
-            snapshot_publish(table_dir, "load1")
-    snap = snapshot_read(spark, table_dir)
-    return snap.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "wp")).alias(
-            "checksum"
-        ),
+            snapshot_publish(d, "load1")
+
+    table_dir = _fixture_table(
+        spark,
+        sf_dir,
+        "snapwap",
+        [_commit_where(spark, F.col("event_id") % 2 == 0), audited_publish],
     )
+    snap = snapshot_read(spark, table_dir)
+    return _count_checksum(snap, "wp", "event_type")
 
 
 def _branch_fixture(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once branch/tag fixture (A28): even-key base at v1 with
-    branch "main" + tag "rel_v1" pinned to it; the odd-key nightly
-    batch staged and published TO the "audit" branch at v2 — main's
-    pointer never moves (WAP-to-branch isolation)."""
-    from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.sources.tables import (
-        table_path,
-        tree_fingerprint,
-    )
+    """Branch/tag fixture (A28): even-key base at v1 with branch "main" +
+    tag "rel_v1" pinned to it; the odd-key nightly batch staged and
+    published TO the "audit" branch at v2 — main's pointer never moves
+    (WAP-to-branch isolation)."""
 
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    table_dir = _work_dir(sf_dir, f"snapbranch-{fp}")
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        snapshot_commit(spark, table_dir, ev.filter(F.col("event_id") % 2 == 0))
-        create_ref(table_dir, "main", 1, kind="branch")
-        create_ref(table_dir, "rel_v1", 1, kind="tag")
-        versions = [1]
-    refs = snapshot_refs(table_dir)
-    if versions[-1] == 1 and "audit" in refs:
-        # refs exist but the audit publish never landed: half-built
-        raise RuntimeError(
-            f"branch fixture half-built at {table_dir} "
-            "(audit ref without its commit) — clear the directory"
-        )
-    if "audit" not in refs:
-        if versions[-1] != 1 or "main" not in refs:
-            raise RuntimeError(
-                f"branch fixture half-built at {table_dir} "
-                f"(versions={versions}, refs={sorted(refs)}) — clear the "
-                "directory"
-            )
+    def base(d, ev):
+        snapshot_commit(spark, d, ev.filter(F.col("event_id") % 2 == 0))
+        create_ref(d, "main", 1, kind="branch")
+        create_ref(d, "rel_v1", 1, kind="tag")
+
+    def nightly(d, ev):
         snapshot_stage(
-            spark, table_dir, ev.filter(F.col("event_id") % 2 == 1),
-            name="nightly",
+            spark, d, ev.filter(F.col("event_id") % 2 == 1), name="nightly"
         )
-        publish_to_branch(table_dir, "nightly", "audit")
+        publish_to_branch(d, "nightly", "audit")
+
+    table_dir = _fixture_table(spark, sf_dir, "snapbranch", [base, nightly])
+    # refs live beside the version line, which resume cannot see: a build
+    # stopped between a commit and its ref write fail-stops here
+    refs = {n: r["version"] for n, r in snapshot_refs(table_dir).items()}
+    if refs != {"main": 1, "rel_v1": 1, "audit": 2}:
+        raise RuntimeError(
+            f"branch fixture at {table_dir}: refs {refs} do not match "
+            f"versions {snapshot_versions(table_dir)}"
+        )
     return table_dir
 
 
@@ -3985,8 +3915,6 @@ def branch_read_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: refs are O(1) metadata on top of O(files) manifests —
     creating, reading, and retargeting never touch data files, which is
     why Iceberg WAP-to-branch costs nothing over the write itself."""
-    from data_pipeline_cursor_spark.text.dedup import phash
-
     table_dir = _branch_fixture(spark, sf_dir)
     main_view = read_snapshot_sql(
         spark, table_dir, ref="main", view="branch_main"
@@ -3999,12 +3927,7 @@ def branch_read_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionByName(
         spark.table(audit_view).withColumn("branch", F.lit("audit"))
     )
-    return u.groupBy("branch", "event_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "br")).alias(
-            "checksum"
-        ),
-    )
+    return _count_checksum(u, "br", "branch", "event_type")
 
 
 @register(
@@ -4038,18 +3961,11 @@ def partition_evolution_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     test pins that each generation pruned at its own grain
     (out-of-range hour dirs AND out-of-range day dirs absent from
     inputFiles)."""
-    from data_pipeline_cursor_spark.text.dedup import phash
-
     table_dir = _evolution_fixture(spark, sf_dir)
     snap = snapshot_read_time_range(
         spark, table_dir, EVOLUTION_RANGE[0], EVOLUTION_RANGE[1]
     )
-    return snap.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "pe")).alias(
-            "checksum"
-        ),
-    )
+    return _count_checksum(snap, "pe", "event_type")
 
 
 MERGE_PRUNE_COMMITS = 8  # range-clustered base commits for q_merge_pruned
@@ -4105,75 +4021,23 @@ def merge_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(touched files + |source|) rewrite instead of O(table); the
     footer-bounds pass is O(files) driver metadata and the exact pass
     scans one column of the candidates."""
-
-    from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.sources.tables import (
-        table_path,
-        tree_fingerprint,
-    )
-    from data_pipeline_cursor_spark.text.dedup import phash
-
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    table_dir = _work_dir(sf_dir, f"snapprune-{fp}")
-    versions = snapshot_versions(table_dir)
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    if len(versions) < MERGE_PRUNE_COMMITS:
-        max_id = ev.agg(F.max("event_id")).first()[0]
-        if max_id >= MERGE_INSERT_OFFSET:
-            raise ValueError(
-                f"max event_id {max_id} >= MERGE_INSERT_OFFSET "
-                f"{MERGE_INSERT_OFFSET}: insert keys would collide"
-            )
-        for k in range(len(versions), MERGE_PRUNE_COMMITS):
-            lo = k * (max_id + 1) // MERGE_PRUNE_COMMITS
-            hi = (k + 1) * (max_id + 1) // MERGE_PRUNE_COMMITS
-            snapshot_commit(
+    table_dir = _fixture_table(
+        spark,
+        sf_dir,
+        "snapprune",
+        _range_slices(
+            MERGE_PRUNE_COMMITS, lambda d, df: snapshot_commit(spark, d, df)
+        )
+        + [
+            _clustered_merge(
                 spark,
-                table_dir,
-                ev.filter(
-                    (F.col("event_id") >= lo) & (F.col("event_id") < hi)
-                ),
+                "q_merge_pruned",
+                "COW file pruning regressed to a full rewrite",
             )
-        versions = snapshot_versions(table_dir)
-    if versions[-1] == MERGE_PRUNE_COMMITS:
-        max_id = ev.agg(F.max("event_id")).first()[0]
-        cut = max_id // 8
-        low = ev.filter(F.col("event_id") <= cut)
-        deletes = low.filter(F.col("event_id") % 5 == 0).select(
-            "event_id",
-            F.lit(None).cast("string").alias("event_type"),
-            F.lit(True).alias("_delete"),
-        )
-        updates = low.filter(F.col("event_id") % 5 == 1).select(
-            "event_id",
-            F.concat(F.lit("upd_"), F.col("event_type")).alias("event_type"),
-            F.lit(False).alias("_delete"),
-        )
-        inserts = low.filter(F.col("event_id") % 7 == 3).select(
-            (F.col("event_id") + MERGE_INSERT_OFFSET).alias("event_id"),
-            F.lit("ins").alias("event_type"),
-            F.lit(False).alias("_delete"),
-        )
-        v = snapshot_merge(
-            spark,
-            table_dir,
-            deletes.unionByName(updates).unionByName(inserts),
-            key="event_id",
-        )
-        m = _load_manifest(table_dir, v)
-        carried = [f for f in m["files"] if m["file_seqs"][f] != v]
-        if not carried:
-            raise AssertionError(
-                "q_merge_pruned: merge carried no file by reference — "
-                "COW file pruning regressed to a full rewrite"
-            )
-    snap = snapshot_read(spark, table_dir)
-    return snap.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "mp")).alias(
-            "checksum"
-        ),
+        ],
     )
+    snap = snapshot_read(spark, table_dir)
+    return _count_checksum(snap, "mp", "event_type")
 
 
 @register(
@@ -4221,70 +4085,15 @@ def merge_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge is O(touched buckets) I/O with a shuffle-free clause join —
     Iceberg's bucket(N, key) transform + storage-partitioned join,
     Delta's clustered-layout merge."""
-
-    from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.sources.tables import (
-        table_path,
-        tree_fingerprint,
+    merge = _clustered_merge(
+        spark,
+        "q_merge_bucketed",
+        "COW file pruning regressed to a full rewrite",
+        snapshot_merge_bucketed,
     )
-    from data_pipeline_cursor_spark.text.dedup import phash
 
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    table_dir = _work_dir(sf_dir, f"snapbktmrg-{fp}")
-    versions = snapshot_versions(table_dir)
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    if len(versions) < MERGE_PRUNE_COMMITS:
-        max_id = ev.agg(F.max("event_id")).first()[0]
-        if max_id >= MERGE_INSERT_OFFSET:
-            raise ValueError(
-                f"max event_id {max_id} >= MERGE_INSERT_OFFSET "
-                f"{MERGE_INSERT_OFFSET}: insert keys would collide"
-            )
-        for k in range(len(versions), MERGE_PRUNE_COMMITS):
-            lo = k * (max_id + 1) // MERGE_PRUNE_COMMITS
-            hi = (k + 1) * (max_id + 1) // MERGE_PRUNE_COMMITS
-            snapshot_commit_bucketed(
-                spark,
-                table_dir,
-                ev.filter(
-                    (F.col("event_id") >= lo) & (F.col("event_id") < hi)
-                ),
-                key="event_id",
-                buckets=4,
-            )
-        versions = snapshot_versions(table_dir)
-    if versions[-1] == MERGE_PRUNE_COMMITS:
-        max_id = ev.agg(F.max("event_id")).first()[0]
-        cut = max_id // 8
-        low = ev.filter(F.col("event_id") <= cut)
-        deletes = low.filter(F.col("event_id") % 5 == 0).select(
-            "event_id",
-            F.lit(None).cast("string").alias("event_type"),
-            F.lit(True).alias("_delete"),
-        )
-        updates = low.filter(F.col("event_id") % 5 == 1).select(
-            "event_id",
-            F.concat(F.lit("upd_"), F.col("event_type")).alias("event_type"),
-            F.lit(False).alias("_delete"),
-        )
-        inserts = low.filter(F.col("event_id") % 7 == 3).select(
-            (F.col("event_id") + MERGE_INSERT_OFFSET).alias("event_id"),
-            F.lit("ins").alias("event_type"),
-            F.lit(False).alias("_delete"),
-        )
-        v = snapshot_merge_bucketed(
-            spark,
-            table_dir,
-            deletes.unionByName(updates).unionByName(inserts),
-            key="event_id",
-        )
-        m = _load_manifest(table_dir, v)
-        carried = [f for f in m["files"] if m["file_seqs"][f] != v]
-        if not carried:
-            raise AssertionError(
-                "q_merge_bucketed: merge carried no file by reference — "
-                "COW file pruning regressed to a full rewrite"
-            )
+    def merge_without_exchange(d, ev):
+        merge(d, ev)
         if LAST_BUCKETED_MERGE_PLAN and (
             "Exchange" in LAST_BUCKETED_MERGE_PLAN
         ):
@@ -4292,13 +4101,21 @@ def merge_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "q_merge_bucketed: clause join planned an Exchange — "
                 "the bucketed co-location regressed"
             )
-    snap = snapshot_read(spark, table_dir)
-    return snap.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "mb")).alias(
-            "checksum"
-        ),
+
+    table_dir = _fixture_table(
+        spark,
+        sf_dir,
+        "snapbktmrg",
+        _range_slices(
+            MERGE_PRUNE_COMMITS,
+            lambda d, df: snapshot_commit_bucketed(
+                spark, d, df, key="event_id", buckets=4
+            ),
+        )
+        + [merge_without_exchange],
     )
+    snap = snapshot_read(spark, table_dir)
+    return _count_checksum(snap, "mb", "event_type")
 
 
 @register(
@@ -4324,19 +4141,17 @@ def bucket_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicates); the DuckDB oracle runs the same IN over the raw
     events, proving the bucketed scan returns exactly the looked-up
     rows, present or absent."""
-    from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.sources.tables import (
-        table_path,
-        tree_fingerprint,
+    table_dir = _fixture_table(
+        spark,
+        sf_dir,
+        "snapbktlkp",
+        [
+            lambda d, ev: snapshot_commit_bucketed(
+                spark, d, ev, key="event_id", buckets=4
+            )
+        ],
     )
-
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    table_dir = _work_dir(sf_dir, f"snapbktlkp-{fp}")
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    if not snapshot_versions(table_dir):
-        snapshot_commit_bucketed(
-            spark, table_dir, ev, key="event_id", buckets=4
-        )
+    ev = load_table(spark, sf_dir, "events")
     max_id = ev.agg(F.max("event_id")).first()[0]
     keys = [max_id - 1, max_id - 2, max_id - 3]
     snap = snapshot_read_bucketed(spark, table_dir)
@@ -4382,14 +4197,7 @@ def schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     names the production rung (a real table format holding the union
     in table metadata).  The aggregate itself is one hash aggregate
     with map-side combine."""
-    from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.sources.tables import (
-        table_path,
-        tree_fingerprint,
-    )
-
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    table = _work_dir(sf_dir, f"evolved-{fp}")
+    table = _fixture_dir(sf_dir, "evolved")
     done = os.path.join(table, ".generations-done")
     if not os.path.exists(done):
         ev = load_table(spark, sf_dir, "events")
@@ -4514,37 +4322,12 @@ def delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     flips count or checksum.  The layering half (v1 still reads deleted
     rows, data file list byte-identical across delete commits, appends
     carry deletes forward, compaction materializes them) is pinned by
-    the invariant test.  Runs on its own fixture table; the version
-    guard makes re-runs read, not re-delete."""
-    from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.sources.tables import (
-        table_path,
-        tree_fingerprint,
-    )
-    from data_pipeline_cursor_spark.text.dedup import phash
-
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    table_dir = _work_dir(sf_dir, f"snapmor-{fp}")
-    versions = snapshot_versions(table_dir)
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    if not versions:
-        snapshot_commit(spark, table_dir, ev)
-        versions = [1]
-    if versions[-1] < 3:
-        for mod in (11, 13)[len(versions) - 1 :]:
-            snapshot_delete_keys(
-                spark,
-                table_dir,
-                ev.filter(F.col("event_id") % mod == 0).select("event_id"),
-                key="event_id",
-            )
+    the invariant test.  Runs on its own fixture table, which
+    _fixture_table resumes after the last committed version: re-runs read, not
+    re-delete."""
+    table_dir = _fixture_table(spark, sf_dir, "snapmor", _mor_steps(spark))
     snap = snapshot_read(spark, table_dir)
-    return snap.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "dv")).alias(
-            "checksum"
-        ),
-    )
+    return _count_checksum(snap, "dv", "event_type")
 
 
 @register(
@@ -4585,52 +4368,26 @@ def mor_reinsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     and each group keeps the same broadcast anti-join plan; this is
     GDPR-delete + late-arriving-correction coexistence, the reason
     Iceberg scopes deletes by sequence at all."""
-    from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.sources.tables import (
-        table_path,
-        tree_fingerprint,
-    )
-    from data_pipeline_cursor_spark.text.dedup import phash
-
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    table_dir = _work_dir(sf_dir, f"snapreins-{fp}")
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    versions = snapshot_versions(table_dir)
-    last = versions[-1] if versions else 0
-    if last < 1:
-        snapshot_commit(spark, table_dir, ev)
-    if last < 2:
-        snapshot_delete_keys(
-            spark,
-            table_dir,
-            ev.filter(F.col("event_id") % 9 == 0).select("event_id"),
-            key="event_id",
-        )
-    if last < 3:
-        snapshot_commit(
-            spark,
-            table_dir,
-            ev.filter(F.col("event_id") % 18 == 0).select(
-                "event_id",
-                F.concat(F.lit("re_"), F.col("event_type")).alias(
-                    "event_type"
+    reinsert = F.concat(F.lit("re_"), F.col("event_type")).alias("event_type")
+    table_dir = _fixture_table(
+        spark,
+        sf_dir,
+        "snapreins",
+        [
+            _commit_where(spark),
+            _delete_where(spark, F.col("event_id") % 9 == 0),
+            lambda d, ev: snapshot_commit(
+                spark,
+                d,
+                ev.filter(F.col("event_id") % 18 == 0).select(
+                    "event_id", reinsert
                 ),
             ),
-        )
-    if last < 4:
-        snapshot_delete_keys(
-            spark,
-            table_dir,
-            ev.filter(F.col("event_id") % 36 == 0).select("event_id"),
-            key="event_id",
-        )
-    snap = snapshot_read(spark, table_dir)
-    return snap.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "ri")).alias(
-            "checksum"
-        ),
+            _delete_where(spark, F.col("event_id") % 36 == 0),
+        ],
     )
+    snap = snapshot_read(spark, table_dir)
+    return _count_checksum(snap, "ri", "event_type")
 
 
 @register(
@@ -4690,16 +4447,7 @@ def change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     changed-row filter (a.payload <> b.payload) is the whole cost model
     argument for storing change files eagerly when merges touch a
     sliver of the table — the honest trade named on both sides."""
-    from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.sources.tables import (
-        table_path,
-        tree_fingerprint,
-    )
-    from data_pipeline_cursor_spark.text.dedup import phash
-
-    merge_upsert(spark, sf_dir)  # ensure the 2-version merge fixture exists
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    table_dir = _work_dir(sf_dir, f"snapmerge-{fp}")
+    table_dir = _merge_fixture(spark, sf_dir)
     pre = snapshot_read(spark, table_dir, version=1).select(
         F.col("event_id").alias("a_id"), F.col("event_type").alias("a_type")
     )
@@ -4721,12 +4469,7 @@ def change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("change_type"),
         )
     )
-    return feed.groupBy("change_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "cf")).alias(
-            "checksum"
-        ),
-    )
+    return _count_checksum(feed, "cf", "change_type")
 
 
 # (name, DuckDB expr) — the fixture's trimmed lineitem has no

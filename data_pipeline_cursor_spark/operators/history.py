@@ -957,28 +957,18 @@ def bitemporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     an SCD2 derivation for the business axis — neither axis needs the
     other's machinery."""
     from data_pipeline_cursor_spark.catalog import (
-        SNAPSHOT_COMMITS,
-        snapshot_commit,
+        _fixture_table,
+        _residue_commits,
         snapshot_read,
-        snapshot_versions,
-    )
-    from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.sources.tables import (
-        table_path,
-        tree_fingerprint,
     )
 
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    table_dir = _work_dir(sf_dir, f"snapbitemp-{fp}")
-    if len(snapshot_versions(table_dir)) < SNAPSHOT_COMMITS:
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id", "user_id", "ts", "event_type", "value"
-        )
-        for k in range(len(snapshot_versions(table_dir)) + 1,
-                       SNAPSHOT_COMMITS + 1):
-            snapshot_commit(
-                spark, table_dir, ev.filter(F.col("event_id") % 3 == k - 1)
-            )
+    table_dir = _fixture_table(
+        spark,
+        sf_dir,
+        "snapbitemp",
+        _residue_commits(spark),
+        cols=("event_id", "user_id", "ts", "event_type", "value"),
+    )
     snap = snapshot_read(spark, table_dir, version=2)
     cut = F.lit(BITEMP_VALID_TS).cast("timestamp")
     w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")

@@ -1439,10 +1439,9 @@ def s_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter tombstones.
 
     Scale: the state table is key-cardinality-sized; the fixture apply
-    rewrites it per batch behind an atomic directory swap, with the
-    gated MERGE INTO rung (sinks.merge_upsert_batch_merge_into) as the
-    100 TB path — a transactional format scopes each apply to matched
-    files, no table rewrite."""
+    rewrites it per batch behind an atomic directory swap; at 100 TB a
+    transactional format would scope each apply to matched files, with
+    no table rewrite."""
     import os
     import shutil
     import uuid
@@ -2596,8 +2595,11 @@ def s_gdpr_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The DuckDB oracle replays the whole feed as ``event_id % 17 <> 0``:
     a hash match proves every streamed key — across all batches — is
-    invisible and nothing else was lost.  Re-runs read, not re-delete
-    (version guard), so bench repeats are idempotent.
+    invisible and nothing else was lost.  The base commit is built
+    through the resumable _fixture_table; the feed runs only while the
+    table holds the base alone, so re-runs read, not re-delete, and
+    bench repeats are idempotent.  A feed stopped partway still
+    fail-stops: its fresh-uuid checkpoint cannot resume the stream.
 
     100 TB: each commit is O(keys in the batch) metadata + a tiny
     parquet; reads pay one broadcast anti-join until compaction
@@ -2605,25 +2607,17 @@ def s_gdpr_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-scoped delete files (A20) bound what any pruned read
     loads."""
     from data_pipeline_cursor_spark.catalog import (
-        snapshot_commit,
+        _commit_where,
+        _count_checksum,
+        _fixture_dir,
+        _fixture_table,
         snapshot_delete_keys,
         snapshot_read,
         snapshot_versions,
     )
-    from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.sources.tables import (
-        table_path,
-        tree_fingerprint,
-    )
-    from data_pipeline_cursor_spark.text.dedup import phash
 
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    table_dir = _work_dir(sf_dir, f"snapgdpr-{fp}")
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
+    table_dir = _fixture_table(spark, sf_dir, "snapgdpr", [_commit_where(spark)])
     versions = snapshot_versions(table_dir)
-    if not versions:
-        snapshot_commit(spark, table_dir, ev)
-        versions = [1]
     if 1 < versions[-1] < 4:
         # crash partway through the 3-micro-batch delete feed: the
         # fresh-uuid checkpoint cannot resume the stream, and falling
@@ -2636,10 +2630,11 @@ def s_gdpr_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     if versions[-1] == 1:
         # deletion-request landing: 3 parquet files → 3 micro-batches
-        feed_dir = _work_dir(sf_dir, f"gdprfeed-{fp}")
+        feed_dir = _fixture_dir(sf_dir, "gdprfeed")
         if not os.path.exists(os.path.join(feed_dir, "_SUCCESS")):
             (
-                ev.filter(F.col("event_id") % 17 == 0)
+                load_table(spark, sf_dir, "events")
+                .filter(F.col("event_id") % 17 == 0)
                 .select("event_id")
                 .repartition(3)
                 .write.mode("overwrite")
@@ -2660,12 +2655,7 @@ def s_gdpr_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         _drain("gdpr", sf_dir, src, apply_deletes)
     snap = snapshot_read(spark, table_dir)
-    return snap.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "gd")).alias(
-            "checksum"
-        ),
-    )
+    return _count_checksum(snap, "gd", "event_type")
 
 
 @register(
@@ -2713,42 +2703,29 @@ def s_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     intermediate state for free."""
     from data_pipeline_cursor_spark.catalog import (
         MERGE_INSERT_OFFSET,
+        _count_checksum,
+        _fixture_dir,
+        _fixture_table,
+        _range_slices,
         snapshot_commit,
         snapshot_merge,
         snapshot_read,
         snapshot_versions,
     )
-    from data_pipeline_cursor_spark.sources.formats import _work_dir
-    from data_pipeline_cursor_spark.sources.tables import (
-        table_path,
-        tree_fingerprint,
-    )
-    from data_pipeline_cursor_spark.text.dedup import phash
 
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
-    table_dir = _work_dir(sf_dir, f"snapmrgstream-{fp}")
-    ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
+    # 4 range-clustered base commits (disjoint bounds feed the skip)
+    table_dir = _fixture_table(
+        spark,
+        sf_dir,
+        "snapmrgstream",
+        _range_slices(
+            4,
+            lambda d, df: snapshot_commit(
+                spark, d, df.filter(F.col("event_id") % 4 != 0)
+            ),
+        ),
+    )
     versions = snapshot_versions(table_dir)
-    if not versions:
-        # 4 range-clustered base commits (disjoint bounds feed the skip)
-        max_id = ev.agg(F.max("event_id")).first()[0]
-        if max_id >= MERGE_INSERT_OFFSET:
-            raise ValueError(
-                f"max event_id {max_id} >= MERGE_INSERT_OFFSET: "
-                "insert keys would collide"
-            )
-        base = ev.filter(F.col("event_id") % 4 != 0)
-        for k in range(4):
-            lo = k * (max_id + 1) // 4
-            hi = (k + 1) * (max_id + 1) // 4
-            snapshot_commit(
-                spark,
-                table_dir,
-                base.filter(
-                    (F.col("event_id") >= lo) & (F.col("event_id") < hi)
-                ),
-            )
-        versions = snapshot_versions(table_dir)
     if 4 < versions[-1] < 7:
         raise RuntimeError(
             f"s_merge_stream: half-built fixture at {table_dir} "
@@ -2756,10 +2733,12 @@ def s_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "clear the directory"
         )
     if versions[-1] == 4:
-        feed_dir = _work_dir(sf_dir, f"mrgfeed-{fp}")
+        feed_dir = _fixture_dir(sf_dir, "mrgfeed")
         if not os.path.exists(os.path.join(feed_dir, "_SUCCESS")):
             (
-                ev.filter(F.col("event_id") % 10 < 4)
+                load_table(spark, sf_dir, "events")
+                .select("event_id", "event_type")
+                .filter(F.col("event_id") % 10 < 4)
                 .filter(F.col("event_id") % 10 > 0)
                 .repartition(3)
                 .write.mode("overwrite")
@@ -2800,12 +2779,7 @@ def s_merge_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         _drain("merge-stream", sf_dir, src, apply_merge)
     snap = snapshot_read(spark, table_dir)
-    return snap.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "ms")).alias(
-            "checksum"
-        ),
-    )
+    return _count_checksum(snap, "ms", "event_type")
 
 
 @register(
@@ -2839,13 +2813,14 @@ def s_snapshot_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads only its commits' added files.  The engine checkpoint makes
     restarts resume at the next unconsumed version — no bookkeeping in
     the source."""
-    from data_pipeline_cursor_spark.catalog import snapshot_events_table
+    from data_pipeline_cursor_spark.catalog import (
+        SNAPSHOT_COMMITS,
+        _count_checksum,
+        snapshot_events_table,
+    )
     from data_pipeline_cursor_spark.sources.snapshot_feed import (
         register_snapshot_feed,
     )
-    from data_pipeline_cursor_spark.text.dedup import phash
-
-    from data_pipeline_cursor_spark.catalog import SNAPSHOT_COMMITS
 
     table_dir = snapshot_events_table(spark, sf_dir)
     fmt = register_snapshot_feed(spark)
@@ -2861,14 +2836,8 @@ def s_snapshot_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     out = _drain("snapshot-feed", sf_dir, sdf).table
-    return out.groupBy(
-        F.col("_commit_version").alias("commit_version"), "event_type"
-    ).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "sv")).alias(
-            "checksum"
-        ),
-    )
+    version = F.col("_commit_version").alias("commit_version")
+    return _count_checksum(out, "sv", version, "event_type")
 
 
 @register(
@@ -2902,12 +2871,12 @@ def s_feed_paced(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from data_pipeline_cursor_spark.catalog import (
         SNAPSHOT_COMMITS,
+        _count_checksum,
         snapshot_events_table,
     )
     from data_pipeline_cursor_spark.sources.snapshot_feed import (
         register_snapshot_feed,
     )
-    from data_pipeline_cursor_spark.text.dedup import phash
 
     table_dir = snapshot_events_table(spark, sf_dir)
     fmt = register_snapshot_feed(spark)
@@ -2969,11 +2938,5 @@ def s_feed_paced(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{SNAPSHOT_COMMITS} (admission control regressed)"
         )
     out = spark.table(name)
-    return out.groupBy(
-        F.col("_commit_version").alias("commit_version"), "event_type"
-    ).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.bit_xor(phash(F.col("event_id").cast("string"), "fp")).alias(
-            "checksum"
-        ),
-    )
+    version = F.col("_commit_version").alias("commit_version")
+    return _count_checksum(out, "fp", version, "event_type")

@@ -9,12 +9,8 @@ window's row on every late update; Spark's native streaming sinks can't
 upsert, so the engine runs the aggregation in `update` output mode and
 MERGEs each micro-batch inside `foreachBatch`.
 
-MERGE strategy ladder (every rung implemented; the top two are
+MERGE strategy ladder (every rung implemented; the JDBC rung is
 capability-gated on this container's classpath):
-- Delta/Iceberg available → `MERGE INTO serving USING batch ON keys`
-  (transactional, partition-pruned — the 100 TB path;
-  merge_upsert_batch_merge_into / run_upsert_stream_merge_into below,
-  gated on delta_available/iceberg_available);
 - JDBC target (the reference's actual sink) → INSERT .. ON CONFLICT upsert
   per batch (merge_upsert_batch_jdbc, gated on jdbc_available);
 - plain Parquet (this container) → key-partitioned read-merge-overwrite:
@@ -26,7 +22,7 @@ The serving table is partitioned by event_type (the reference's serving
 indexes are (city, window_start) / last_updated — init-analytics-db.sql:
 13-14; partition-on-key + in-partition sort is the Spark substitute).
 
-The three update-mode upsert runners drain through
+The two update-mode upsert runners drain through
 `streaming.sources.drain` without 0-row micro-batches (`drain` says why
 that is sound in update mode), at a state width of 8 unless the caller
 derives one, and return the drain's `DrainReport`.  Inside a multi-batch
@@ -150,8 +146,8 @@ def _merge_upsert_batch(spark, batch: DataFrame, table_dir: str) -> None:
             f"{KEY_COLS[0]!r} partitions — the Parquet read-merge-"
             "overwrite sink does per-key driver work and is only sound for "
             "serving-table-sized key sets; for high-cardinality keys use a "
-            "transactional MERGE INTO target (Delta/Iceberg) instead "
-            "(see the strategy ladder in this module's docstring)"
+            "transactional MERGE INTO target (a Delta/Iceberg table) or "
+            "the JDBC upsert rung instead"
         )
     existing_parts = [
         p for p in touched
@@ -238,91 +234,6 @@ def _merge_upsert_batch(spark, batch: DataFrame, table_dir: str) -> None:
                 os.rmdir(retired_root)
             except OSError:
                 pass
-
-
-DELTA_TABLE_CLASS = "io.delta.tables.DeltaTable"
-
-
-def delta_available(spark: SparkSession) -> bool:
-    """True iff the Delta Lake runtime is on the classpath.
-
-    Not bundled with pyspark (submit with --packages io.delta:delta-spark)
-    and absent in this container, so the MERGE INTO rung is capability-
-    gated like Kafka/Iceberg/JDBC."""
-    from data_pipeline_cursor_spark.capability import jvm_class_available
-
-    return jvm_class_available(spark, DELTA_TABLE_CLASS)
-
-
-def _validate_table_ident(table: str) -> None:
-    """Each dot-separated segment of catalog.db.table must be a plain
-    identifier — the name is interpolated into MERGE SQL text."""
-    parts = table.split(".")
-    if not parts or not all(p and p.replace("_", "").isalnum() for p in parts):
-        raise ValueError(f"table name must be a plain identifier: {table!r}")
-
-
-def merge_upsert_batch_merge_into(batch: DataFrame, table: str) -> None:
-    """Transactional MERGE of one micro-batch into a Delta/Iceberg serving
-    table on KEY_COLS — the top rung of the strategy ladder and the 100 TB
-    path (the reference's analogous at-scale sink is its Iceberg lakehouse
-    target, /root/reference/run.sh:88-114).
-
-    One set-based statement, executor-parallel end to end:
-      MERGE INTO serving t USING batch s
-        ON t.k <=> s.k …                  -- null-safe, matching the
-                                          -- Parquet sink's eqNullSafe
-      WHEN MATCHED THEN UPDATE SET *      -- refine the window's row
-      WHEN NOT MATCHED THEN INSERT *      -- first sight of the key
-
-    Unlike the Parquet rung there is NO driver-side per-partition work and
-    no MAX_TOUCHED_PARTITIONS bound: the table format's transaction log
-    scopes the rewrite to matched files, so arbitrary key cardinality is
-    fine.  Keyed idempotence holds for the same reason as the other rungs —
-    replaying a micro-batch re-matches on the full key and overwrites with
-    identical values.
-
-    Gated: raises NotImplementedError unless the Delta or Iceberg runtime
-    is on the classpath (this container ships neither)."""
-    spark = batch.sparkSession
-    _validate_table_ident(table)
-    from data_pipeline_cursor_spark.catalog import iceberg_available
-
-    if not (delta_available(spark) or iceberg_available(spark)):
-        raise NotImplementedError(
-            "no transactional table format on the classpath; submit with "
-            "--packages io.delta:delta-spark_2.13:<ver> (or the "
-            "iceberg-spark-runtime jar) to enable MERGE INTO. The Parquet "
-            "read-merge-overwrite sink (merge_upsert_batch) is the "
-            "container-native equivalent."
-        )
-    batch = batch.withColumn("last_updated", F.current_timestamp())
-    missing = [k for k in KEY_COLS if k not in batch.columns]
-    if missing:
-        raise ValueError(f"upsert batch lacks key column(s) {missing}")
-    view = "upsert_batch_src"
-    batch.createOrReplaceTempView(view)
-    on = " AND ".join(f"t.{k} <=> s.{k}" for k in KEY_COLS)
-    spark.sql(
-        f"MERGE INTO {table} t USING {view} s ON {on} "
-        "WHEN MATCHED THEN UPDATE SET * "
-        "WHEN NOT MATCHED THEN INSERT *"
-    )
-
-
-def run_upsert_stream_merge_into(
-    agg_stream: DataFrame, table: str, checkpoint: str
-) -> DrainReport:
-    """Delta/Iceberg variant of run_upsert_stream — same update-mode
-    foreachBatch shape, serving table lives in a transactional format."""
-    return drain(
-        agg_stream,
-        checkpoint,
-        lambda b, _id: merge_upsert_batch_merge_into(b, table),
-        out_mode="update",
-        state_parts=8,
-        no_data_batches=False,
-    )
 
 
 POSTGRES_DRIVER = "org.postgresql.Driver"

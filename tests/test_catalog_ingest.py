@@ -2285,3 +2285,46 @@ def test_merge_runs_no_bounds_join_when_bounds_cover_source_range(
     ]
     assert got[0] == got[1]
     assert len(got[0]) == 305
+
+
+def test_snapshot_rollback_resumes_interrupted_build(spark):
+    """q_snapshot_rollback's fixture build stopped after its first commit
+    (residue 0 alone in a fresh snaproll dir) must resume to the clean
+    build's result: versions 1-4 exactly, identical rows, and a second
+    call adds no version."""
+    import shutil
+
+    from data_pipeline_cursor_spark.registry import get_queries
+
+    query = get_queries()["q_snapshot_rollback"]
+    table_dir = catalog._fixture_dir(SF_SMOKE, "snaproll")
+
+    def rows():
+        return sorted(tuple(r) for r in query(spark, SF_SMOKE).collect())
+
+    shutil.rmtree(table_dir, ignore_errors=True)
+    clean = rows()
+    shutil.rmtree(table_dir)
+    ev = load_table(spark, SF_SMOKE, "events").select("event_id", "event_type")
+    catalog.snapshot_commit(spark, table_dir, ev.filter(ev.event_id % 3 == 0))
+    assert rows() == clean
+    assert catalog.snapshot_versions(table_dir) == [1, 2, 3, 4]
+    assert rows() == clean
+    assert catalog.snapshot_versions(table_dir) == [1, 2, 3, 4]
+
+
+def test_built_fixture_table_launches_no_spark_job(spark):
+    """Once the shared snapshot fixture is built, resolving it (what
+    q_metadata_count does before its manifest-only count) launches no
+    Spark job: the events frame is built only when a step is left."""
+    import uuid
+
+    catalog.snapshot_events_table(spark, SF_SMOKE)
+    sc = spark.sparkContext
+    group = f"fixture-reuse-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "resolve a built fixture table")
+    try:
+        catalog.snapshot_events_table(spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
