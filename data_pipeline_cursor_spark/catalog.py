@@ -787,34 +787,6 @@ def _collect_file_bounds(table_dir: str, rel_files: list[str]) -> dict:
     }
 
 
-# ---------------------------------------------------------------------------
-# Layout-mixing policy (explicit, per writer) — enforced by the guards
-# below and pinned by test_bucketed_layout_mixing_policy:
-#   - snapshot_commit / snapshot_commit_partitioned / snapshot_publish:
-#     fail-stop onto a bucketed table (_reject_bucketed_append) — plain
-#     data files would silently break the co-located merge.
-#   - snapshot_commit_bucketed: requires an empty or all-bucketed
-#     history, so partitioned generations never coexist with a spec.
-#   - snapshot_delete_keys: carries bucket_spec — delete files are pure
-#     metadata and both bucketed read paths fail-stop until compaction.
-#   - snapshot_merge on a bucketed table: fail-stop toward
-#     snapshot_merge_bucketed.
-#   - snapshot_compact: consumes everything BY DESIGN (materializes
-#     deletes, rewrites the layout) — the explicit escape hatch every
-#     fail-stop above points at.
-#   - snapshot_rollback: restores the TARGET's state, bucket_spec
-#     included.
-# Per-FILE records (seqs/bounds/partition values/delete maps) are stamped
-# in ONE place — _Txn.commit, the commit path all nine writers share —
-# and never hand-carried by any writer: they live in the immutable
-# per-commit manifests that stay referenced by the snapshot's manifest
-# list, which kills the copied-carry bug class (round-12's
-# file_partitions clobber) structurally.  Each writer keeps only its
-# policy: the guards above, its DataFrame write, what it removes, and its
-# table-level markers.
-# ---------------------------------------------------------------------------
-
-
 def _attempt_data_dir(
     table_dir: str, kind: str, version: int
 ) -> tuple[str, str]:
@@ -835,21 +807,12 @@ def _attempt_data_dir(
     return os.path.join(table_dir, rel), rel
 
 
-def _reject_bucketed_append(pm: dict | None, writer: str) -> None:
-    """Plain (non-bucketed) data files onto a bucketed layout would
-    silently break every later shuffle-free merge — fail-stop instead
-    (the same contract as the delete-file guards; snapshot_compact is
-    the explicit layout-rewrite escape hatch)."""
-    if pm and pm.get("bucket_spec"):
-        raise ValueError(
-            f"{writer}: table is bucketed "
-            f"({pm['bucket_spec']['key']} x {pm['bucket_spec']['buckets']})"
-            " — use snapshot_commit_bucketed / snapshot_merge_bucketed, "
-            "or snapshot_compact to rewrite the layout"
-        )
-
-
-def snapshot_commit(spark: SparkSession, table_dir: str, df: DataFrame) -> int:
+def snapshot_commit(
+    spark: SparkSession,
+    table_dir: str,
+    df: DataFrame,
+    bucket_by: tuple[str, int] | None = None,
+) -> int:
     """Append ``df`` as the next commit of a manifest-versioned table and
     return the new version.  Data files land under
     data/commit-<N>-<attempt-token>/ (unique per attempt, so racing
@@ -861,13 +824,26 @@ def snapshot_commit(spark: SparkSession, table_dir: str, df: DataFrame) -> int:
     delete files only apply to data files with a STRICTLY OLDER sequence
     (snapshot_read), so a key deleted at version D and re-appended at
     version A > D is visible again — Iceberg v2's actual equality-delete
-    scoping, not a table-lifetime tombstone."""
+    scoping, not a table-lifetime tombstone.
+
+    On a bucketed table (its manifest records a ``bucket_spec``) the
+    files land as bucket files under that spec; ``bucket_by=(key, n)``
+    declares the spec on an empty table (Iceberg's ``bucket(n, key)``
+    transform) — see _bucket_layout for the rules."""
     txn = _Txn(table_dir)
-    _reject_bucketed_append(txn.base, "snapshot_commit")
-    # the delta manifest records ONLY this commit's files (with bounds
-    # read once at write time); prior generations' records need no
-    # carrying — they live in the earlier immutable entries
-    return txn.commit(lambda d: df.write.mode("overwrite").parquet(d))
+    spec = _bucket_layout(
+        txn.base, "snapshot_commit", bucket_by=bucket_by, df=df
+    )
+    if spec is None:
+        # the delta manifest records ONLY this commit's files (with bounds
+        # read once at write time); prior generations' records need no
+        # carrying — they live in the earlier immutable entries
+        return txn.commit(lambda d: df.write.mode("overwrite").parquet(d))
+    tag = f"c{txn.version}_{_table_tag(table_dir)}"
+    return txn.commit(
+        lambda d: _write_bucketed_files(spark, df, spec, d, tag),
+        extras={**_snapshot_extras(txn.base), "bucket_spec": spec},
+    )
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -1372,8 +1348,18 @@ def snapshot_read(
     scan filters to that value (parquet row-group pruning applies) and
     ONLY delete files published for that partition — or unscoped
     table-wide ones — are loaded (Iceberg's partition-scoped delete
-    manifests)."""
-    _, manifest = _resolve_version(table_dir, version)
+    manifests).
+
+    A bucketed table (manifest ``bucket_spec``) with no delete files
+    reads as a bucket table instead (_bucketed_read): same rows, but
+    key lookups bucket-prune and key joins need no Exchange."""
+    v, manifest = _resolve_version(table_dir, version)
+    if (
+        manifest.get("bucket_spec")
+        and not manifest.get("delete_files")
+        and partition is None
+    ):
+        return _bucketed_read(spark, table_dir, v, manifest)
     return _read_files_with_deletes(
         spark, table_dir, manifest["files"], manifest, partition
     )
@@ -2590,7 +2576,7 @@ def snapshot_publish(table_dir: str, name: str) -> int:
     with open(spath) as fh:
         staged = json.load(fh)
     txn = _Txn(table_dir)
-    _reject_bucketed_append(txn.base, "snapshot_publish")
+    _bucket_layout(txn.base, "snapshot_publish", plain=True)
     new_v = txn.commit(
         files=staged["files"],
         # bounds were computed at snapshot_stage write time; legacy
@@ -2777,7 +2763,7 @@ def snapshot_commit_partitioned(
         )
     fmt_spark = spec[0]
     txn = _Txn(table_dir)
-    _reject_bucketed_append(txn.base, "snapshot_commit_partitioned")
+    _bucket_layout(txn.base, "snapshot_commit_partitioned", plain=True)
     part = F.date_format(F.col(ts_col), fmt_spark).alias("_part")
     return txn.commit(
         lambda d: (
@@ -3087,21 +3073,20 @@ def snapshot_merge(
     files), not O(table) — the whole point of COW file granularity; a
     batch whose keys smear across every file degrades gracefully to
     the full rewrite (q_merge_upsert's residue batch is exactly that
-    worst case, q_merge_pruned the clustered common case).  Returns
-    the new version."""
+    worst case, q_merge_pruned the clustered common case).  On a
+    bucketed table steps 1-2 are the same and step 3 is the co-located,
+    Exchange-free clause join (_merge_bucketed).  Returns the new
+    version."""
     txn = _Txn(table_dir, need_base=True)
     manifest = txn.base
-    if manifest.get("bucket_spec"):
-        raise ValueError(
-            "snapshot_merge: table is bucketed — use "
-            "snapshot_merge_bucketed (a plain rewrite would break the "
-            "layout's co-location), or snapshot_compact to rewrite it"
-        )
+    spec = _bucket_layout(manifest, "snapshot_merge", merge_key=key)
     all_files = manifest["files"]
     source, krange = _merge_check_source(source, key)
     touched, untouched = _merge_detect_touched(
         spark, table_dir, manifest, source, key, krange
     )
+    if spec:
+        return _merge_bucketed(spark, txn, source, touched, spec)
 
     # 3. rewrite touched files only (MOR deletes materialized for them)
     if touched:
@@ -3133,21 +3118,24 @@ def snapshot_merge(
 
 
 # ---------------------------------------------------------------------------
-# Bucketed snapshot layout → shuffle-free MERGE clause join (round-12
-# item 5).  At 100 TB the clause join is the COW merge's ONLY shuffle:
-# both sides hash-exchange on the key before the full-outer join.  With
-# the table's data files written through Spark's bucketed writer (bucket
-# id in the file name — the layout Iceberg's bucket(N, key) transform
-# and Delta's clustered layouts standardize) and the source staged into
-# the same bucket spec, the join reads both sides already co-located:
-# ZERO Exchange nodes (plan-asserted).  Composes with A18/A29 pruning:
+# Bucketed snapshot layout → shuffle-free MERGE clause join.  At 100 TB
+# the clause join is the COW merge's ONLY shuffle: both sides
+# hash-exchange on the key before the full-outer join.  With the
+# table's data files written through Spark's bucketed writer (bucket id
+# in the file name — the layout Iceberg's bucket(N, key) transform and
+# Delta's clustered layouts standardize) and the source staged into the
+# same bucket spec, the join reads both sides already co-located: ZERO
+# Exchange nodes (plan-asserted).  Composes with A18/A29 pruning:
 # commits stay key-RANGE-clustered across commits (bounds skip prunes
 # whole commits) while files are hash-bucketed WITHIN a commit (the
 # clause join over the touched subset is shuffle-free).
 #
-# Local-fs mechanics: a pruned subset of bucket files is exposed to the
-# bucketed reader by symlinking exactly the touched files into a scratch
-# dir and declaring an external CLUSTERED BY table over it (bucket ids
+# The spec is table state: the manifest's ``bucket_spec``, declared once
+# by snapshot_commit(bucket_by=...) and followed by snapshot_commit,
+# snapshot_merge and snapshot_read; _bucket_layout holds the mixing
+# rules.  Local-fs mechanics: a subset of bucket files is exposed to the
+# bucketed reader by symlinking exactly those files into a scratch dir
+# and declaring an external CLUSTERED BY table over it (bucket ids
 # travel in the file names, so the subset keeps its bucketing).  On an
 # object store the same contract is the table format's metadata-defined
 # scan (Iceberg storage-partitioned joins); the symlink dir is the
@@ -3166,9 +3154,8 @@ def _schema_ddl(df: DataFrame) -> str:
 def _table_tag(table_dir: str) -> str:
     """DETERMINISTIC per-table tag for scratch table/dir names — a
     stable digest, not Python's per-process-salted hash(): every
-    process derives the same name, so bucketed read views are REUSED
-    across processes instead of accumulating one .bktview-* dir per
-    process forever (r12 advisor, low)."""
+    process derives the same names, so a later process reclaims an
+    earlier one's read-view dirs instead of accumulating them."""
     import hashlib
 
     return hashlib.md5(
@@ -3176,19 +3163,101 @@ def _table_tag(table_dir: str) -> str:
     ).hexdigest()[:8]
 
 
+def _bucket_table(
+    spark: SparkSession, name: str, schema_ddl: str, spec: dict, location: str
+) -> str:
+    """Declare ``name`` as an external CLUSTERED BY table over
+    ``location`` under the bucket ``spec`` and return the name — the one
+    DDL of the layout (the commit write, the read view, the merge's
+    source stage).  The directory is made first: CREATE TABLE over a
+    missing LOCATION logs a FileNotFoundException trace and a
+    HadoopFSUtils "was not found" warning, twice per statement."""
+    os.makedirs(location, exist_ok=True)
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    key = spec["key"]
+    spark.sql(
+        f"CREATE TABLE {name} ({schema_ddl}) USING parquet "
+        f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) "
+        f"INTO {spec['buckets']} BUCKETS LOCATION '{location}'"
+    )
+    return name
+
+
+def _bucket_layout(
+    pm: dict | None,
+    writer: str,
+    *,
+    bucket_by: tuple[str, int] | None = None,
+    df: DataFrame | None = None,
+    merge_key: str | None = None,
+    plain: bool = False,
+) -> dict | None:
+    """The layout-mixing rules, in one place: the bucket spec a
+    ``writer`` call over base manifest ``pm`` works under (None = plain
+    layout), or a ValueError.
+
+    - ``plain`` writers (snapshot_commit_partitioned, snapshot_publish)
+      fail-stop on a bucketed table: their files carry no bucket ids,
+      which would break the co-located scan.
+    - ``bucket_by=(key, n)`` declares the spec (schema from ``df``) on
+      an empty table; it must match a recorded spec, and bucketing over
+      plain generations fail-stops.
+    - a merge (``merge_key``) on a bucketed table must use the bucket
+      key, and fail-stops over delete files: per-group anti-joins would
+      fragment the single bucketed scan the Exchange-free join needs.
+
+    Delete files carry the spec (snapshot_read falls back to the plain
+    scan while they apply), rollback restores its target's spec, and
+    snapshot_compact — the escape hatch every fail-stop names —
+    rewrites the layout plain."""
+    spec = pm.get("bucket_spec") if pm else None
+    if spec and plain:
+        raise ValueError(
+            f"{writer}: table is bucketed ({spec['key']} x "
+            f"{spec['buckets']}) — commit through snapshot_commit, or "
+            "snapshot_compact to rewrite the layout"
+        )
+    if bucket_by is not None:
+        key, buckets = bucket_by
+        if spec and (spec["key"], spec["buckets"]) != (key, buckets):
+            raise ValueError(
+                f"bucket spec mismatch: table uses {spec}, got "
+                f"key={key} buckets={buckets}"
+            )
+        if not spec and pm and pm["files"]:
+            raise ValueError(
+                f"{writer}: table has non-bucketed generations — "
+                "bucketed layouts start from an empty table"
+            )
+        if not spec:
+            spec = {"key": key, "buckets": buckets, "schema": _schema_ddl(df)}
+    if spec and merge_key is not None:
+        if spec["key"] != merge_key:
+            raise ValueError(
+                f"{writer}: table is bucketed on {spec['key']!r}, not "
+                f"{merge_key!r} — merge on the bucket key, or "
+                "snapshot_compact to rewrite the layout"
+            )
+        if pm.get("delete_files"):
+            raise ValueError(
+                f"{writer}: bucketed table carries merge-on-read delete "
+                "files — compact first (snapshot_compact)"
+            )
+    return spec
+
+
 def _write_bucketed_files(
     spark: SparkSession,
     df: DataFrame,
-    key: str,
-    buckets: int,
+    spec: dict,
     dest_dir: str,
     tag: str,
     pre_shuffle: bool = True,
 ) -> None:
     """Write ``df`` into ``dest_dir`` as BUCKET FILES (bucket id in the
-    file name) via a transient external CLUSTERED BY table — Spark only
-    emits bucketed layouts through the catalog writer.  Dropping the
-    transient table keeps the files (explicit LOCATION = external).
+    file name) via a transient bucket table — Spark only emits bucketed
+    layouts through the catalog writer.  Dropping the transient table
+    keeps the files (explicit LOCATION = external).
 
     ``pre_shuffle`` repartitions on the bucket hash first (Murmur3 —
     the same function the bucketed writer assigns buckets with), so
@@ -3197,33 +3266,23 @@ def _write_bucketed_files(
     rewrite-3 discipline).  Pass False when the input is ALREADY
     bucket-distributed (the merge rewrite: SMJ output over co-located
     buckets) — there the extra exchange would be pure waste."""
-    tbl = f"snap_bkt_w_{tag}"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    spark.sql(
-        f"CREATE TABLE {tbl} ({_schema_ddl(df)}) USING parquet "
-        f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) INTO {buckets} BUCKETS "
-        f"LOCATION '{dest_dir}'"
+    tbl = _bucket_table(
+        spark, f"snap_bkt_w_{tag}", _schema_ddl(df), spec, dest_dir
     )
     if pre_shuffle:
-        df = df.repartition(buckets, F.col(key))
+        df = df.repartition(spec["buckets"], F.col(spec["key"]))
     df.write.insertInto(tbl)
     spark.sql(f"DROP TABLE {tbl}")
 
 
 def _bucketed_files_table(
-    spark: SparkSession,
-    table_dir: str,
-    files: list[str],
-    schema_ddl: str,
-    key: str,
-    buckets: int,
-    tag: str,
+    spark: SparkSession, table_dir: str, files: list[str], spec: dict, tag: str
 ) -> tuple[str, str]:
     """Expose an arbitrary SUBSET of a bucketed snapshot's files (e.g.
-    the merge's touched set, possibly spanning commits) as a bucketed
-    catalog table: symlink the files into a scratch dir (names carry
-    the bucket ids) and declare an external CLUSTERED BY table over it.
-    Returns (table_name, scratch_dir); caller drops/removes both."""
+    the merge's touched set, possibly spanning commits) as a bucket
+    table: symlink the files into a scratch dir (names carry the bucket
+    ids) and declare the table over it.  Returns (table_name,
+    scratch_dir); the caller drops/removes both."""
     link_dir = os.path.join(table_dir, f".bktview-{tag}")
     shutil.rmtree(link_dir, ignore_errors=True)
     os.makedirs(link_dir)
@@ -3232,141 +3291,49 @@ def _bucketed_files_table(
             os.path.abspath(os.path.join(table_dir, f)),
             os.path.join(link_dir, os.path.basename(f)),
         )
-    tbl = f"snap_bkt_r_{tag}"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    spark.sql(
-        f"CREATE TABLE {tbl} ({schema_ddl}) USING parquet "
-        f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) INTO {buckets} BUCKETS "
-        f"LOCATION '{link_dir}'"
+    tbl = _bucket_table(
+        spark, f"snap_bkt_r_{tag}", spec["schema"], spec, link_dir
     )
-    spark.catalog.refreshTable(tbl)
     return tbl, link_dir
 
 
-def snapshot_commit_bucketed(
+def _merge_bucketed(
     spark: SparkSession,
-    table_dir: str,
-    df: DataFrame,
-    key: str,
-    buckets: int,
+    txn: _Txn,
+    source: DataFrame,
+    touched: list[str],
+    spec: dict,
 ) -> int:
-    """Append ``df`` as the next commit with its data files HASH-BUCKETED
-    on ``key`` (Iceberg ``bucket(N, key)`` transform / Delta clustered
-    layout): the manifest records the table-level bucket spec, every
-    later snapshot_merge_bucketed clause join runs shuffle-free, and
-    reads through snapshot_read are plain parquet scans (bucket files
-    are ordinary parquet).  The spec is fixed at first use — mixed
-    specs across commits would break co-location and fail-stop."""
-    txn = _Txn(table_dir)
-    spec = {"key": key, "buckets": buckets, "schema": _schema_ddl(df)}
-    pm = txn.base
-    if pm is not None:
-        prev_spec = pm.get("bucket_spec")
-        if prev_spec and (
-            prev_spec["key"] != key or prev_spec["buckets"] != buckets
-        ):
-            raise ValueError(
-                f"bucket spec mismatch: table uses {prev_spec}, got "
-                f"key={key} buckets={buckets}"
-            )
-        if prev_spec is None and pm["files"]:
-            # the inverse of _reject_bucketed_append: bucketing must
-            # start from an empty table or an all-bucketed history —
-            # plain/partitioned generations mixed under a bucket spec
-            # would be misread as bucket files by the co-located scan
-            raise ValueError(
-                "snapshot_commit_bucketed: table has non-bucketed "
-                "generations — bucketed layouts start from an empty "
-                "table (or rewrite the layout outside the snapshot line)"
-            )
-        if pm.get("delete_files"):
-            raise ValueError(
-                "snapshot_commit_bucketed: table carries merge-on-read "
-                "delete files — compact first (snapshot_compact)"
-            )
-        spec = prev_spec or spec
-    tag = f"c{txn.version}_{_table_tag(table_dir)}"
-    return txn.commit(
-        lambda d: _write_bucketed_files(spark, df, key, buckets, d, tag),
-        extras={"bucket_spec": spec},
-    )
-
-
-def snapshot_merge_bucketed(
-    spark: SparkSession, table_dir: str, source: DataFrame, key: str
-) -> int:
-    """snapshot_merge over a BUCKETED snapshot layout: identical
-    semantics and pruning (manifest-bounds skip + exact touched-file
-    join), but the clause join runs with ZERO Exchange nodes — the
-    touched bucket files are exposed as a bucketed table (bucket ids in
-    the names), the source is staged once into the same bucket spec,
-    and the full-outer sort-merge join reads both sides co-located.
-    The rewrite itself lands bucketed, so the layout — and every later
-    merge's shuffle-freedom — is preserved.  The executed clause-join
-    plan is captured in LAST_BUCKETED_MERGE_PLAN for the plan test.
-
-    Requires a delete-free manifest (fail-stop → snapshot_compact):
-    interleaving per-group MOR anti-joins would fragment the single
-    bucketed scan the zero-exchange plan depends on — the same reason
-    production COW merges schedule compaction before heavy merge
-    traffic.
-
-    100 TB: bounds skip prunes whole range-clustered commits; the
-    clause join — the merge's ONLY shuffle on a plain layout — moves no
-    rows at all; the rewrite is O(touched buckets)."""
-
+    """Step 3 of snapshot_merge on a bucketed table: the touched bucket
+    files are exposed as a bucket table, the source is staged once into
+    the same spec, and the full-outer sort-merge clause join reads both
+    sides co-located — ZERO Exchange nodes.  The rewrite lands bucketed,
+    so every later merge stays shuffle-free.  The executed clause-join
+    plan is captured in LAST_BUCKETED_MERGE_PLAN for the plan test."""
     global LAST_BUCKETED_MERGE_PLAN
-    txn = _Txn(table_dir, need_base=True)
-    manifest = txn.base
-    spec = manifest.get("bucket_spec")
-    if not spec or spec["key"] != key:
-        raise ValueError(
-            f"snapshot_merge_bucketed: table is not bucketed on {key!r} "
-            f"(spec={spec}) — use snapshot_merge or rewrite the layout"
-        )
-    if manifest.get("delete_files"):
-        raise ValueError(
-            "snapshot_merge_bucketed: table carries merge-on-read delete "
-            "files — compact first (snapshot_compact)"
-        )
-    buckets = spec["buckets"]
-    source, krange = _merge_check_source(source, key)
-    touched, untouched = _merge_detect_touched(
-        spark, table_dir, manifest, source, key, krange
-    )
+    table_dir = txn.table_dir
     tag = f"m{txn.version}_{_table_tag(table_dir)}"
-
-    # target side: touched bucket files as a bucketed table (empty
-    # touched set -> empty view over zero symlinks, same schema)
-    tgt_tbl, link_dir = _bucketed_files_table(
-        spark, table_dir, sorted(touched), spec["schema"], key, buckets, tag
-    )
-    # source side: staged ONCE into the same bucket spec; the stage dir
-    # is scratch (removed after the commit publishes)
+    src_tbl = f"snap_bkt_s_{tag}"
     stage_dir = os.path.join(table_dir, f".bktsrc-{tag}")
     shutil.rmtree(stage_dir, ignore_errors=True)
-    src_tbl = f"snap_bkt_s_{tag}"
-    spark.sql(f"DROP TABLE IF EXISTS {src_tbl}")
-    spark.sql(
-        f"CREATE TABLE {src_tbl} ({_schema_ddl(source)}) USING parquet "
-        f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) INTO {buckets} BUCKETS "
-        f"LOCATION '{stage_dir}'"
+    # an empty touched set is an empty view over zero symlinks
+    tgt_tbl, link_dir = _bucketed_files_table(
+        spark, table_dir, sorted(touched), spec, tag
     )
-    source.write.insertInto(src_tbl)
-    spark.catalog.refreshTable(src_tbl)
-
     try:
-        target = spark.table(tgt_tbl)
-        staged_src = spark.table(src_tbl)
+        _bucket_table(spark, src_tbl, _schema_ddl(source), spec, stage_dir)
+        source.write.insertInto(src_tbl)
         merged = _merge_clause_resolve(
-            target.hint("merge"), staged_src, key
+            spark.table(tgt_tbl).hint("merge"),
+            spark.table(src_tbl),
+            spec["key"],
         )
         LAST_BUCKETED_MERGE_PLAN = (
             merged._jdf.queryExecution().executedPlan().toString()
         )
         return txn.commit(
             lambda d: _write_bucketed_files(
-                spark, merged, key, buckets, d, f"o{tag}",
+                spark, merged, spec, d, f"o{tag}",
                 pre_shuffle=False,  # SMJ output is already bucket-distributed
             ),
             delta={"removed_files": sorted(touched)},
@@ -3379,57 +3346,44 @@ def snapshot_merge_bucketed(
         shutil.rmtree(stage_dir, ignore_errors=True)
 
 
-def snapshot_read_bucketed(
-    spark: SparkSession, table_dir: str, version: int | None = None
+def _bucketed_read(
+    spark: SparkSession, table_dir: str, version: int, manifest: dict
 ) -> DataFrame:
-    """Read a BUCKETED snapshot *as a bucketed table* (vs snapshot_read's
-    plain parquet scan): the scan keeps the layout's HashPartitioning —
-    key-equality/IN filters BUCKET-PRUNE (the physical plan reports
-    ``SelectedBucketsCount: k out of N``, reading 1/N of the table per
-    looked-up key), and key-joins/aggregations run exchange-free.  This
-    is the serving-path payoff of the bucket layout: an Iceberg
-    bucket(N, key) point lookup opens only the matching bucket's files.
+    """snapshot_read of a delete-free bucketed snapshot: the snapshot's
+    files as a bucket table, so the scan keeps the layout's
+    HashPartitioning — key-equality/IN filters BUCKET-PRUNE (the plan
+    reports ``SelectedBucketsCount: k out of N``: an Iceberg
+    bucket(N, key) point lookup opens only the matching bucket's files)
+    and key-joins/aggregations run exchange-free.
 
-    The view is registered per (table, version) and reused; it pins the
-    version's exact file list (symlink scan — manifest-scoped), so
-    later commits cannot leak in."""
-    v, manifest = _resolve_version(table_dir, version)
-    spec = manifest.get("bucket_spec")
-    if not spec:
-        raise ValueError(
-            f"{table_dir} is not a bucketed snapshot table — use "
-            "snapshot_read"
-        )
-    if manifest.get("delete_files"):
-        raise ValueError(
-            "snapshot_read_bucketed: table carries merge-on-read delete "
-            "files — compact first (snapshot_compact)"
-        )
-    tag = f"v{v}_{_table_tag(table_dir)}"
+    The view is reused per snapshot IDENTITY — the digest of its file
+    list, whose per-attempt data dirs differ whenever a table is rebuilt
+    at the same path — and pins that exact list, so later commits cannot
+    leak in.  View dirs of this table that no view of this session
+    reads (an earlier process's) are reclaimed; this session's stay, so
+    reads of several versions can be combined in one plan."""
+    import hashlib
+
+    digest = _table_tag(table_dir)
+    files = "\n".join(manifest["files"])
+    ident = hashlib.md5(files.encode()).hexdigest()[:8]
+    tag = f"v{version}_{ident}_{digest}"
     tbl = f"snap_bkt_r_{tag}"
     if not spark.catalog.tableExists(tbl):
-        # reclaim stale view dirs from OTHER versions of this table
-        # (deterministic tags make the current one reusable across
-        # processes; old-version dirs — and their symlinks left
-        # dangling by expire/orphan cleanup — would accumulate forever)
-        digest = _table_tag(table_dir)
         for name in os.listdir(table_dir):
             if (
                 name.startswith(".bktview-v")
                 and name.endswith(digest)
-                and name != f".bktview-{tag}"
+                and not spark.catalog.tableExists(
+                    "snap_bkt_r_" + name[len(".bktview-"):]
+                )
             ):
                 shutil.rmtree(
                     os.path.join(table_dir, name), ignore_errors=True
                 )
         _bucketed_files_table(
-            spark,
-            table_dir,
-            sorted(manifest["files"]),
-            spec["schema"],
-            spec["key"],
-            spec["buckets"],
-            tag,
+            spark, table_dir, sorted(manifest["files"]),
+            manifest["bucket_spec"], tag,
         )
     return spark.table(tbl)
 
@@ -3478,15 +3432,14 @@ def _merge_changes(ev: DataFrame, cut: int | None = None) -> DataFrame:
     return deletes.unionByName(updates).unionByName(inserts)
 
 
-def _clustered_merge(
-    spark: SparkSession, query: str, why: str, merge=snapshot_merge
-) -> FixtureStep:
-    """Fixture step: ``merge`` the low-eighth change batch, fail-stopping
+def _clustered_merge(spark: SparkSession, query: str, why: str) -> FixtureStep:
+    """Fixture step: merge the low-eighth change batch, fail-stopping
     unless it carried a data file by reference — otherwise the pruning
     ``why`` names regressed."""
 
     def step(d, ev):
-        v = merge(spark, d, _merge_changes(ev, cut=8), key="event_id")
+        changes = _merge_changes(ev, cut=8)
+        v = snapshot_merge(spark, d, changes, key="event_id")
         m = _load_manifest(d, v)
         if all(m["file_seqs"][f] == v for f in m["files"]):
             raise AssertionError(
@@ -4071,7 +4024,7 @@ def merge_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_merge_pruned's exact clause algebra (update %5=1 / delete %5=0 /
     insert %7=3, all gated on the lowest key eighth) on a fixture twin
     whose {MERGE_PRUNE_COMMITS} range-clustered commits are each
-    hash-bucketed on event_id (snapshot_commit_bucketed).  The two
+    hash-bucketed on event_id (snapshot_commit bucket_by=).  The two
     prunings COMPOSE: manifest bounds skip the ~7/8 untouched commits
     (range clustering ACROSS commits), and the clause join over the
     touched bucket files runs with ZERO Exchange nodes (hash bucketing
@@ -4089,7 +4042,6 @@ def merge_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "q_merge_bucketed",
         "COW file pruning regressed to a full rewrite",
-        snapshot_merge_bucketed,
     )
 
     def merge_without_exchange(d, ev):
@@ -4108,8 +4060,8 @@ def merge_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "snapbktmrg",
         _range_slices(
             MERGE_PRUNE_COMMITS,
-            lambda d, df: snapshot_commit_bucketed(
-                spark, d, df, key="event_id", buckets=4
+            lambda d, df: snapshot_commit(
+                spark, d, df, bucket_by=("event_id", 4)
             ),
         )
         + [merge_without_exchange],
@@ -4146,15 +4098,15 @@ def bucket_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "snapbktlkp",
         [
-            lambda d, ev: snapshot_commit_bucketed(
-                spark, d, ev, key="event_id", buckets=4
+            lambda d, ev: snapshot_commit(
+                spark, d, ev, bucket_by=("event_id", 4)
             )
         ],
     )
     ev = load_table(spark, sf_dir, "events")
     max_id = ev.agg(F.max("event_id")).first()[0]
     keys = [max_id - 1, max_id - 2, max_id - 3]
-    snap = snapshot_read_bucketed(spark, table_dir)
+    snap = snapshot_read(spark, table_dir)
     return snap.filter(F.col("event_id").isin(keys)).select(
         "event_id", "event_type"
     )
@@ -4287,8 +4239,8 @@ def snapshot_delete_keys(
     # record_count/bounds like data files) — the delete-files metadata
     # table serves from these, zero read I/O.
     # bucket_spec carries: delete files are pure metadata beside the
-    # (still bucketed) data files, and both bucketed read paths
-    # fail-stop until snapshot_compact materializes deletes
+    # (still bucketed) data files; snapshot_read takes the plain scan
+    # while they apply
     return txn.commit(
         writer.mode("overwrite").parquet,
         kind="deletes",

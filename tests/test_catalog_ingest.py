@@ -1600,14 +1600,28 @@ def test_manifest_carry_property_random_writer_sequences(spark, tmp_path):
     check()
 
 
+def _bucket_ids(files: list[str]) -> set[int]:
+    """Bucket ids Spark's bucketed writer put in the file names
+    (``part-..._<id>.c000...parquet``); a file without one fails."""
+    import re
+
+    ids = set()
+    for f in files:
+        m = re.fullmatch(r".*_(\d+)(?:\..*)?", os.path.basename(f))
+        assert m, f"not a bucket file: {f}"
+        ids.add(int(m.group(1)))
+    return ids
+
+
 def test_bucketed_layout_mixing_policy(spark, tmp_path):
-    """The explicit bucketed-over-partitioned / plain-over-bucketed
-    decision (round-12 judge item): plain and partitioned writers
-    FAIL-STOP onto a bucketed layout (a plain file would silently break
-    the co-located merge), bucketing cannot start over non-bucketed
-    generations, MOR deletes CARRY the bucket spec (both bucketed read
-    paths already fail-stop until compaction), rollback restores the
-    spec, and snapshot_compact is the documented escape hatch that
+    """The bucket spec is table state: snapshot_commit(bucket_by=...)
+    declares it on an empty table and every later snapshot_commit lands
+    bucket files under it.  Bucketing cannot start over non-bucketed
+    generations or change its spec; partitioned commits and publish
+    fail-stop onto a bucketed table; a merge on another key, or over
+    delete files, fail-stops.  MOR deletes CARRY the spec and
+    snapshot_read takes the plain scan while they apply, rollback
+    restores the spec, and snapshot_compact is the escape hatch that
     rewrites the layout plain."""
     import pytest
     from pyspark.sql import functions as F
@@ -1615,7 +1629,6 @@ def test_bucketed_layout_mixing_policy(spark, tmp_path):
     from data_pipeline_cursor_spark.catalog import (
         _load_manifest,
         snapshot_commit,
-        snapshot_commit_bucketed,
         snapshot_commit_partitioned,
         snapshot_compact,
         snapshot_delete_keys,
@@ -1632,58 +1645,157 @@ def test_bucketed_layout_mixing_policy(spark, tmp_path):
             rows, "k bigint, tss string, v string"
         ).select("k", F.col("tss").cast("timestamp").alias("ts"), "v")
 
+    def read(tdir):
+        df = snapshot_read(spark, tdir)
+        bucketed = any(".bktview-" in f for f in df.inputFiles())
+        return {r["k"] for r in df.collect()}, bucketed
+
     # bucketing over existing non-bucketed generations: fail-stop
     plain_dir = str(tmp_path / "plainfirst")
     snapshot_commit(spark, plain_dir, mkdf([(1, "2024-01-01 00:00:00", "a")]))
     with pytest.raises(ValueError, match="non-bucketed generations"):
-        snapshot_commit_bucketed(
+        snapshot_commit(
             spark, plain_dir, mkdf([(2, "2024-01-01 01:00:00", "b")]),
-            key="k", buckets=4,
+            bucket_by=("k", 4),
         )
 
-    # plain/partitioned/publish onto a bucketed layout: fail-stop
     bdir = str(tmp_path / "bucketed")
-    snapshot_commit_bucketed(
+    snapshot_commit(
         spark, bdir,
         mkdf([(i, "2024-01-01 00:00:00", f"v{i}") for i in range(8)]),
-        key="k", buckets=4,
+        bucket_by=("k", 4),
     )
     extra = mkdf([(100, "2024-01-02 00:00:00", "x")])
-    with pytest.raises(ValueError, match="bucketed"):
-        snapshot_commit(spark, bdir, extra)
+    with pytest.raises(ValueError, match="bucket spec mismatch"):
+        snapshot_commit(spark, bdir, extra, bucket_by=("k", 2))
+
+    # a plain commit follows the recorded spec: bucket files land
+    v = snapshot_commit(spark, bdir, extra)
+    m = _load_manifest(bdir, v)
+    assert m["bucket_spec"]["buckets"] == 4
+    added = [f for f in m["files"] if m["file_seqs"][f] == v]
+    assert added and _bucket_ids(added) <= set(range(4))
+    assert read(bdir) == (set(range(8)) | {100}, True)
+
+    # partitioned/publish onto a bucketed layout, merge on another key:
+    # fail-stop
     with pytest.raises(ValueError, match="bucketed"):
         snapshot_commit_partitioned(spark, bdir, extra, "day")
     stage = snapshot_stage(spark, bdir, extra, "bkt_aud")
     with pytest.raises(ValueError, match="bucketed"):
         snapshot_publish(bdir, stage)
-    with pytest.raises(ValueError, match="bucketed"):
+    with pytest.raises(ValueError, match="bucketed on 'k'"):
         snapshot_merge(
-            spark, bdir, extra.withColumn("_delete", F.lit(False)), key="k"
+            spark, bdir, extra.withColumn("_delete", F.lit(False)), key="v"
         )
 
-    # MOR delete CARRIES the spec (metadata beside still-bucketed files)
+    # MOR delete CARRIES the spec (metadata beside still-bucketed files);
+    # the read applies it through the plain scan, a merge fail-stops
     snapshot_delete_keys(
         spark, bdir, spark.createDataFrame([(0,)], "k bigint"), key="k"
     )
     m = _load_manifest(bdir, snapshot_versions(bdir)[-1])
     assert m.get("bucket_spec"), "delete dropped the bucket spec"
-    assert {r["k"] for r in snapshot_read(spark, bdir).collect()} == set(
-        range(1, 8)
-    )
+    assert read(bdir) == (set(range(1, 8)) | {100}, False)
+    with pytest.raises(ValueError, match="compact first"):
+        snapshot_merge(
+            spark, bdir, extra.withColumn("_delete", F.lit(False)), key="k"
+        )
 
     # rollback restores the spec from the TARGET manifest
     snapshot_rollback(spark, bdir, 1)
     m = _load_manifest(bdir, snapshot_versions(bdir)[-1])
     assert m.get("bucket_spec"), "rollback dropped the bucket spec"
+    assert read(bdir) == (set(range(8)), True)
 
     # compact = explicit layout rewrite: spec consumed, plain verbs OK
     snapshot_compact(spark, bdir)
     m = _load_manifest(bdir, snapshot_versions(bdir)[-1])
     assert not m.get("bucket_spec")
     snapshot_commit(spark, bdir, extra)
-    assert {r["k"] for r in snapshot_read(spark, bdir).collect()} == set(
-        range(8)
-    ) | {100}
+    assert read(bdir) == (set(range(8)) | {100}, False)
+
+
+def test_bucketed_read_after_rebuild_at_same_path(spark, tmp_path):
+    """A bucketed table rebuilt at the same path in one session reads
+    its NEW files: the read view is keyed on the snapshot's file list,
+    not on (path, version), so the rebuilt v1 never reuses the old v1's
+    view and its links to deleted files."""
+    import shutil
+
+    from data_pipeline_cursor_spark.catalog import (
+        snapshot_commit,
+        snapshot_read,
+    )
+
+    tdir = str(tmp_path / "rebuilt")
+    for keys in (range(8), range(100, 104)):
+        shutil.rmtree(tdir, ignore_errors=True)
+        rows = [(k, f"v{k}") for k in keys]
+        snapshot_commit(
+            spark, tdir, spark.createDataFrame(rows, "k bigint, v string"),
+            bucket_by=("k", 4),
+        )
+        got = {r["k"] for r in snapshot_read(spark, tdir).collect()}
+        assert got == set(keys)
+
+
+def test_merge_parity_plain_and_bucketed_twins(spark, tmp_path):
+    """One snapshot_merge over both layouts: random merge sequences
+    applied to a plain twin and a bucketed twin give the same
+    snapshot_read rows at every version (all versions' reads held at
+    once); every bucketed rewrite keeps bucket-id file names and the
+    spec, and its clause join plans no Exchange."""
+    import uuid
+
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    from data_pipeline_cursor_spark import catalog as C
+
+    keys = st.integers(0, 24)
+    change = st.tuples(st.booleans(), st.sampled_from(["x", "y", "z"]))
+    merges = st.lists(
+        st.dictionaries(keys, change, min_size=1, max_size=6),
+        min_size=1, max_size=2,
+    )
+
+    @settings(
+        max_examples=10,
+        deadline=None,
+        suppress_health_check=[HealthCheck.function_scoped_fixture],
+    )
+    @given(base=st.sets(keys, min_size=1, max_size=10), batches=merges)
+    def check(base, batches):
+        run = tmp_path / uuid.uuid4().hex[:8]
+        plain, bucketed = str(run / "plain"), str(run / "bucketed")
+        rows = spark.createDataFrame(
+            [(k, f"b{k}") for k in sorted(base)], "k bigint, v string"
+        )
+        C.snapshot_commit(spark, plain, rows)
+        C.snapshot_commit(spark, bucketed, rows, bucket_by=("k", 4))
+        spec = C._load_manifest(bucketed, 1)["bucket_spec"]
+        for batch in batches:
+            src = spark.createDataFrame(
+                [(k, v, d) for k, (d, v) in sorted(batch.items())],
+                "k bigint, v string, _delete boolean",
+            )
+            C.snapshot_merge(spark, plain, src, key="k")
+            C.LAST_BUCKETED_MERGE_PLAN = None
+            v = C.snapshot_merge(spark, bucketed, src, key="k")
+            assert "Exchange" not in C.LAST_BUCKETED_MERGE_PLAN
+            m = C._load_manifest(bucketed, v)
+            assert m["bucket_spec"] == spec
+            assert _bucket_ids(m["files"]) <= set(range(4))
+        reads = {
+            v: [C.snapshot_read(spark, t, v) for t in (plain, bucketed)]
+            for v in C.snapshot_versions(plain)
+        }
+        for v, dfs in reads.items():
+            want, got = ({tuple(r) for r in df.collect()} for df in dfs)
+            assert got == want, (v, got ^ want)
+
+    check()
 
 
 def test_manifest_list_bounds_per_commit_metadata(spark, tmp_path):
@@ -1753,18 +1865,17 @@ def test_manifest_list_bounds_per_commit_metadata(spark, tmp_path):
     )
     assert {r["k"] for r in snapshot_read(spark, tdir).collect()} == before
 
-    # on-disk format pin: the exact keys each of the nine writers puts in
-    # its per-commit manifest and in its snapshot file
+    # on-disk format pin: the exact keys of the nine manifest shapes
+    # (snapshot_commit and snapshot_merge write one per layout) in the
+    # per-commit manifest and in the snapshot file
     import json
 
     from pyspark.sql import functions as F
 
     from data_pipeline_cursor_spark.catalog import (
-        snapshot_commit_bucketed,
         snapshot_commit_partitioned,
         snapshot_delete_keys,
         snapshot_merge,
-        snapshot_merge_bucketed,
         snapshot_publish,
         snapshot_rollback,
         snapshot_stage,
@@ -1802,10 +1913,10 @@ def test_manifest_list_bounds_per_commit_metadata(spark, tmp_path):
          None, snap + ["delete_key", "rolled_back_from", "rolled_back_to"]),
         (fmt, lambda: snapshot_compact(spark, fmt),
          data, snap + ["compacted"]),
-        (fmtb, lambda: snapshot_commit_bucketed(
-            spark, fmtb, frame(range(8), "b"), "k", 2),
+        (fmtb, lambda: snapshot_commit(
+            spark, fmtb, frame(range(8), "b"), bucket_by=("k", 2)),
          data, snap + ["bucket_spec"]),
-        (fmtb, lambda: snapshot_merge_bucketed(
+        (fmtb, lambda: snapshot_merge(
             spark, fmtb, upsert([2, 30]), key="k"),
          data + ["removed_files"], snap + ["bucket_spec", "merged"]),
     ]
@@ -1982,11 +2093,10 @@ def committed_table(spark, tmp_path_factory):
         lambda s, t: catalog.snapshot_read_time_range(
             s, t, "2024-01-01 00:00:00", "2024-01-02 00:00:00", version=9
         ),
-        lambda s, t: catalog.snapshot_read_bucketed(s, t, version=9),
     ],
     ids=[
         "read", "read_sql", "changes", "files", "delete_files", "count",
-        "partitions", "time_range", "bucketed",
+        "partitions", "time_range",
     ],
 )
 def test_uncommitted_version_raises_same_error(spark, committed_table, read):
@@ -2054,12 +2164,10 @@ def test_merge_into_table_dir_needing_url_escaping(spark, tmp_path, dirname):
     """Touched-file detection maps Spark's ``_metadata.file_path`` (a
     percent-encoded URI) back to manifest relpaths: a table dir holding
     a space or a literal '%20' must merge like any other, through both
-    the plain and the bucketed writer."""
+    the plain and the bucketed layout."""
     from data_pipeline_cursor_spark.catalog import (
         snapshot_commit,
-        snapshot_commit_bucketed,
         snapshot_merge,
-        snapshot_merge_bucketed,
         snapshot_read,
     )
 
@@ -2076,8 +2184,8 @@ def test_merge_into_table_dir_needing_url_escaping(spark, tmp_path, dirname):
     snapshot_commit(spark, plain, base.repartition(3))
     snapshot_merge(spark, plain, src, key="k")
     bucketed = str(tmp_path / dirname / "bucketed")
-    snapshot_commit_bucketed(spark, bucketed, base, key="k", buckets=4)
-    snapshot_merge_bucketed(spark, bucketed, src, key="k")
+    snapshot_commit(spark, bucketed, base, bucket_by=("k", 4))
+    snapshot_merge(spark, bucketed, src, key="k")
     for tdir in (plain, bucketed):
         got = {(r["k"], r["v"]) for r in snapshot_read(spark, tdir).collect()}
         assert got == want, (tdir, got ^ want)

@@ -1101,8 +1101,9 @@ def test_snapshot_feed_splits_huge_commits_and_flags_expired_offsets(
 
 def test_prune_stale_removes_aged_ann_serve_outputs(tmp_path, monkeypatch):
     """s_ann_serve writes a fresh uuid dir under the annserve family on
-    every run; the once-per-process prune must age those out like the
-    other uuid families, and keep a fresh one."""
+    every run, and every process a fresh formats/<pid> root; the
+    once-per-process prune must age those out like the other uuid
+    families, and keep a fresh one."""
     import os
     import time
 
@@ -1110,16 +1111,23 @@ def test_prune_stale_removes_aged_ann_serve_outputs(tmp_path, monkeypatch):
 
     monkeypatch.setattr(jobs, "_WORK_ROOT", str(tmp_path))
     monkeypatch.setattr(jobs, "_PRUNED", False)
-    old = tmp_path / "annserve" / "0a1b2c3d"
-    fresh = tmp_path / "annserve" / "4e5f6a7b"
-    for d in (old, fresh):
-        d.mkdir(parents=True)
-        (d / "part-0.parquet").write_bytes(b"x")
     aged = time.time() - 7 * 3600
-    os.utime(old / "part-0.parquet", (aged, aged))
-    os.utime(old, (aged, aged))
+    dirs = []
+    for family, old_name, fresh_name in (
+        ("annserve", "0a1b2c3d", "4e5f6a7b"),
+        ("formats", "1234", "5678"),
+    ):
+        old = tmp_path / family / old_name
+        fresh = tmp_path / family / fresh_name
+        for d in (old, fresh):
+            d.mkdir(parents=True)
+            (d / "part-0.parquet").write_bytes(b"x")
+        os.utime(old / "part-0.parquet", (aged, aged))
+        os.utime(old, (aged, aged))
+        dirs.append((old, fresh))
 
     jobs._prune_stale()
 
-    assert not old.exists()
-    assert fresh.exists()
+    for old, fresh in dirs:
+        assert not old.exists(), old
+        assert fresh.exists(), fresh
