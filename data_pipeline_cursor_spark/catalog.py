@@ -188,104 +188,26 @@ def hour_pruned_scan(spark: SparkSession, table: str, hour: str) -> DataFrame:
     return t.filter((F.col("ts") >= start) & (F.col("ts") < end))
 
 
-# What the bucketed tables CURRENTLY contain — a single value, not a
-# grow-only set: lineitem_bkt/orders_bkt are one global resource, so only
-# the LAST build matters (a set would let an sf0.01 key pass after an
-# sf0.001 rebuild and serve wrong-scale data — r4 review finding).  Set by
-# create_bucketed_facts itself so direct calls (tests) update it too.
-_BUCKETED_CURRENT: tuple | None = None
+# q_join_bucketed's facts: table -> (bucket key, the columns the join reads)
+_BUCKETED_FACTS = {
+    "lineitem": ("l_orderkey", "l_extendedprice", "l_discount"),
+    "orders": ("o_orderkey", "o_orderpriority"),
+}
 
 
-def _bucketed_key(spark: SparkSession, sf_dir: str, buckets: int) -> tuple:
-    from data_pipeline_cursor_spark.sources.tables import table_path, tree_fingerprint
-
-    prints = []
-    for name in ("lineitem", "orders"):  # BOTH sides: either may regenerate
-        # data-file fingerprint — robust for part-file DIRECTORY fixtures
-        # (sf1/sf10), where the dir inode stat misses in-place overwrites
-        prints.append(tree_fingerprint(table_path(sf_dir, name)))
-    return (
-        spark.conf.get("spark.sql.warehouse.dir"),
+def _bucketed_fact(spark: SparkSession, sf_dir: str, table: str) -> str:
+    """The dir of ``table``'s fixture for q_join_bucketed: its join
+    columns committed as a manifest bucket table, 8 buckets on its
+    orderkey, keyed by ``table``'s own fingerprint."""
+    cols = _BUCKETED_FACTS[table]
+    return _fixture_table(
+        spark,
         sf_dir,
-        buckets,
-        *prints,
+        f"bkt{table}",
+        [lambda d, t: snapshot_commit(spark, d, t, bucket_by=(cols[0], 8))],
+        cols=cols,
+        table=table,
     )
-
-
-def create_bucketed_facts(
-    spark: SparkSession, sf_dir: str, buckets: int = 8
-) -> None:
-    """Materialize lineitem & orders bucketed (and sorted) on their join key.
-
-    The 100-TB layout rule from PLANS.md: the fact⋈fact join
-    (lineitem⋈orders on orderkey) is the one join in the star schema that
-    cannot broadcast; with both sides written `bucketBy(N, orderkey)` the
-    join needs NO shuffle exchange at read time — each bucket pair joins
-    co-located, cost linear in data size regardless of cluster scale.
-    (The reference has no bucketing — Iceberg hour(ts) partitioning only,
-    /root/reference/trino/sql/init-tables.sql:11 — this is the Spark-side
-    layout that replaces it for join-heavy batch workloads.)
-    """
-    for name, key in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
-        spark.sql(f"DROP TABLE IF EXISTS {name}_bkt")
-        # a fresh session's catalog may not know a table whose managed
-        # location survived from an earlier session — clear the dir too
-        loc = os.path.join(
-            spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:"),
-            f"{name}_bkt",
-        )
-        if os.path.exists(loc):
-            shutil.rmtree(loc)
-        (
-            load_table(spark, sf_dir, name)
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(buckets, key)
-            .sortBy(key)
-            .saveAsTable(f"{name}_bkt")
-        )
-    global _BUCKETED_CURRENT
-    _BUCKETED_CURRENT = _bucketed_key(spark, sf_dir, buckets)
-
-
-def bucketed_fact_join(spark: SparkSession) -> DataFrame:
-    """Per-order revenue over the bucketed facts — a ZERO-exchange plan.
-
-    Join keys == bucket keys on both sides, so the sort-merge join reads
-    buckets co-located; the groupBy key equals the join key, so the
-    aggregation reuses the same distribution. The whole plan (2 scans →
-    SMJ → partial+final agg) runs without one shuffle — the plan shape a
-    1000-executor cluster needs for its biggest join. Plan-asserted in
-    tests/test_plans.py::test_bucketed_fact_join_has_no_exchange.
-    """
-    li = spark.table("lineitem_bkt")
-    o = spark.table("orders_bkt")
-    return (
-        li.hint("merge")  # pin SMJ: broadcast would hide the bucketing story
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_orderkey", "o_orderpriority")
-        .agg(
-            stable_round4(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-            ).alias("revenue"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
-
-
-def ensure_bucketed_facts(
-    spark: SparkSession, sf_dir: str, buckets: int = 8
-) -> None:
-    """Rebuild the bucketed facts unless the CURRENT build already matches
-    this exact (warehouse, sf_dir, buckets, fixture fingerprints) request
-    and the tables still exist.  Reuse-within-process like
-    write_landing_fixture; any other build in between invalidates."""
-    key = _bucketed_key(spark, sf_dir, buckets)
-    if _BUCKETED_CURRENT == key and all(
-        spark.catalog.tableExists(t) for t in ("lineitem_bkt", "orders_bkt")
-    ):
-        return
-    create_bucketed_facts(spark, sf_dir, buckets)
 
 
 @register(
@@ -300,19 +222,32 @@ def ensure_bucketed_facts(
     """,
 )
 def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The zero-exchange fact⋈fact join as a first-class query: lineitem
-    and orders materialized `bucketBy(8, orderkey)` once per fixture
-    (reused across calls via fingerprint), then joined AND aggregated with
-    no shuffle — plan-asserted Exchange-free in
-    tests/test_plans.py::test_bucketed_fact_join_has_no_exchange.
-
-    This is the 100 TB layout answer for the one join in the schema that
-    cannot broadcast: pay the shuffle ONCE at write time, run every
-    subsequent join/agg on the bucket distribution for free.  Results are
-    value-identical to the unbucketed join, which is exactly what the
-    oracle checks."""
-    ensure_bucketed_facts(spark, sf_dir)
-    return bucketed_fact_join(spark)
+    """The zero-exchange fact⋈fact join, the 100-TB layout rule from
+    PLANS.md: lineitem⋈orders on orderkey is the one join in the star
+    schema that cannot broadcast, so both facts are committed once as
+    manifest bucket tables on orderkey (_bucketed_fact; Iceberg's
+    bucket(N, key) transform).  snapshot_read returns them as bucket
+    tables, so the sort-merge join reads the buckets co-located and the
+    per-orderkey aggregation reuses the same distribution: two scans →
+    SMJ → partial+final agg, no shuffle (plan-asserted in
+    tests/test_plans.py::test_bucketed_fact_join_has_no_exchange).  The
+    shuffle is paid ONCE at write time; results are value-identical to
+    the unbucketed join, which is exactly what the oracle checks."""
+    li, o = (
+        snapshot_read(spark, _bucketed_fact(spark, sf_dir, t))
+        for t in ("lineitem", "orders")
+    )
+    return (
+        li.hint("merge")  # pin SMJ: broadcast would hide the bucketing story
+        .join(o, li.l_orderkey == o.o_orderkey)
+        .groupBy("l_orderkey", "o_orderpriority")
+        .agg(
+            stable_round4(
+                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+            ).alias("revenue"),
+            F.count(F.lit(1)).alias("n_lines"),
+        )
+    )
 
 
 @register(
@@ -807,11 +742,54 @@ def _attempt_data_dir(
     return os.path.join(table_dir, rel), rel
 
 
+# ---------------------------------------------------------------------------
+# Partition-transform evolution (Iceberg partition-spec evolution): the
+# reference's lakehouse is laid out hour(ts) (trino/sql/init-tables.sql:11);
+# a table that REGRAINS to day(ts) keeps old commits readable without a
+# rewrite, because each file records the transform it was written under
+# and a time-range read prunes each generation BY ITS OWN TRANSFORM.
+# ---------------------------------------------------------------------------
+
+# transform -> (Spark date_format pattern, strptime pattern, seconds/grain)
+PARTITION_TRANSFORMS = {
+    "hour": ("yyyy-MM-dd-HH", "%Y-%m-%d-%H", 3600),
+    "day": ("yyyy-MM-dd", "%Y-%m-%d", 86400),
+}
+
+
+def _time_range_files(
+    manifest: dict, lo, hi
+) -> tuple[list[str], list[str]]:
+    """Manifest-driven split planning for a half-open [lo, hi) time-range
+    read: each file with a recorded (transform, value) is kept only if
+    its OWN grain's interval intersects the range — the hour-generation
+    files prune at hour grain, the day-generation files at day grain,
+    in one pass, exactly Iceberg's per-spec partition pruning.  Files
+    with no recorded partition (unpartitioned generations) or a NULL
+    partition value cannot be pruned and are always kept.  Returns
+    (kept, pruned) relpaths — pure driver-side metadata, no file I/O."""
+    from datetime import datetime, timedelta
+
+    fparts = manifest.get("file_partitions", {})
+    kept, pruned = [], []
+    for f in manifest["files"]:
+        rec = fparts.get(f)
+        if rec is None or rec["value"] is None:
+            kept.append(f)
+            continue
+        _, fmt_py, secs = PARTITION_TRANSFORMS[rec["transform"]]
+        start = datetime.strptime(rec["value"], fmt_py)
+        end = start + timedelta(seconds=secs)
+        (kept if (start < hi and end > lo) else pruned).append(f)
+    return kept, pruned
+
+
 def snapshot_commit(
     spark: SparkSession,
     table_dir: str,
     df: DataFrame,
     bucket_by: tuple[str, int] | None = None,
+    partition_by: tuple[str, str] | None = None,
 ) -> int:
     """Append ``df`` as the next commit of a manifest-versioned table and
     return the new version.  Data files land under
@@ -826,23 +804,54 @@ def snapshot_commit(
     version A > D is visible again — Iceberg v2's actual equality-delete
     scoping, not a table-lifetime tombstone.
 
-    On a bucketed table (its manifest records a ``bucket_spec``) the
-    files land as bucket files under that spec; ``bucket_by=(key, n)``
-    declares the spec on an empty table (Iceberg's ``bucket(n, key)``
-    transform) — see _bucket_layout for the rules."""
+    The layout is a strategy of this one writer:
+
+    - plain: the files land as written;
+    - bucketed: on a table whose manifest records a ``bucket_spec`` the
+      files land as bucket files under it; ``bucket_by=(key, n)``
+      declares the spec on an empty table (Iceberg's ``bucket(n, key)``
+      transform) — see _bucket_layout for the rules;
+    - partitioned: ``partition_by=(transform, ts_col)`` lays THIS commit
+      out by ``transform(ts_col)`` (hour | day) under ``_part=<value>/``
+      dirs and records each file's transform and value in
+      ``file_partitions`` (an Iceberg entry's spec id + partition
+      tuple), so a ``time_range`` read prunes it at its own grain.  A
+      NULL ``ts_col`` is recorded as value None: never pruned, dropped
+      by the residual predicate.  The input is repartitioned on the
+      value first (PLANS.md rewrite 3): no T tasks x P partitions files."""
     txn = _Txn(table_dir)
     spec = _bucket_layout(
-        txn.base, "snapshot_commit", bucket_by=bucket_by, df=df
+        txn.base, "snapshot_commit", bucket_by=bucket_by, df=df,
+        plain=partition_by is not None,
     )
-    if spec is None:
+    if spec is not None:
+        tag = f"c{txn.version}_{_table_tag(table_dir)}"
+        return txn.commit(
+            lambda d: _write_bucketed_files(spark, df, spec, d, tag),
+            extras={**_snapshot_extras(txn.base), "bucket_spec": spec},
+        )
+    if partition_by is None:
         # the delta manifest records ONLY this commit's files (with bounds
         # read once at write time); prior generations' records need no
         # carrying — they live in the earlier immutable entries
         return txn.commit(lambda d: df.write.mode("overwrite").parquet(d))
-    tag = f"c{txn.version}_{_table_tag(table_dir)}"
+    transform, ts_col = partition_by
+    if transform not in PARTITION_TRANSFORMS:
+        raise ValueError(
+            f"unknown transform {transform!r} "
+            f"(have {sorted(PARTITION_TRANSFORMS)})"
+        )
+    part = F.date_format(F.col(ts_col), PARTITION_TRANSFORMS[transform][0])
     return txn.commit(
-        lambda d: _write_bucketed_files(spark, df, spec, d, tag),
-        extras={**_snapshot_extras(txn.base), "bucket_spec": spec},
+        lambda d: (
+            df.withColumn("_part", part)
+            .repartition(F.col("_part"))
+            .write.mode("overwrite")
+            .partitionBy("_part")
+            .parquet(d)
+        ),
+        part_col="_part",
+        part_record=lambda _dir, value: {"transform": transform, "value": value},
     )
 
 
@@ -1329,6 +1338,7 @@ def snapshot_read(
     table_dir: str,
     version: int | None = None,
     partition: tuple | None = None,
+    time_range: tuple[str, str, str] | None = None,
 ) -> DataFrame:
     """Read the table AS OF a committed version (``FOR SYSTEM_TIME AS OF``
     / Iceberg ``VERSION AS OF`` semantics); None = latest.  The scan is a
@@ -1350,24 +1360,48 @@ def snapshot_read(
     table-wide ones — are loaded (Iceberg's partition-scoped delete
     manifests).
 
-    A bucketed table (manifest ``bucket_spec``) with no delete files
-    reads as a bucket table instead (_bucketed_read): same rows, but
-    key lookups bucket-prune and key joins need no Exchange."""
+    ``time_range=(ts_col, lo, hi)`` reads the half-open range [lo, hi)
+    ('YYYY-MM-DD HH:MM:SS', session timezone): files are pruned from the
+    manifest, each by its own generation's transform (_time_range_files,
+    O(files) driver metadata), and the survivors are scanned with the
+    exact predicate as the residual filter.
+
+    A bucketed table (manifest ``bucket_spec``) read whole with no
+    delete files reads as a bucket table instead (_bucketed_read): same
+    rows, but key lookups bucket-prune and key joins need no Exchange."""
     v, manifest = _resolve_version(table_dir, version)
     if (
         manifest.get("bucket_spec")
         and not manifest.get("delete_files")
         and partition is None
+        and time_range is None
     ):
         return _bucketed_read(spark, table_dir, v, manifest)
-    return _read_files_with_deletes(
-        spark, table_dir, manifest["files"], manifest, partition
+    if time_range is None:
+        return _read_files_with_deletes(
+            spark, table_dir, manifest["files"], manifest, partition
+        )
+    from datetime import datetime
+
+    ts_col, lo, hi = time_range
+    bounds = (datetime.strptime(t, "%Y-%m-%d %H:%M:%S") for t in (lo, hi))
+    kept, _ = _time_range_files(manifest, *bounds)
+    # nothing kept: any file still gives the schema, and the constant
+    # false filter plans an empty relation with no scan
+    df = _read_files_with_deletes(
+        spark, table_dir, kept or manifest["files"], manifest, partition
+    )
+    return df.filter(
+        (F.col(ts_col) >= F.lit(lo).cast("timestamp"))
+        & (F.col(ts_col) < F.lit(hi).cast("timestamp"))
+        if kept
+        else F.lit(False)
     )
 
 
-def _fixture_dir(sf_dir: str, name: str) -> str:
-    """Work dir ``<name>-<fp>`` of a fixture derived from the events
-    table, keyed by (pid, sf, the events table's content fingerprint) —
+def _fixture_dir(sf_dir: str, name: str, table: str = "events") -> str:
+    """Work dir ``<name>-<fp>`` of a fixture derived from the source
+    ``table``, keyed by (pid, sf, that table's content fingerprint) —
     the same reuse discipline as the landing fixtures."""
     from data_pipeline_cursor_spark.sources.formats import _work_dir
     from data_pipeline_cursor_spark.sources.tables import (
@@ -1375,7 +1409,7 @@ def _fixture_dir(sf_dir: str, name: str) -> str:
         tree_fingerprint,
     )
 
-    fp = tree_fingerprint(table_path(sf_dir, "events")).replace("-", "_")
+    fp = tree_fingerprint(table_path(sf_dir, table)).replace("-", "_")
     return _work_dir(sf_dir, f"{name}-{fp}")
 
 
@@ -1388,23 +1422,24 @@ def _fixture_table(
     name: str,
     steps: list[FixtureStep],
     cols: tuple[str, ...] = ("event_id", "event_type"),
+    table: str = "events",
 ) -> str:
     """Build, or resume building, a manifest-versioned fixture table and
     return its dir.  ``steps[i](table_dir, ev)`` commits exactly version
-    ``i + 1`` from ``ev``, the events table's ``cols``; only the steps
-    after the latest committed version run, so a build interrupted after
-    any commit resumes where it stopped instead of re-committing.  A
-    table at or past ``len(steps)`` versions is complete (a later
+    ``i + 1`` from ``ev``, the source ``table``'s ``cols``; only the
+    steps after the latest committed version run, so a build interrupted
+    after any commit resumes where it stopped instead of re-committing.
+    A table at or past ``len(steps)`` versions is complete (a later
     maintenance commit, such as a shared table's compaction, does not
     reopen it) and costs no Spark job: ``ev`` is built only when a step
     is left.  A step that commits no version or more than one
     fail-stops, because resuming by version number is sound only while
     version ``i + 1`` is step ``i``'s."""
-    table_dir = _fixture_dir(sf_dir, name)
+    table_dir = _fixture_dir(sf_dir, name, table)
     last = max(snapshot_versions(table_dir), default=0)
     if last >= len(steps):
         return table_dir
-    ev = load_table(spark, sf_dir, "events").select(*cols)
+    ev = load_table(spark, sf_dir, table).select(*cols)
     for i in range(last, len(steps)):
         steps[i](table_dir, ev)
         now = max(snapshot_versions(table_dir), default=0)
@@ -1934,8 +1969,8 @@ def _evolution_fixture(spark: SparkSession, sf_dir: str) -> str:
     split = F.lit(EVOLUTION_SPLIT).cast("timestamp")
 
     def generation(cond, grain):
-        return lambda d, ev: snapshot_commit_partitioned(
-            spark, d, ev.filter(cond), grain
+        return lambda d, ev: snapshot_commit(
+            spark, d, ev.filter(cond), partition_by=(grain, "ts")
         )
 
     return _fixture_table(
@@ -2714,140 +2749,6 @@ def publish_to_branch(table_dir: str, stage: str, branch: str) -> int:
     return new_v
 
 
-# ---------------------------------------------------------------------------
-# Partition-transform evolution (Iceberg partition-spec evolution): the
-# reference's lakehouse is laid out hour(ts) (trino/sql/init-tables.sql:11);
-# a table that later REGRAINS to day(ts) must keep old commits readable —
-# Iceberg never rewrites old data on a spec change; each manifest entry
-# remembers the spec its file was written under, and split planning prunes
-# each generation BY ITS OWN TRANSFORM.  Same mechanism here: each
-# partitioned commit records, per file, the transform + partition value it
-# was written under; a time-range read prunes every file against its own
-# generation's grain, driver-side from the manifest, before the scan.
-# ---------------------------------------------------------------------------
-
-# transform -> (Spark date_format pattern, strptime pattern, seconds/grain)
-PARTITION_TRANSFORMS = {
-    "hour": ("yyyy-MM-dd-HH", "%Y-%m-%d-%H", 3600),
-    "day": ("yyyy-MM-dd", "%Y-%m-%d", 86400),
-}
-
-
-def snapshot_commit_partitioned(
-    spark: SparkSession,
-    table_dir: str,
-    df: DataFrame,
-    transform: str,
-    ts_col: str = "ts",
-) -> int:
-    """Append ``df`` as the next commit, laid out by ``transform(ts_col)``
-    (hour | day) — data files land under
-    data/commit-<N>-<attempt-token>/_part=<value>/, and the manifest
-    records EACH FILE's transform + partition value (``file_partitions``),
-    which is exactly the spec-id + partition tuple an Iceberg manifest
-    entry carries.  A NULL ``ts_col`` lands in Spark's default-partition
-    dir and is recorded with value None (JSON null): time-range reads
-    always scan it and the residual predicate drops its rows.  Different
-    commits may use different transforms; readers prune each file by its
-    own recorded grain (snapshot_read_time_range).
-
-    The input is repartitioned on the derived partition value before the
-    write (PLANS.md rewrite 3) so T tasks x P partitions cannot open
-    T*P tiny files."""
-
-    spec = PARTITION_TRANSFORMS.get(transform)
-    if spec is None:
-        raise ValueError(
-            f"unknown transform {transform!r} "
-            f"(have {sorted(PARTITION_TRANSFORMS)})"
-        )
-    fmt_spark = spec[0]
-    txn = _Txn(table_dir)
-    _bucket_layout(txn.base, "snapshot_commit_partitioned", plain=True)
-    part = F.date_format(F.col(ts_col), fmt_spark).alias("_part")
-    return txn.commit(
-        lambda d: (
-            df.withColumn("_part", part)
-            .repartition(F.col("_part"))
-            .write.mode("overwrite")
-            .partitionBy("_part")
-            .parquet(d)
-        ),
-        part_col="_part",
-        # each file's transform + partition value — Iceberg's spec-id +
-        # partition tuple, scoped to THIS commit
-        part_record=lambda _dir, value: {"transform": transform, "value": value},
-    )
-
-
-def _time_range_files(
-    manifest: dict, lo, hi
-) -> tuple[list[str], list[str]]:
-    """Manifest-driven split planning for a half-open [lo, hi) time-range
-    read: each file with a recorded (transform, value) is kept only if
-    its OWN grain's interval intersects the range — the hour-generation
-    files prune at hour grain, the day-generation files at day grain,
-    in one pass, exactly Iceberg's per-spec partition pruning.  Files
-    with no recorded partition (unpartitioned generations) or a NULL
-    partition value cannot be pruned and are always kept.  Returns
-    (kept, pruned) relpaths — pure driver-side metadata, no file I/O."""
-    from datetime import datetime, timedelta
-
-    fparts = manifest.get("file_partitions", {})
-    kept, pruned = [], []
-    for f in manifest["files"]:
-        rec = fparts.get(f)
-        if rec is None or rec["value"] is None:
-            kept.append(f)
-            continue
-        _, fmt_py, secs = PARTITION_TRANSFORMS[rec["transform"]]
-        start = datetime.strptime(rec["value"], fmt_py)
-        end = start + timedelta(seconds=secs)
-        (kept if (start < hi and end > lo) else pruned).append(f)
-    return kept, pruned
-
-
-def snapshot_read_time_range(
-    spark: SparkSession,
-    table_dir: str,
-    lo: str,
-    hi: str,
-    ts_col: str = "ts",
-    version: int | None = None,
-) -> DataFrame:
-    """Time-range read over a table whose partition transform EVOLVED
-    (hour(ts) commits followed by day(ts) commits — Iceberg
-    partition-spec evolution on the reference's hour layout): files are
-    pruned driver-side from the manifest, EACH BY ITS OWN generation's
-    transform, then the surviving files are scanned (MOR deletes
-    applied) with the exact half-open predicate as the residual filter.
-    ``lo``/``hi`` are 'YYYY-MM-DD HH:MM:SS' strings, interpreted in the
-    session timezone exactly like the residual predicate itself.
-
-    100 TB: split planning is O(files) manifest metadata; the scan
-    reads only intersecting partitions of BOTH generations — a regrain
-    never forces a rewrite and never disables pruning on either side
-    (the two failure modes of hand-rolled layout migrations)."""
-    from datetime import datetime
-
-    _, manifest = _resolve_version(table_dir, version)
-    lo_dt = datetime.strptime(lo, "%Y-%m-%d %H:%M:%S")
-    hi_dt = datetime.strptime(hi, "%Y-%m-%d %H:%M:%S")
-    kept, _ = _time_range_files(manifest, lo_dt, hi_dt)
-    if not kept:
-        return (
-            _read_files_with_deletes(
-                spark, table_dir, manifest["files"], manifest
-            )
-            .filter(F.lit(False))
-        )
-    df = _read_files_with_deletes(spark, table_dir, kept, manifest)
-    return df.filter(
-        (F.col(ts_col) >= F.lit(lo).cast("timestamp"))
-        & (F.col(ts_col) < F.lit(hi).cast("timestamp"))
-    )
-
-
 def _merge_check_source(
     source: DataFrame, key: str
 ) -> tuple[DataFrame, tuple]:
@@ -3196,9 +3097,9 @@ def _bucket_layout(
     ``writer`` call over base manifest ``pm`` works under (None = plain
     layout), or a ValueError.
 
-    - ``plain`` writers (snapshot_commit_partitioned, snapshot_publish)
-      fail-stop on a bucketed table: their files carry no bucket ids,
-      which would break the co-located scan.
+    - ``plain`` writers (a ``partition_by`` commit, snapshot_publish)
+      fail-stop on a bucketed table, or with ``bucket_by``: their files
+      carry no bucket ids, which would break the co-located scan.
     - ``bucket_by=(key, n)`` declares the spec (schema from ``df``) on
       an empty table; it must match a recorded spec, and bucketing over
       plain generations fail-stops.
@@ -3211,10 +3112,10 @@ def _bucket_layout(
     snapshot_compact — the escape hatch every fail-stop names —
     rewrites the layout plain."""
     spec = pm.get("bucket_spec") if pm else None
-    if spec and plain:
+    if plain and (spec or bucket_by):
         raise ValueError(
-            f"{writer}: table is bucketed ({spec['key']} x "
-            f"{spec['buckets']}) — commit through snapshot_commit, or "
+            f"{writer}: a bucketed layout takes only bucket files — "
+            "commit through snapshot_commit without partition_by, or "
             "snapshot_compact to rewrite the layout"
         )
     if bucket_by is not None:
@@ -3915,9 +3816,7 @@ def partition_evolution_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     (out-of-range hour dirs AND out-of-range day dirs absent from
     inputFiles)."""
     table_dir = _evolution_fixture(spark, sf_dir)
-    snap = snapshot_read_time_range(
-        spark, table_dir, EVOLUTION_RANGE[0], EVOLUTION_RANGE[1]
-    )
+    snap = snapshot_read(spark, table_dir, time_range=("ts", *EVOLUTION_RANGE))
     return _count_checksum(snap, "pe", "event_type")
 
 

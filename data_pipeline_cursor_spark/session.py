@@ -46,18 +46,31 @@ _RUNTIME_SQL_CONFS = {
 }
 
 
+# The checkout holding this package.  Python workers unpickle UDFs and
+# mapInPandas functions that import it, and they start in the JVM's
+# working directory with only Spark's own path, not the driver's sys.path.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply the mutable session confs we depend on to an existing session.
 
     Safe on any session (these are runtime-settable SQL confs, not JVM
     start-up options).  Called by the table loader so that driver-owned
-    sessions behave identically to ours.
+    sessions behave identically to ours.  Also puts the package's
+    checkout on the Python workers' PYTHONPATH: the context's
+    ``environment`` is shipped with every Python function, so a session
+    run from any working directory finds the package.
     """
     for k, v in _RUNTIME_SQL_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # conf locked by the host environment — proceed
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_ROOT, *paths])
     return spark
 
 

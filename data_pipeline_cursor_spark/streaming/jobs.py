@@ -1441,25 +1441,38 @@ def s_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed older upsert can never resurrect a deleted key; reads
     filter tombstones.
 
-    Scale: the state table is key-cardinality-sized; the fixture apply
-    rewrites it per batch behind an atomic directory swap; at 100 TB a
-    transactional format would scope each apply to matched files, with
-    no table rewrite."""
-    import os
-    import shutil
+    Each batch publishes through the catalog: the first as a
+    snapshot_commit, every later one as a snapshot_merge on event_type
+    whose source is the batch's winning rows, so a crash at any point
+    leaves the table on its last published snapshot.  The table is
+    key-cardinality-sized; at 100 TB the merge's file pruning scopes
+    each apply to the touched files."""
     import uuid
 
     from pyspark.sql.window import Window
 
-    table_dir = _work("serving", "cdc-" + uuid.uuid4().hex[:8])
-    schema = (
-        "event_type string, version_ts timestamp, version_id long, "
-        "last_value double, op string"
+    from data_pipeline_cursor_spark.catalog import (
+        snapshot_commit,
+        snapshot_merge,
+        snapshot_read,
+        snapshot_versions,
     )
+
+    table_dir = _work("serving", "cdc-" + uuid.uuid4().hex[:8])
+    wv = Window.partitionBy("event_type").orderBy(
+        F.desc("version_ts"), F.desc("version_id")
+    )
+
+    def argmax(df: DataFrame) -> DataFrame:
+        return (
+            df.withColumn("rn", F.row_number().over(wv))
+            .filter(F.col("rn") == 1)
+            .drop("rn")
+        )
 
     def apply_cdc(batch: DataFrame, _id: int) -> None:
         sp = batch.sparkSession
-        incoming = (
+        incoming = argmax(
             batch.filter(F.col("event_type") != FLUSH_TYPE)
             .dropna(subset=["event_id", "event_time"])
             .select(
@@ -1470,40 +1483,26 @@ def s_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("value") < 50, "D").otherwise("U").alias("op"),
             )
         )
-        wv = Window.partitionBy("event_type").orderBy(
-            F.desc("version_ts"), F.desc("version_id")
-        )
-        incoming = (
-            incoming.withColumn("rn", F.row_number().over(wv))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
         if incoming.isEmpty():
             return
-        data = os.path.join(table_dir, "data")
-        if os.path.exists(data):
-            cur = sp.read.schema(schema).parquet(data)
-            merged = cur.unionByName(incoming)
-        else:
-            merged = incoming
-        final = (
-            merged.withColumn("rn", F.row_number().over(wv))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-        tmp = os.path.join(table_dir, "tmp-" + uuid.uuid4().hex[:8])
-        final.coalesce(1).write.mode("overwrite").parquet(tmp)
-        old = os.path.join(table_dir, "old-" + uuid.uuid4().hex[:8])
-        if os.path.exists(data):
-            os.rename(data, old)
-        os.rename(tmp, data)
-        shutil.rmtree(old, ignore_errors=True)
+        if not snapshot_versions(table_dir):
+            snapshot_commit(sp, table_dir, incoming)
+            return
+        # merge source: the keys whose newest version arrived in this
+        # batch, as upserts (_delete False); the table's rows are tagged
+        # True only to drop them after the argmax, so a replayed or older
+        # row loses to the table's row and changes nothing
+        won = argmax(
+            snapshot_read(sp, table_dir)
+            .withColumn("_delete", F.lit(True))
+            .unionByName(incoming.withColumn("_delete", F.lit(False)))
+        ).filter(~F.col("_delete"))
+        if not won.isEmpty():
+            snapshot_merge(sp, table_dir, won, key="event_type")
 
     drain(_stream(spark, sf_dir), _ckpt("cdc-apply"), apply_cdc)
-    data = os.path.join(table_dir, "data")
     return (
-        spark.read.schema(schema)
-        .parquet(data)
+        snapshot_read(spark, table_dir)
         .filter(F.col("op") == "U")
         .select(
             "event_type",
@@ -1551,7 +1550,9 @@ def s_query_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pipeline must never have.  Under an availableNow drain the true
     # ingested total is a pure batch line count of the landing fixture;
     # cross-check and fail loudly.
-    expected = spark.read.text(os.path.join(landing, "*.json")).count()
+    expected = (
+        spark.read.option("pathGlobFilter", "*.json").text(landing).count()
+    )
     if rows != expected:
         raise RuntimeError(
             f"s_query_metrics undercounted: progress sum {rows} != landing "

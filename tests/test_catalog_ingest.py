@@ -1046,9 +1046,8 @@ def test_partition_records_survive_mixed_writers(spark, tmp_path):
     from data_pipeline_cursor_spark.catalog import (
         _load_manifest,
         snapshot_commit,
-        snapshot_commit_partitioned,
         snapshot_delete_keys,
-        snapshot_read_time_range,
+        snapshot_read,
         snapshot_rollback,
         snapshot_versions,
     )
@@ -1061,7 +1060,7 @@ def test_partition_records_survive_mixed_writers(spark, tmp_path):
     df = spark.createDataFrame(rows, "k bigint, tss string, v string").select(
         "k", F.col("tss").cast("timestamp").alias("ts"), "v"
     )
-    snapshot_commit_partitioned(spark, tdir, df, "day")            # v1
+    snapshot_commit(spark, tdir, df, partition_by=("day", "ts"))  # v1
     extra = spark.createDataFrame(
         [(100, "2024-01-02 05:00:00", "x")], "k bigint, tss string, v string"
     ).select("k", F.col("tss").cast("timestamp").alias("ts"), "v")
@@ -1081,8 +1080,9 @@ def test_partition_records_survive_mixed_writers(spark, tmp_path):
     # a day-1 row: stays deleted table-wide... k=3: 3%3=0 -> day 1).
     got = {
         r["k"]
-        for r in snapshot_read_time_range(
-            spark, tdir, "2024-01-02 00:00:00", "2024-01-03 00:00:00"
+        for r in snapshot_read(
+            spark, tdir,
+            time_range=("ts", "2024-01-02 00:00:00", "2024-01-03 00:00:00"),
         ).collect()
     }
     expect = {k for k in range(12) if k % 3 == 1} | {100}
@@ -1093,8 +1093,9 @@ def test_partition_records_survive_mixed_writers(spark, tmp_path):
     )                                                              # v4
     got2 = {
         r["k"]
-        for r in snapshot_read_time_range(
-            spark, tdir, "2024-01-02 00:00:00", "2024-01-03 00:00:00"
+        for r in snapshot_read(
+            spark, tdir,
+            time_range=("ts", "2024-01-02 00:00:00", "2024-01-03 00:00:00"),
         ).collect()
     }
     assert got2 == expect - {4}, got2
@@ -1122,10 +1123,9 @@ def test_partition_records_survive_delete_before_append(spark, tmp_path):
         _load_manifest,
         _time_range_files,
         snapshot_commit,
-        snapshot_commit_partitioned,
         snapshot_delete_keys,
         snapshot_publish,
-        snapshot_read_time_range,
+        snapshot_read,
         snapshot_stage,
         snapshot_versions,
     )
@@ -1137,7 +1137,7 @@ def test_partition_records_survive_delete_before_append(spark, tmp_path):
     df = spark.createDataFrame(rows, "k bigint, tss string, v string").select(
         "k", F.col("tss").cast("timestamp").alias("ts"), "v"
     )
-    snapshot_commit_partitioned(spark, tdir, df, "day")            # v1
+    snapshot_commit(spark, tdir, df, partition_by=("day", "ts"))  # v1
     snapshot_delete_keys(
         spark, tdir, spark.createDataFrame([(0,)], "k bigint"), key="k"
     )                                                              # v2 MOR
@@ -1163,8 +1163,9 @@ def test_partition_records_survive_delete_before_append(spark, tmp_path):
 
     got = {
         r["k"]
-        for r in snapshot_read_time_range(
-            spark, tdir, "2024-01-02 00:00:00", "2024-01-03 00:00:00"
+        for r in snapshot_read(
+            spark, tdir,
+            time_range=("ts", "2024-01-02 00:00:00", "2024-01-03 00:00:00"),
         ).collect()
     }
     expect = ({k for k in range(8) if k % 2 == 1} | {100}) - {0}
@@ -1438,7 +1439,6 @@ def test_manifest_carry_property_random_writer_sequences(spark, tmp_path):
     from data_pipeline_cursor_spark.catalog import (
         _load_manifest,
         snapshot_commit,
-        snapshot_commit_partitioned,
         snapshot_compact,
         snapshot_delete_keys,
         snapshot_merge,
@@ -1516,8 +1516,9 @@ def test_manifest_carry_property_random_writer_sequences(spark, tmp_path):
                         snapshot_stage(spark, tdir, df, f"st{counter[0]}_{nextk[0]}"),
                     )
                 else:
-                    v = snapshot_commit_partitioned(
-                        spark, tdir, df, op.removeprefix("part_")
+                    v = snapshot_commit(
+                        spark, tdir, df,
+                        partition_by=(op.removeprefix("part_"), "ts"),
                     )
                     m = _load_manifest(tdir, v)
                     part_files.update(
@@ -1629,7 +1630,6 @@ def test_bucketed_layout_mixing_policy(spark, tmp_path):
     from data_pipeline_cursor_spark.catalog import (
         _load_manifest,
         snapshot_commit,
-        snapshot_commit_partitioned,
         snapshot_compact,
         snapshot_delete_keys,
         snapshot_merge,
@@ -1680,7 +1680,12 @@ def test_bucketed_layout_mixing_policy(spark, tmp_path):
     # partitioned/publish onto a bucketed layout, merge on another key:
     # fail-stop
     with pytest.raises(ValueError, match="bucketed"):
-        snapshot_commit_partitioned(spark, bdir, extra, "day")
+        snapshot_commit(spark, bdir, extra, partition_by=("day", "ts"))
+    with pytest.raises(ValueError, match="bucketed"):
+        snapshot_commit(
+            spark, str(tmp_path / "both"), extra,
+            bucket_by=("k", 4), partition_by=("day", "ts"),
+        )
     stage = snapshot_stage(spark, bdir, extra, "bkt_aud")
     with pytest.raises(ValueError, match="bucketed"):
         snapshot_publish(bdir, stage)
@@ -1873,7 +1878,6 @@ def test_manifest_list_bounds_per_commit_metadata(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from data_pipeline_cursor_spark.catalog import (
-        snapshot_commit_partitioned,
         snapshot_delete_keys,
         snapshot_merge,
         snapshot_publish,
@@ -1898,8 +1902,9 @@ def test_manifest_list_bounds_per_commit_metadata(spark, tmp_path):
     writers = [
         (fmt, lambda: snapshot_commit(spark, fmt, frame(range(4), "c")),
          data, snap),
-        (fmt, lambda: snapshot_commit_partitioned(
-            spark, fmt, frame(range(10, 14), "p"), "hour"),
+        (fmt, lambda: snapshot_commit(
+            spark, fmt, frame(range(10, 14), "p"),
+            partition_by=("hour", "ts")),
          data + ["file_partitions"], snap),
         (fmt, lambda: snapshot_delete_keys(
             spark, fmt, spark.createDataFrame([(11,)], "k bigint"), key="k"),
@@ -2000,9 +2005,9 @@ def test_partitioned_commit_null_ts_partition(spark, tmp_path):
 
     from data_pipeline_cursor_spark.catalog import (
         _load_manifest,
-        snapshot_commit_partitioned,
+        snapshot_commit,
         snapshot_partitions_metadata,
-        snapshot_read_time_range,
+        snapshot_read,
     )
 
     tdir = str(tmp_path / "nullts")
@@ -2015,11 +2020,12 @@ def test_partitioned_commit_null_ts_partition(spark, tmp_path):
     df = spark.createDataFrame(rows, "k bigint, ts string").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
-    snapshot_commit_partitioned(spark, tdir, df, "hour")
+    snapshot_commit(spark, tdir, df, partition_by=("hour", "ts"))
     fparts = _load_manifest(tdir, 1)["file_partitions"]
     assert None in {r["value"] for r in fparts.values()}
-    got = snapshot_read_time_range(
-        spark, tdir, "2024-01-01 00:00:00", "2024-01-01 02:00:00"
+    got = snapshot_read(
+        spark, tdir,
+        time_range=("ts", "2024-01-01 00:00:00", "2024-01-01 02:00:00"),
     )
     assert sorted(r["k"] for r in got.collect()) == [1, 2]
     parts = {
@@ -2090,8 +2096,9 @@ def committed_table(spark, tmp_path_factory):
         ),
         lambda s, t: catalog.snapshot_metadata_count(s, t, version=9),
         lambda s, t: catalog.snapshot_partitions_metadata(s, t, version=9),
-        lambda s, t: catalog.snapshot_read_time_range(
-            s, t, "2024-01-01 00:00:00", "2024-01-02 00:00:00", version=9
+        lambda s, t: catalog.snapshot_read(
+            s, t, version=9,
+            time_range=("ts", "2024-01-01 00:00:00", "2024-01-02 00:00:00"),
         ),
     ],
     ids=[
@@ -2422,17 +2429,24 @@ def test_snapshot_rollback_resumes_interrupted_build(spark):
 
 
 def test_built_fixture_table_launches_no_spark_job(spark):
-    """Once the shared snapshot fixture is built, resolving it (what
-    q_metadata_count does before its manifest-only count) launches no
-    Spark job: the events frame is built only when a step is left."""
+    """Once a fixture table is built, resolving it launches no Spark job:
+    the source frame is built only when a step is left.  Covers the
+    shared snapshot fixture (what q_metadata_count resolves before its
+    manifest-only count) and q_join_bucketed's two bucket tables, which
+    are keyed by their own source tables."""
     import uuid
 
-    catalog.snapshot_events_table(spark, SF_SMOKE)
+    def resolve():
+        catalog.snapshot_events_table(spark, SF_SMOKE)
+        for table in ("lineitem", "orders"):
+            catalog._bucketed_fact(spark, SF_SMOKE, table)
+
+    resolve()
     sc = spark.sparkContext
     group = f"fixture-reuse-{uuid.uuid4().hex[:8]}"
     sc.setJobGroup(group, "resolve a built fixture table")
     try:
-        catalog.snapshot_events_table(spark, SF_SMOKE)
+        resolve()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup(group) == []

@@ -25,3 +25,35 @@ def test_contract_shapes(spark):
     os_ = e.oracle_sql()
     assert set(os_) <= set(qs), "every oracle key must have a query"
     assert callable(next(iter(qs.values())))
+
+
+def test_python_workers_import_package_from_any_cwd(tmp_path):
+    """A pandas-UDF query run from a working directory outside the
+    checkout, with no PYTHONPATH: the Python workers must still import
+    the package to unpickle the UDF."""
+    import os
+    import subprocess
+    import sys
+
+    from tests.conftest import SF_SMOKE
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        f"import sys; sys.path.insert(0, {root!r})\n"
+        "from data_pipeline_cursor_spark.registry import get_queries\n"
+        "from data_pipeline_cursor_spark.session import get_spark\n"
+        "spark = get_spark('cwd-probe')\n"
+        f"print('rows', get_queries()['q_ewma'](spark, {SF_SMOKE!r}).count())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_CPUS"] = "2"
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "rows " in out.stdout

@@ -31,7 +31,9 @@ def fixture(tmp_path, monkeypatch):
     table_dir = str(tmp_path / "tbl")
     ran: list[int] = []
     loads: list[tuple] = []
-    monkeypatch.setattr(catalog, "_fixture_dir", lambda sf_dir, name: table_dir)
+    monkeypatch.setattr(
+        catalog, "_fixture_dir", lambda sf_dir, name, table: table_dir
+    )
     monkeypatch.setattr(
         catalog, "load_table", lambda spark, sf_dir, name: _Events(loads)
     )

@@ -90,18 +90,13 @@ def test_groupby_has_partial_aggregation(spark):
     assert plan.count("HashAggregate") >= 2, plan
 
 
-def test_bucketed_fact_join_has_no_exchange(spark, tmp_path):
-    """catalog.bucketed_fact_join: lineitem⋈orders bucketed on orderkey must
-    plan with ZERO shuffle exchanges — join AND the per-orderkey aggregation
-    both reuse the bucket distribution. This is the layout that keeps the
-    one non-broadcastable join in the schema shuffle-free at 100 TB."""
-    from data_pipeline_cursor_spark.catalog import (
-        bucketed_fact_join,
-        create_bucketed_facts,
-    )
-
-    create_bucketed_facts(spark, SF_SMOKE, buckets=4)
-    df = bucketed_fact_join(spark)
+def test_bucketed_fact_join_has_no_exchange(spark):
+    """q_join_bucketed: lineitem⋈orders committed as manifest bucket
+    tables on orderkey must plan with ZERO shuffle exchanges — join AND
+    the per-orderkey aggregation both reuse the bucket distribution.
+    This is the layout that keeps the one non-broadcastable join in the
+    schema shuffle-free at 100 TB."""
+    df = get_queries()["q_join_bucketed"](spark, SF_SMOKE)
     df.collect()
     plan = _plan(df)
     assert "SortMergeJoin" in plan, plan
