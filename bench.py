@@ -17,31 +17,65 @@ BENCH_REPEATS (default 2 — per-query BEST-of-N; the host is co-tenant
 with load-avg swings of 3-8 that inflate any single run up to 3x on
 arbitrary queries, so the minimum is the reproducible-machine number;
 BASELINE.md's recorded envelope uses the same convention).
+
+The full payload also records, per query and per repeat, the JVM layers
+the query moved (``jvm``: codegen compiles, JIT, GC and class-loading
+deltas, read through py4j), and the run's provenance (cores, master,
+git sha, load average, codegen cache bound).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+JVM_LAYERS = ("codegen_compiles", "jit_ms", "gc_ms", "classes_loaded")
+
+
+def _jvm_counters(jvm) -> dict:
+    """The JVM's cumulative counters behind ``JVM_LAYERS``: whole-stage
+    codegen compiles (exact, one histogram update per Janino compile),
+    JIT compile ms, GC ms summed over the collectors, classes loaded."""
+    mf = jvm.java.lang.management.ManagementFactory
+    codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return {
+        "codegen_compiles": codegen.METRIC_COMPILATION_TIME().getCount(),
+        "jit_ms": mf.getCompilationMXBean().getTotalCompilationTime(),
+        "gc_ms": sum(b.getCollectionTime() for b in mf.getGarbageCollectorMXBeans()),
+        "classes_loaded": mf.getClassLoadingMXBean().getTotalLoadedClassCount(),
+    }
+
+
+def _git_sha(repo_dir: str) -> str | None:
+    try:
+        out = subprocess.run(
+            ["git", "-C", repo_dir, "rev-parse", "HEAD"],
+            capture_output=True, text=True, timeout=30,
+        )
+    except (OSError, subprocess.SubprocessError):
+        return None
+    return out.stdout.strip() or None
+
 
 def main() -> None:
+    load_before = os.getloadavg()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from data_pipeline_cursor_spark.registry import get_queries
     from data_pipeline_cursor_spark.session import get_spark
 
     spark = get_spark("bench")
+    jvm = spark.sparkContext._jvm
     # The remaining unpartitioned windows run over summary-grain inputs
     # only (q_gap_detect's per-bucket handoff, x_curriculum_order's
     # per-score cumulative — pinned by tests/test_plans.py); WindowExec's
     # blanket no-partition warning is noise in the bench tail, so demote
     # that single logger.
     try:
-        jvm = spark.sparkContext._jvm
         jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
             "org.apache.spark.sql.execution.window.WindowExec",
             jvm.org.apache.logging.log4j.Level.ERROR,
@@ -98,13 +132,18 @@ def main() -> None:
 
     repeats = max(1, int(os.environ.get("BENCH_REPEATS", "2")))
     timings: dict[str, float] = {}
+    # name -> one dict of JVM_LAYERS deltas per repeat, so the cold
+    # (first) and warm repeats show separately
+    jvm_layers: dict[str, list[dict]] = {}
     from data_pipeline_cursor_spark.registry import ArtifactScope
 
     with ArtifactScope(sorted(queries), share=share_pairs) as scope:
         for name in scope.order:
             best = None
+            jvm_layers[name] = []
             with scope.running(name):
                 for _ in range(repeats):
+                    before = _jvm_counters(jvm)
                     t0 = time.perf_counter()
                     try:
                         df = queries[name](spark, sf_dir)
@@ -116,7 +155,14 @@ def main() -> None:
                         # exists BECAUSE the co-tenant host flakes; a query
                         # is failed only when EVERY attempt failed
                         print(f"# bench FAIL {name}: {exc}", file=sys.stderr)
+                    after = _jvm_counters(jvm)
+                    jvm_layers[name].append({k: after[k] - before[k] for k in JVM_LAYERS})
             timings[name] = -1.0 if best is None else best
+    # suite totals of each layer, one dict per repeat
+    jvm_totals = [
+        {k: sum(r[i][k] for r in jvm_layers.values()) for k in JVM_LAYERS}
+        for i in range(repeats)
+    ]
 
     failed = sorted(k for k, t in timings.items() if t < 0)
     total = round(sum(t for t in timings.values() if t >= 0), 3)
@@ -127,12 +173,12 @@ def main() -> None:
     # so the verdict line itself carries the 2x clause.  Queries under a
     # 0.1 s floor are excluded from the ratio (pure scheduling noise).
     repo_dir = os.path.dirname(os.path.abspath(__file__))
-    base, base_src = {}, None
+    base_doc, base_src = {}, None
     base_path = os.environ.get("BENCH_BASE")
     if base_path:
         try:
             with open(base_path) as f:
-                base = json.load(f).get("queries", {})
+                base_doc = json.load(f)
             base_src = base_path
         except (OSError, ValueError) as exc:
             # the user EXPLICITLY asked for this baseline — losing it
@@ -145,8 +191,6 @@ def main() -> None:
             )
             base_path = None
     if not base_path:
-        import subprocess
-
         try:
             out = subprocess.run(
                 ["git", "-C", repo_dir, "show", "HEAD:BENCH_FULL.json"],
@@ -155,7 +199,7 @@ def main() -> None:
                 timeout=30,
             )
             if out.returncode == 0:
-                base = json.loads(out.stdout).get("queries", {})
+                base_doc = json.loads(out.stdout)
                 base_src = "git:HEAD:BENCH_FULL.json"
         except (OSError, ValueError, subprocess.SubprocessError):
             pass
@@ -168,6 +212,19 @@ def main() -> None:
                 "DISABLED for this run",
                 file=sys.stderr,
             )
+    # Like for like: the gate compares only against a baseline recorded
+    # on as many cores at the same scale factor; a record without that
+    # provenance (or with other values) gates nothing.
+    cores = len(os.sched_getaffinity(0))
+    base = base_doc.get("queries", {})
+    ran_at = (base_doc.get("cores"), base_doc.get("sf"))
+    if base_src is not None and ran_at != (cores, sf_dir):
+        print(
+            f"# bench: {base_src} ran at (cores, sf) = {ran_at}, this run "
+            f"at {(cores, sf_dir)}; 2x regression gate skipped",
+            file=sys.stderr,
+        )
+        base, base_src = {}, "no comparable baseline"
     # Per-FAMILY worst movers (round-9 VERDICT item 5): streaming drains
     # carry a trigger/state-commit floor that is load-sensitive in a way
     # batch plans aren't — two rounds running, every >2x flag was a drain
@@ -231,6 +288,16 @@ def main() -> None:
         "worst_streaming_query": worst_stream_q,
         "released_artifacts": scope.released,
         "baseline": base_src,
+        "cores": cores,
+        "master": spark.sparkContext.master,
+        "git_sha": _git_sha(repo_dir),
+        "load_before": [round(x, 2) for x in load_before],
+        "load_after": [round(x, 2) for x in os.getloadavg()],
+        "codegen_cache_entries": int(
+            spark.conf.get("spark.sql.codegen.cache.maxEntries")
+        ),
+        "jvm_totals": jvm_totals,
+        "jvm": jvm_layers,
     }
     # Persist the COMPLETE payload to a file (BENCH_OUT) — the committed
     # artifact that proves the per-query 2x clause for the whole registry.
@@ -257,12 +324,16 @@ def main() -> None:
         )[:20]
     )
     line = dict(payload)
+    del line["jvm"]  # per-query layers live in the artifact only
     line["queries"] = slowest
     line["queries_note"] = "top-20 slowest; full per-query dict in 'full'"
     # cap the failure list too — a registry-wide breakage (200+ names)
     # would blow the 2 kB tail exactly when the verdict matters most
     line["n_failed"] = len(failed)
     line["failed"] = failed[:10]
+    # the skip lists (29 streaming names in a sized run) are counts here
+    line["skipped_foils"] = len(skipped_foils)
+    line["skipped_streaming"] = len(skipped_streaming)
     line["full"] = os.path.basename(full_path)
     print(json.dumps(line))
 

@@ -16,6 +16,12 @@ for a 1000-executor cluster at ~100 TB:
   (/root/reference/trino/sql/init-tables.sql:7-8).
 - Arrow on: all pandas-UDF interchange is Arrow-batched (the only sanctioned
   Python path; row-at-a-time UDFs are banned in hot paths).
+- Whole-stage codegen cache sized to the registry: Spark keeps 100 compiled
+  classes by default, and one cold pass of the 331 registered queries
+  builds 3,460 (sf0.1), so a repeated query recompiled every class it ran
+  (263 of 311 in one perfbench ``analyst_sql`` timed pass at 4 cores).
+  The bound is a static SQL conf, read once when the JVM's CodeGenerator
+  initializes, so only a session this module builds carries it.
 """
 
 from __future__ import annotations
@@ -118,6 +124,15 @@ def rocksdb_state_store(spark: SparkSession):
             spark.conf.set(_STATE_PROVIDER_CONF, prior)
 
 
+# Compiled whole-stage codegen classes one session keeps.  Measured at
+# sf0.1, 4 cores: one cold pass of the full 331-query registry with an
+# unbounded cache builds 3,460 distinct classes (about 10.5 per query,
+# at most 91 for x_canonical_pick), counted as the delta of
+# CodegenMetrics.METRIC_COMPILATION_TIME's count read through py4j.
+# 8192 is the next power of two above twice that.
+CODEGEN_CACHE_ENTRIES = 8192
+
+
 def get_spark(app_name: str = "data-pipeline-cursor-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -134,6 +149,12 @@ def get_spark(app_name: str = "data-pipeline-cursor-spark") -> SparkSession:
             "spark.driver.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
         )
+        # Whole-stage codegen classes are cached per JVM, 100 by default:
+        # a registry pass evicts each class before its query runs again,
+        # so every repeat recompiles (CODEGEN_CACHE_ENTRIES).  Static SQL
+        # conf, read once when CodeGenerator initializes: it belongs on
+        # the builder, and a foreign session keeps Spark's default.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

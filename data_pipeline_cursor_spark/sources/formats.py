@@ -20,12 +20,14 @@ Scale: the write side is a normal distributed sink (one file per task);
 the read side is a normal distributed scan.  The tiny fixture slices here
 keep bench cost honest — the plan shape is identical at any size.  Work
 dirs live under the same pruned /tmp root as the streaming jobs', keyed by
-(pid, sf) so concurrent sessions never collide and re-runs overwrite.
+(pid, sf) so concurrent sessions never collide and re-runs overwrite; a
+process's first call removes the roots of processes that are gone.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,7 +39,26 @@ from data_pipeline_cursor_spark.sources.tables import load_table
 _FMT_ROOT = os.path.join(tempfile.gettempdir(), "dpc_stream", "formats")
 
 
+_SWEPT = False
+
+
+def _sweep_dead_roots() -> None:
+    """Remove the ``<pid>`` roots of processes that are gone — nothing
+    else ever removes them.  A live pid's root is never touched.  Once
+    per process."""
+    global _SWEPT
+    if _SWEPT:
+        return
+    _SWEPT = True
+    if not os.path.isdir(_FMT_ROOT):
+        return
+    for entry in os.listdir(_FMT_ROOT):
+        if entry.isdigit() and not os.path.exists(f"/proc/{entry}"):
+            shutil.rmtree(os.path.join(_FMT_ROOT, entry), ignore_errors=True)
+
+
 def _work_dir(sf_dir: str, fmt: str) -> str:
+    _sweep_dead_roots()
     base = os.path.basename(sf_dir.rstrip("/")) or "sf"
     return os.path.join(_FMT_ROOT, str(os.getpid()), base, fmt)
 

@@ -56,13 +56,13 @@ _PRUNED = False
 
 
 def _prune_stale(max_age_s: int = 6 * 3600) -> None:
-    """Drop work dirs (checkpoints, uuid-fresh sink outputs, per-pid
-    format and fixture-table roots) older than max_age_s — every
-    streaming query makes a fresh one and every process a fresh
-    formats/<pid> root, so without this the work root grows without
-    bound across benchmark/test runs (~1 GB per session observed).
-    Landing fixtures are exempt: they are content-keyed and REUSED
-    across runs.  Once per process."""
+    """Drop work dirs (checkpoints, uuid-fresh sink outputs) older than
+    max_age_s — every streaming query makes a fresh one, so without this
+    the work root grows without bound across benchmark/test runs (~1 GB
+    per session observed).  Landing fixtures are exempt: they are
+    content-keyed and REUSED across runs.  The per-pid format and
+    fixture-table roots are swept by ``formats._work_dir``.  Once per
+    process."""
     global _PRUNED
     if _PRUNED:
         return
@@ -73,7 +73,7 @@ def _prune_stale(max_age_s: int = 6 * 3600) -> None:
     cutoff = time.time() - max_age_s
     for family in (
         "ckpt", "lakehouse", "serving", "serving-backfill", "late",
-        "annserve", "formats",
+        "annserve",
     ):
         root = os.path.join(_WORK_ROOT, family)
         if not os.path.isdir(root):

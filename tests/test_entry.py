@@ -57,3 +57,36 @@ def test_python_workers_import_package_from_any_cwd(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert "rows " in out.stdout
+
+
+def test_codegen_cache_keeps_a_repeated_pass_compiled(spark):
+    """A second pass over the same queries compiles no whole-stage codegen
+    class: the session's compiled-class cache holds every class the first
+    pass built.  A pass builds about 150 classes at sf0.001; at Spark's
+    default bound (100) they are evicted before they are used again, and
+    the second pass recompiles almost all of them."""
+    from data_pipeline_cursor_spark.registry import get_queries
+    from data_pipeline_cursor_spark.session import CODEGEN_CACHE_ENTRIES
+    from tests.conftest import SF_SMOKE
+
+    qs = get_queries()
+    names = [
+        "q_case_when", "q_drift_kl", "q_in_subquery", "q_intersect",
+        "q_join_right", "q_pivot", "q_scd2_intervals", "q_sessionize",
+        "q_since_incremental", "q_twap", "q_tpch_shipping",
+        "q_tpch_market_share", "q_tpch_top_supplier",
+    ]
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def compiled_in_pass() -> int:
+        before = compiles.getCount()
+        for name in names:
+            qs[name](spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+        return compiles.getCount() - before
+
+    compiled_in_pass()
+    assert compiled_in_pass() == 0
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )

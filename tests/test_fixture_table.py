@@ -1,7 +1,8 @@
 """Spark-free tests of the lakehouse fixture helper
 ``catalog._fixture_table``: fake steps write the ``manifest-N.json``
 files ``snapshot_versions`` lists, and a fake events loader records each
-time ``ev`` is built."""
+time ``ev`` is built.  Also the sweep of the per-pid work roots those
+tables live under (``formats._work_dir``)."""
 
 from __future__ import annotations
 
@@ -92,3 +93,31 @@ def test_step_committing_other_than_one_version_raises(fixture, versions):
     with pytest.raises(RuntimeError, match="step 2 left .* expected 2"):
         build([step(0), step(1, versions=versions), step(2)])
     assert ran == [0, 1]  # nothing runs past the bad step
+
+
+def test_first_work_dir_call_removes_dead_pid_roots(tmp_path, monkeypatch):
+    """A process's first ``_work_dir`` call removes the roots of pids
+    that are gone and keeps a live pid's root and non-pid entries."""
+    import subprocess
+    import sys
+
+    from data_pipeline_cursor_spark.sources import formats
+
+    monkeypatch.setattr(formats, "_FMT_ROOT", str(tmp_path))
+    monkeypatch.setattr(formats, "_SWEPT", False)
+    gone = subprocess.run(
+        [sys.executable, "-c", "import os; print(os.getpid())"],
+        capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    dead = tmp_path / gone / "sf0.01" / "csv"
+    live = tmp_path / str(os.getppid()) / "sf0.01" / "csv"
+    other = tmp_path / "notapid"
+    for d in (dead, live, other):
+        d.mkdir(parents=True)
+        (d / "part-0").write_bytes(b"x")
+
+    path = formats._work_dir("/data/sf0.01", "csv")
+
+    assert path == str(tmp_path / str(os.getpid()) / "sf0.01" / "csv")
+    assert not (tmp_path / gone).exists()
+    assert live.exists() and other.exists()

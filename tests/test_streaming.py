@@ -1101,9 +1101,8 @@ def test_snapshot_feed_splits_huge_commits_and_flags_expired_offsets(
 
 def test_prune_stale_removes_aged_ann_serve_outputs(tmp_path, monkeypatch):
     """s_ann_serve writes a fresh uuid dir under the annserve family on
-    every run, and every process a fresh formats/<pid> root; the
-    once-per-process prune must age those out like the other uuid
-    families, and keep a fresh one."""
+    every run; the once-per-process prune must age those out like the
+    other uuid families, and keep a fresh one."""
     import os
     import time
 
@@ -1113,10 +1112,7 @@ def test_prune_stale_removes_aged_ann_serve_outputs(tmp_path, monkeypatch):
     monkeypatch.setattr(jobs, "_PRUNED", False)
     aged = time.time() - 7 * 3600
     dirs = []
-    for family, old_name, fresh_name in (
-        ("annserve", "0a1b2c3d", "4e5f6a7b"),
-        ("formats", "1234", "5678"),
-    ):
+    for family, old_name, fresh_name in (("annserve", "0a1b2c3d", "4e5f6a7b"),):
         old = tmp_path / family / old_name
         fresh = tmp_path / family / fresh_name
         for d in (old, fresh):
