@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from data_pipeline_cursor_spark.functions.math_ops import stable_round4
 from data_pipeline_cursor_spark.registry import register
 from data_pipeline_cursor_spark.sources import load_table
+from data_pipeline_cursor_spark.sources.tables import read_spark_parquet
 
 
 def _sql_str(v: str) -> str:
@@ -1244,8 +1245,8 @@ def _read_files_with_deletes(
     dparts = manifest.get("delete_parts", {})
 
     def full(paths):
-        return spark.read.parquet(
-            *[os.path.join(table_dir, p) for p in paths]
+        return read_spark_parquet(
+            spark, *[os.path.join(table_dir, p) for p in paths]
         )
 
     if not dels:
@@ -2595,8 +2596,8 @@ def staged_read(spark: SparkSession, table_dir: str, name: str) -> DataFrame:
 
     with open(os.path.join(table_dir, f"staged-{name}.json")) as fh:
         m = json.load(fh)
-    return spark.read.parquet(
-        *[os.path.join(table_dir, f) for f in m["files"]]
+    return read_spark_parquet(
+        spark, *[os.path.join(table_dir, f) for f in m["files"]]
     )
 
 
@@ -2877,8 +2878,8 @@ def _merge_detect_touched(
         rel_of = {
             os.path.abspath(os.path.join(table_dir, f)): f for f in cand
         }
-        scan = spark.read.parquet(
-            *[os.path.join(table_dir, f) for f in cand]
+        scan = read_spark_parquet(
+            spark, *[os.path.join(table_dir, f) for f in cand]
         ).select(
             F.col(key), F.col("_metadata.file_path").alias("_fp")
         )

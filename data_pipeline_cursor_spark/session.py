@@ -21,7 +21,9 @@ for a 1000-executor cluster at ~100 TB:
   builds 3,460 (sf0.1), so a repeated query recompiled every class it ran
   (263 of 311 in one perfbench ``analyst_sql`` timed pass at 4 cores).
   The bound is a static SQL conf, read once when the JVM's CodeGenerator
-  initializes, so only a session this module builds carries it.
+  initializes, so only a session this module builds carries it.  Class
+  names leave out the whole-stage codegen id, which AQE's concurrent
+  stage planning makes timing-dependent, so a warm repeat hits the cache.
 """
 
 from __future__ import annotations
@@ -49,6 +51,15 @@ _RUNTIME_SQL_CONFS = {
     # JVM mid-benchmark.  JVM case mapping is identical on ASCII data and is
     # what DuckDB effectively does, so disable ICU for determinism AND speed.
     "spark.sql.icu.caseMappings.enabled": "false",
+    # The whole-stage codegen id is part of a generated class's name, and
+    # so of its codegen cache key (CODEGEN_CACHE_ENTRIES).  AQE plans
+    # independent query stages concurrently, so a stage's id depends on
+    # timing, and a warm repeat of a query could miss the cache and
+    # recompile (x_dsir_sample at sf0.01: 0-10 classes per warm repeat
+    # with the id in the name, 0 without).  Without it, identical stages
+    # of different queries also share one class.  Runtime-settable, so a
+    # foreign session gets it too.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 

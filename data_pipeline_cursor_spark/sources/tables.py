@@ -86,6 +86,86 @@ def _read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+# The footer key under which Spark's parquet writer stores the row schema
+# as JSON; Spark's own footer inference reads it back when present.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _hidden(name: str) -> bool:
+    """A name Spark's file listing skips (InMemoryFileIndex)."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _listed_files(root: str) -> list[str] | None:
+    """The data files a Spark listing of local ``root`` keeps; None when
+    a Parquet summary file is there, since Spark's inference would read
+    that instead."""
+    if os.path.isfile(root):
+        files = [root]
+    else:
+        files = []
+        for d, dirs, names in os.walk(root):
+            dirs[:] = [n for n in dirs if not _hidden(n)]
+            files.extend(os.path.join(d, n) for n in names)
+    names = [os.path.basename(f) for f in files]
+    if any(n.startswith(("_metadata", "_common_metadata")) for n in names):
+        return None
+    return [f for f, n in zip(files, names) if not _hidden(n)]
+
+
+def _spark_footer_schema(
+    spark: SparkSession, paths: tuple[str, ...]
+) -> StructType | None:
+    """The data schema Spark's footer inference would give for ``paths``,
+    read on the driver without a Spark job, or None where that cannot be
+    done exactly: a path that is not local or is a glob, no data file, a
+    summary file, schema merging on, or a file without Spark's row
+    metadata (pyarrow-written).  Spark's inference
+    (ParquetUtils.inferSchema) sorts the listed files by path and reads
+    the first one's footer; the reader makes the schema nullable, as it
+    does an inferred one."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    if any(":" in p or any(c in p for c in "*?[{") for p in paths):
+        return None
+    files = []
+    for p in paths:
+        listed = _listed_files(p)
+        if listed is None:
+            return None
+        files.extend(os.path.abspath(f) for f in listed)
+    if not files:
+        return None
+    if spark.conf.get("spark.sql.parquet.mergeSchema", "false") == "true":
+        return None
+    try:
+        meta = pq.read_metadata(min(files)).metadata or {}
+        raw = meta.get(_SPARK_ROW_METADATA)
+        return None if raw is None else StructType.fromJson(json.loads(raw))
+    except Exception:  # unreadable footer or schema text: let Spark read it
+        return None
+
+
+def read_spark_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without the one-task "parquet at"
+    job Spark launches to infer a schema: for files Spark wrote, the
+    schema its inference would pick is read from the first listed file's
+    footer with pyarrow on the driver and given to the reader.  Partition
+    discovery still appends partition columns, which Spark's partitioned
+    writer keeps out of the files.  Anything else — a remote path, no
+    file, a pyarrow-written file — is read with plain inference, errors
+    included."""
+    schema = _spark_footer_schema(spark, paths)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table; pins the session confs we rely on (UTC tz)."""
     if name not in TABLE_NAMES:

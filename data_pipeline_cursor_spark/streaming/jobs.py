@@ -44,6 +44,7 @@ from data_pipeline_cursor_spark.streaming.sources import (
     FLUSH_TYPE,
     DrainReport,
     drain,
+    drain_state_parts,
     read_event_stream,
     stream_state_partitions,
     write_landing_fixture,
@@ -185,26 +186,11 @@ def _stream(
 
 
 def _drain_state_parts(sf_dir: str) -> int:
-    """State-store shuffle width for one drain, DERIVED from the events
-    footprint — ~1 MB of input per state partition, clamped to [2, 8] —
-    replacing the former constant 8 (a width every micro-batch pays for:
-    the HDFS-backed store commits EVERY partition, delta file + fsync at
-    ~35 ms each, even for a 0-row batch).  Measured both directions
-    (round 14): at sf0.1 (2 MB events) width 2 ≈ width 8 on total but
-    sheds the commit floor; at sf1 (20 MB) width 8 beats width 2 by
-    ~15-20% on the python-state ordered drains (s_funnel 5.3 vs 5.6-6.9 s,
-    s_ewma_horizon 4.0-4.5 vs 4.7-5.6 s) because the per-bucket numpy
-    fold parallelizes across state partitions — so the width derives UP
-    with input and saturates at the proven fixture ceiling.  The cap is
-    not a local-core constant: at sf10 (205 MB) it yields the same 8 the
-    round-13 sized runs validated (~26 MB/store, far under the
-    ~100 MB/store deployment rule the stream_state_partitions docstring
-    gives); a 100 TB deployment sizes state_bytes / ~100 MB per store
-    explicitly at job launch."""
+    """State-store width for one registered drain: the one width rule
+    (sources.drain_state_parts) applied to the events footprint."""
     from data_pipeline_cursor_spark.sources.tables import table_path
 
-    ev = _tree_bytes(table_path(sf_dir, "events"))
-    return int(min(8, max(2, -(-ev // (1 << 20)))))
+    return drain_state_parts(_tree_bytes(table_path(sf_dir, "events")))
 
 
 def _drain(

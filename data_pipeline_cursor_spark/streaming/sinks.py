@@ -24,8 +24,9 @@ indexes are (city, window_start) / last_updated — init-analytics-db.sql:
 
 The two update-mode upsert runners drain through
 `streaming.sources.drain` without 0-row micro-batches (`drain` says why
-that is sound in update mode), at a state width of 8 unless the caller
-derives one, and return the drain's `DrainReport`.  Inside a multi-batch
+that is sound in update mode), at the floor of the drain width rule
+(`streaming.sources.drain_state_parts`) unless the caller passes a
+width, and return the drain's `DrainReport`.  Inside a multi-batch
 drain a row later than the watermark is dropped one batch sooner than
 with Spark's default propagation, which keeps it or drops it as Spark's
 watermark contract allows.
@@ -40,7 +41,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_cursor_spark.streaming.sources import DrainReport, drain
+from data_pipeline_cursor_spark.sources.tables import read_spark_parquet
+from data_pipeline_cursor_spark.streaming.sources import (
+    STATE_PARTS_MIN,
+    DrainReport,
+    drain,
+)
 
 KEY_COLS = ("event_type", "window_start")
 
@@ -339,13 +345,14 @@ def run_upsert_stream_jdbc(
     agg_stream: DataFrame, url: str, table: str, checkpoint: str
 ) -> DrainReport:
     """JDBC variant of run_upsert_stream — same update-mode foreachBatch
-    shape, serving table lives in the database instead of Parquet."""
+    shape and state width, serving table lives in the database instead
+    of Parquet."""
     return drain(
         agg_stream,
         checkpoint,
         lambda b, _id: merge_upsert_batch_jdbc(b, url, table),
         out_mode="update",
-        state_parts=8,
+        state_parts=STATE_PARTS_MIN,
         no_data_batches=False,
     )
 
@@ -359,20 +366,30 @@ def run_upsert_stream(
     """Drive a windowed aggregation stream (update mode) into the serving
     table via foreachBatch MERGE — refinement semantics like Flink's
     retract/upsert stream: a window's row is re-emitted and overwritten on
-    every in-watermark late arrival.  ``state_parts`` pins the state-store
-    shuffle width (callers derive it from input size; None keeps 8)."""
+    every in-watermark late arrival.
+
+    ``state_parts`` pins the state-store shuffle width; None runs at the
+    floor of the drain width rule (sources.STATE_PARTS_MIN).  The floor
+    needs no input statistic: the sink refuses any batch touching more
+    than MAX_TOUCHED_PARTITIONS keys, so the state it drains is
+    serving-table-sized by contract, and every extra state partition is
+    one more delta file and fsync per batch.  The width is also the
+    merge write's shuffle width, and a checkpoint that already exists
+    resumes at the width frozen in its offset log."""
     return drain(
         agg_stream,
         checkpoint,
         lambda b, _id: merge_upsert_batch(b, table_dir),
         out_mode="update",
-        state_parts=state_parts or 8,
+        state_parts=state_parts or STATE_PARTS_MIN,
         no_data_batches=False,
     )
 
 
 def read_serving_table(spark: SparkSession, table_dir: str) -> DataFrame:
-    return spark.read.parquet(table_dir)
+    """The serving table, with the schema its files carry (no inference
+    job); an empty or missing dir raises as spark.read.parquet does."""
+    return read_spark_parquet(spark, table_dir)
 
 
 def backfill_serving_table(

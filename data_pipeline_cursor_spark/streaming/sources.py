@@ -311,9 +311,44 @@ def write_event_stream_kafka(
     )
 
 
+#: Bounds of a drain's state-store width.  Every micro-batch commits every
+#: state partition (a delta file and an fsync, ~35 ms each on the
+#: HDFS-backed store) even when the partition is empty, so the width is a
+#: per-batch floor cost, not only a parallelism knob.
+STATE_PARTS_MIN = 2
+STATE_PARTS_MAX = 8
+
+
+def drain_state_parts(input_bytes: int) -> int:
+    """The state-store width of a drain over ``input_bytes`` of input:
+    ~1 MB of input per state partition, clamped to [STATE_PARTS_MIN,
+    STATE_PARTS_MAX].  This is the one width rule; the registered jobs
+    apply it to their events footprint (jobs._drain_state_parts), and
+    the serving drains (sinks.run_upsert_stream) run at its floor.
+
+    Measured both directions: at sf0.1 (2 MB events) width 2
+    ≈ width 8 on total but sheds the commit floor; at sf1 (20 MB) width 8
+    beats width 2 by ~15-20% on the python-state ordered drains
+    (s_funnel 5.3 vs 5.6-6.9 s, s_ewma_horizon 4.0-4.5 vs 4.7-5.6 s)
+    because the per-bucket numpy fold parallelizes across state
+    partitions — so the width derives UP with input and saturates at the
+    proven fixture ceiling.  The cap is not a local-core constant: at
+    sf10 (205 MB) it yields the same 8 the sized sf10 runs validated
+    (~26 MB/store, far under the ~100 MB/store deployment rule
+    stream_state_partitions gives); a 100 TB deployment sizes
+    state_bytes / ~100 MB per store explicitly at job launch.
+
+    The width is frozen in the offset log when a checkpoint is created,
+    so a resumed query keeps its first width whatever this returns."""
+    per_mb = -(-input_bytes // (1 << 20))
+    return int(min(STATE_PARTS_MAX, max(STATE_PARTS_MIN, per_mb)))
+
+
 @contextmanager
 def stream_state_partitions(
-    spark: SparkSession, n: int | None = 8, no_data_batches: bool = True
+    spark: SparkSession,
+    n: int | None = STATE_PARTS_MAX,
+    no_data_batches: bool = True,
 ):
     """Pin the stateful-shuffle width for a streaming query's lifetime.
 
@@ -322,10 +357,12 @@ def stream_state_partitions(
     micro-batch commits every state partition (delta file + fsync) even
     when empty — observed ~40 ms/partition/batch on the HDFS-backed store,
     i.e. 2.5 s of pure commit overhead per batch at 32 partitions × 2
-    stateful ops.  Size it to state volume, not to the session default: 8
-    fits the fixture's ≤50 k state keys; a 100 TB deployment sizes UP
-    (state_bytes / ~100 MB per store), set once at job launch.  ``n=None``
-    leaves the session's width as it is.
+    stateful ops.  Size it to state volume, not to the session default:
+    ``drain_state_parts`` derives it from the input, at most
+    STATE_PARTS_MAX; a 100 TB deployment sizes UP (state_bytes / ~100 MB
+    per store), set once at job launch.  ``n=None`` leaves the session's
+    width as it is.  The width is also every other shuffle's width while
+    the query runs, the foreachBatch sinks' writes included.
 
     ``no_data_batches=False`` turns off 0-row micro-batches and switches
     to the single-operator watermark propagation; ``drain`` says when that
@@ -404,8 +441,8 @@ def drain(
       ``path``, one directory level per partition column.
 
     ``state_parts`` pins the state-store shuffle width for the drain
-    (stream_state_partitions; callers derive it from the input footprint,
-    jobs._drain_state_parts); None keeps the session's width.
+    (stream_state_partitions; callers derive it with drain_state_parts);
+    None keeps the session's width.
 
     ``no_data_batches=False`` turns off the 0-row micro-batch Spark runs
     after a data batch only to advance the watermark and evict state.  It

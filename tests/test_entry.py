@@ -90,3 +90,25 @@ def test_codegen_cache_keeps_a_repeated_pass_compiled(spark):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
         CODEGEN_CACHE_ENTRIES
     )
+
+
+def test_warm_repeats_of_a_query_compile_nothing(spark):
+    """Warm repeats of x_dsir_sample compile no class.  AQE plans its
+    independent query stages concurrently, so a stage's whole-stage
+    codegen id depends on timing; with the id in the generated class
+    name, a repeat could miss the codegen cache and recompile."""
+    from data_pipeline_cursor_spark.registry import get_queries
+    from tests.conftest import SF_ORACLE
+
+    query = get_queries()["x_dsir_sample"]
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def compiled() -> int:
+        before = compiles.getCount()
+        query(spark, SF_ORACLE).write.format("noop").mode("overwrite").save()
+        return compiles.getCount() - before
+
+    compiled()
+    assert [compiled() for _ in range(4)] == [0, 0, 0, 0]
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"

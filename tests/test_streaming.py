@@ -389,6 +389,66 @@ def test_upsert_drains_resume_without_empty_batches(spark, tmp_path):
     assert_same_result(got, tumble_agg(kept, with_watermark=False).toPandas())
 
 
+def _state_width(ckpt: str) -> int:
+    """State partitions the checkpoint's one stateful operator holds."""
+    import os
+
+    return sum(1 for n in os.listdir(os.path.join(ckpt, "state", "0")) if n.isdigit())
+
+
+def _upsert_drains(spark, tmp_path, widths):
+    """Land one file per entry of ``widths`` and drain it into one serving
+    table through one checkpoint, passing that entry as ``state_parts``;
+    returns (checkpoint, serving table without last_updated)."""
+    import json
+
+    from data_pipeline_cursor_spark.streaming.jobs import tumble_agg
+    from data_pipeline_cursor_spark.streaming.sinks import (
+        read_serving_table,
+        run_upsert_stream,
+    )
+    from data_pipeline_cursor_spark.streaming.sources import read_event_stream
+
+    landing = tmp_path / "landing"
+    landing.mkdir(parents=True)
+    serving, ckpt = str(tmp_path / "serving"), str(tmp_path / "ckpt")
+    for i, width in enumerate(widths):
+        (landing / f"{i}.json").write_text("\n".join(
+            json.dumps({"event_id": str(10 * i + j), "event_type": t,
+                        "value": str(j), "ts": f"2024-03-10 1{i}:0{j}:00"})
+            for j, t in enumerate(("click", "view", "click"))
+        ))
+        run_upsert_stream(
+            tumble_agg(read_event_stream(spark, str(landing))),
+            serving, ckpt, state_parts=width,
+        )
+    got = read_serving_table(spark, serving).drop("last_updated").toPandas()
+    return ckpt, got
+
+
+@pytest.mark.parametrize("width", [None, 3])
+def test_upsert_stream_state_width(spark, tmp_path, width):
+    """A fresh serving-drain checkpoint gets the width rule's floor;
+    ``state_parts`` still overrides it."""
+    from data_pipeline_cursor_spark.streaming.sources import STATE_PARTS_MIN
+
+    ckpt, _ = _upsert_drains(spark, tmp_path, [width])
+    assert _state_width(ckpt) == (width or STATE_PARTS_MIN)
+
+
+def test_upsert_checkpoint_resumes_at_its_frozen_width(spark, tmp_path):
+    """A checkpoint created at width 8 keeps 8 when later drains pass no
+    width, and serves the same table as one created at the floor."""
+    from data_pipeline_cursor_spark.streaming.sources import STATE_PARTS_MIN
+
+    ckpt8, got8 = _upsert_drains(spark, tmp_path / "w8", [8, None])
+    ckpt_floor, got_floor = _upsert_drains(spark, tmp_path / "floor", [None, None])
+    assert _state_width(ckpt8) == 8
+    assert _state_width(ckpt_floor) == STATE_PARTS_MIN
+    assert_same_result(got8, got_floor)
+    assert len(got8) == 4  # click and view, one window per file
+
+
 @pytest.mark.parametrize("prior", ["set", "unset"])
 def test_drain_failure_raises_and_restores_confs(spark, tmp_path, prior):
     """A foreachBatch that raises on batch 1 surfaces from drain, and the
