@@ -2409,12 +2409,10 @@ def _file_key_bounds(
     ordering matches parquet's stats ordering — exact for integer and
     ASCII-string keys (parquet string stats are byte-lexicographic and
     writers keep truncated stats as VALID bounds); for non-ASCII string
-    keys prefer an integer surrogate key.  The merge's driver-side
-    range test (_merge_candidates) compares these bounds with the
-    source's Spark-computed min/max in Python: exact for integer and
-    ASCII or UTF-8 string keys, because Python's code-point order
-    equals Spark's UTF-8 byte order; a NaN range or bound compares
-    False and falls through to the Spark-side bounds join."""
+    keys prefer an integer surrogate key.  The merge compares these
+    bounds with source keys in Python (_merge_candidates,
+    _merge_detect_touched): exact for integer and UTF-8 string keys,
+    whose code-point order is Spark's byte order; NaN never prunes."""
     recorded = (manifest or {}).get("file_bounds", {})
     out: dict[str, tuple | None] = {}
     legacy = []
@@ -2753,11 +2751,11 @@ def publish_to_branch(table_dir: str, stage: str, branch: str) -> int:
 def _merge_check_source(
     source: DataFrame, key: str
 ) -> tuple[DataFrame, tuple]:
-    """Materialize the MERGE source once (localCheckpoint — it has up to
-    four consumers: this check, the bounds join of partially
-    overlapping files, the touched-file scan and the clause join or
-    bucketed stage write; same reason Delta materializes MERGE sources)
-    and enforce the unique-source-key precondition (a multiply-matched
+    """Materialize a MERGE source not held (_merge_hold_source) once
+    (localCheckpoint — it has up to four consumers: this check, the
+    bounds join of partially overlapping files, the touched-file scan
+    and the clause join or bucketed stage write; same reason Delta
+    materializes MERGE sources) and enforce the unique-source-key precondition (a multiply-matched
     target row makes MERGE nondeterministic; Delta/Iceberg raise the
     same way).  ONE aggregate over the per-key counts yields the
     largest count (two NULL-key rows count as a duplicate too) and the
@@ -2781,6 +2779,38 @@ def _merge_check_source(
             "unique source key per target row"
         )
     return source, (st["_lo"], st["_hi"])
+
+
+def _merge_hold_source(
+    spark: SparkSession, source: DataFrame, key: str
+) -> tuple[DataFrame, list] | None:
+    """(source as a JVM-side local relation, its non-NULL keys) for at
+    most n = ``spark.sql.parquet.pushdown.inFilterThreshold`` rows of
+    unique non-floating keys within ``autoBroadcastJoinThreshold`` Arrow
+    bytes, else None.  Decided with no job when the threshold is <= 0 or
+    the plan's finite size estimate (a file-backed source's input) tops
+    n default-size rows, else by one ``limit(n + 1).toArrow()``."""
+    from pyarrow.compute import count_distinct
+    from pyspark.sql.types import DoubleType, FloatType
+
+    conf = spark._jconf
+    limit = conf.autoBroadcastJoinThreshold()
+    n = conf.parquetFilterPushDownInFilterThreshold()
+    rows = n * source._jdf.schema().defaultSize()
+    size = source._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if (
+        isinstance(source.schema[key].dataType, (DoubleType, FloatType))
+        or min(limit, n) <= 0
+        or rows < size < conf.defaultSizeInBytes()  # unknown size: maximal
+    ):
+        return None
+    tbl = source.limit(n + 1).toArrow()
+    col = tbl.column(key)  # NULL counts as one key, as in Spark's check
+    if tbl.num_rows > n or tbl.nbytes > limit or (
+        count_distinct(col, mode="all").as_py() < len(col)
+    ):
+        return None
+    return spark.createDataFrame(tbl, source.schema), col.drop_null().to_pylist()
 
 
 def _merge_candidates(
@@ -2856,13 +2886,14 @@ def _merge_detect_touched(
     manifest: dict,
     source: DataFrame,
     key: str,
-    krange: tuple,
+    krange: tuple | None,
+    keys: list | None = None,
 ) -> tuple[list[str], list[str]]:
     """Steps 1+2 of the COW merge, shared by the plain and bucketed
-    paths: (1) manifest-bounds file skip (zero file I/O; ``krange`` is
-    the source key range from _merge_check_source), (2) exact
-    touched-file detection via a one-column semi-join scan of the
-    candidates.  Returns (touched, untouched) relpaths."""
+    paths: (1) manifest-bounds file skip (zero file I/O) on the source
+    key range ``krange`` or a held source's ``keys``, (2) exact
+    touched-file detection via a one-column scan of the candidates.
+    Returns (touched, untouched) relpaths."""
     import re
     from urllib.parse import unquote
 
@@ -2870,31 +2901,35 @@ def _merge_detect_touched(
     # 1. metadata file skip on MANIFEST key bounds (recorded at write
     #    time; footer fallback only for legacy manifests)
     bounds = _file_key_bounds(table_dir, all_files, key, manifest)
-    cand = _merge_candidates(spark, all_files, bounds, source, key, krange)
+    if keys is None:
+        cand = _merge_candidates(spark, all_files, bounds, source, key, krange)
+    else:  # at most inFilterThreshold keys: test each against each file
+        cand = [
+            f for f in all_files
+            if bounds[f] is None
+            or any(bounds[f][0] <= k <= bounds[f][1] for k in keys)
+        ]
 
     # 2. exact touched-file detection: key-column scan of candidates
-    touched: list[str] = []
+    hit: set[str] = set()
     if cand:
         rel_of = {
             os.path.abspath(os.path.join(table_dir, f)): f for f in cand
         }
         scan = read_spark_parquet(
             spark, *[os.path.join(table_dir, f) for f in cand]
-        ).select(
-            F.col(key), F.col("_metadata.file_path").alias("_fp")
-        )
-        fps = (
-            scan.join(source.select(key), on=key, how="left_semi")
-            .select("_fp")
-            .distinct()
-            .collect()
-        )
-        for r in fps:
+        ).select(F.col(key), F.col("_metadata.file_path").alias("_fp"))
+        if keys is None:
+            fps = scan.join(source.select(key), on=key, how="left_semi")
+            fps = fps.select("_fp").distinct()
+        else:  # key IN pushed to Parquet: one job, a row per matched key
+            fps = scan.filter(F.col(key).isin(keys)).select("_fp")
+        for r in fps.collect():
             # _metadata.file_path is a URI: percent-encoded past the scheme
             p = unquote(re.sub(r"^file:/*", "/", r["_fp"]))
-            touched.append(rel_of[os.path.abspath(p)])
-    touched_set = set(touched)
-    untouched = [f for f in all_files if f not in touched_set]
+            hit.add(rel_of[os.path.abspath(p)])
+    touched = [f for f in all_files if f in hit]
+    untouched = [f for f in all_files if f not in hit]
     return touched, untouched
 
 
@@ -2935,14 +2970,7 @@ def snapshot_merge(
          the source keys; files whose range contains no source key are
          CANDIDATE-pruned with zero file I/O (parquet footers are
          consulted only for legacy manifests that predate recorded
-         bounds).  The test runs on the driver against the source key
-         range [smin, smax] (a by-product of the duplicate-key check):
-         a file outside it is pruned, a file holding smin or smax is a
-         candidate, and only files strictly inside it go through the
-         per-key bounds semi-join, over a bounds frame built through
-         Arrow (no Python worker task).  Same candidates as joining
-         every file; uuid-keyed files, whose bounds each span nearly
-         the whole key space, never need the join.
+         bounds).
       2. TOUCHED-FILE SCAN (exact): one key-column scan of the
          candidates tagged with ``_metadata.file_path``, semi-joined
          to the source keys — Delta's touched-file detection join.
@@ -2966,10 +2994,16 @@ def snapshot_merge(
       WHEN NOT MATCHED AND NOT s._delete  THEN INSERT *
     Source keys must be unique (the Delta/Iceberg precondition — a
     multiply-matched target row makes MERGE nondeterministic; enforced
-    here with a fail-stop count check at |source| grain).  The source
-    is materialized once (localCheckpoint) before its consumers (see
-    _merge_check_source) — the same reason Delta materializes MERGE
-    sources.
+    here with a fail-stop count check at |source| grain).
+
+    The source picks the path (same rows and errors; bucketed tables
+    keep _bucket_layout's rules on both).  DRIVER-HELD, for at most
+    inFilterThreshold unique keys (_merge_hold_source): collected once
+    through Arrow; step 1 tests each key against the bounds, step 2 is
+    one ``key IN`` scan, step 3 joins a JVM-side local relation — 5 jobs
+    for a 10-key correction instead of 12.  SPARK-SIDE otherwise (one
+    _merge_check_source aggregate; step 1 uses its key range), with no
+    probe job unless the plan's size estimate is unknown or that small.
 
     100 TB: a small key-clustered change batch rewrites O(touched
     files), not O(table) — the whole point of COW file granularity; a
@@ -2983,9 +3017,14 @@ def snapshot_merge(
     manifest = txn.base
     spec = _bucket_layout(manifest, "snapshot_merge", merge_key=key)
     all_files = manifest["files"]
-    source, krange = _merge_check_source(source, key)
+    keys = krange = None
+    held = _merge_hold_source(spark, source, key)
+    if held:
+        source, keys = held
+    else:
+        source, krange = _merge_check_source(source, key)
     touched, untouched = _merge_detect_touched(
-        spark, table_dir, manifest, source, key, krange
+        spark, table_dir, manifest, source, key, krange, keys
     )
     if spec:
         return _merge_bucketed(spark, txn, source, touched, spec)

@@ -2450,3 +2450,219 @@ def test_built_fixture_table_launches_no_spark_job(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+_THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+_IN_MAX = "spark.sql.parquet.pushdown.inFilterThreshold"
+
+
+def _merge_with(spark, monkeypatch, confs, *args, **kwargs):
+    """snapshot_merge(*args) with the session confs ``confs`` set for the
+    call; returns (version or ValueError text, whether the Spark-side
+    source check ran)."""
+    spark_side = []
+    check = catalog._merge_check_source
+
+    def spy(*a, **k):
+        spark_side.append(True)
+        return check(*a, **k)
+
+    monkeypatch.setattr(catalog, "_merge_check_source", spy)
+    prior = {c: spark.conf.get(c) for c in confs}
+    for c, v in confs.items():
+        spark.conf.set(c, v)
+    try:
+        return catalog.snapshot_merge(spark, *args, **kwargs), bool(spark_side)
+    except ValueError as e:
+        return str(e), bool(spark_side)
+    finally:
+        for c, v in prior.items():
+            spark.conf.set(c, v)
+        monkeypatch.setattr(catalog, "_merge_check_source", check)
+
+
+def test_driver_held_merge_matches_spark_side_property(
+    spark, tmp_path, monkeypatch
+):
+    """snapshot_merge's driver-held path (a source of at most
+    inFilterThreshold = 10 rows) and its Spark-side path (forced with
+    autoBroadcastJoinThreshold=-1) publish the same rows, or raise the
+    same error, over random bases and sources: NULL and duplicate
+    source keys, deletes, delete files on the base, bucketed tables,
+    and sources over 10 rows, which take the Spark-side path on both."""
+    import uuid
+    from collections import Counter
+
+    from hypothesis import HealthCheck, example, given, settings
+    from hypothesis import strategies as st
+
+    keys = st.integers(0, 15)
+
+    @settings(
+        max_examples=8, deadline=None, suppress_health_check=list(HealthCheck)
+    )
+    @given(
+        base=st.lists(keys, min_size=2, max_size=10, unique=True),
+        two_commits=st.booleans(),
+        deleted=st.sets(keys, max_size=3),
+        src=st.lists(
+            st.tuples(st.one_of(st.none(), keys), st.booleans(),
+                      st.sampled_from("xyz")),
+            max_size=12,
+        ),
+        bucketed=st.booleans(),
+    )
+    # NULL-key insert; two NULL keys; a duplicate key; deletes over a
+    # base with delete files; a bucketed table; 12 keys
+    @example(base=[1, 2], two_commits=False, deleted=set(),
+             src=[(None, False, "x"), (2, True, "y")], bucketed=False)
+    @example(base=[1, 2], two_commits=False, deleted=set(),
+             src=[(None, False, "x"), (None, True, "y")], bucketed=False)
+    @example(base=[1, 2, 3], two_commits=True, deleted=set(),
+             src=[(3, False, "x"), (3, True, "y")], bucketed=True)
+    @example(base=[1, 2, 3, 4], two_commits=True, deleted={2, 3},
+             src=[(3, False, "x"), (4, True, "y"), (9, False, "z")],
+             bucketed=False)
+    @example(base=[1, 5, 9], two_commits=True, deleted=set(),
+             src=[(5, False, "x"), (1, True, "y"), (7, False, "z")],
+             bucketed=True)
+    @example(base=list(range(0, 16, 2)), two_commits=True, deleted={4},
+             src=[(k, k % 3 == 0, "x") for k in range(12)], bucketed=False)
+    def check(base, two_commits, deleted, src, bucketed):
+        run = tmp_path / uuid.uuid4().hex[:8]
+        got = {}
+        for threshold in (None, "-1"):
+            tdir = str(run / str(threshold))
+            for part in (base[::2], base[1::2]) if two_commits else (base,):
+                catalog.snapshot_commit(
+                    spark, tdir,
+                    spark.createDataFrame(
+                        [(k, f"b{k}") for k in part], "k bigint, v string"
+                    ),
+                    bucket_by=("k", 4) if bucketed else None,
+                )
+            if deleted and not bucketed:
+                catalog.snapshot_delete_keys(
+                    spark, tdir,
+                    spark.createDataFrame(
+                        [(k,) for k in sorted(deleted)], "k bigint"
+                    ),
+                    "k",
+                )
+            source = spark.createDataFrame(
+                [(k, v, d) for k, d, v in src],
+                "k bigint, v string, _delete boolean",
+            )
+            confs = {} if threshold is None else {_THRESHOLD: threshold}
+            out, spark_side = _merge_with(
+                spark, monkeypatch, confs, tdir, source, key="k"
+            )
+            non_null = [k for k, _, _ in src if k is not None]
+            duplicate = (
+                len(set(non_null)) < len(non_null)
+                or len(src) - len(non_null) > 1
+            )
+            held = threshold is None and len(src) <= 10 and not duplicate
+            assert spark_side != held, (threshold, src)
+            got[threshold] = (
+                out if isinstance(out, str)
+                else Counter(
+                    tuple(r) for r in catalog.snapshot_read(spark, tdir).collect()
+                )
+            )
+        assert got[None] == got["-1"], (base, deleted, src, bucketed, got)
+        if duplicate:
+            assert "duplicate source keys" in got[None]
+
+    check()
+
+
+def test_driver_held_merge_launches_fewer_jobs(spark, tmp_path, monkeypatch):
+    """A 10-key correction (five updates, five deletes) over a three-commit
+    uuid-keyed table: held on the driver it launches fewer Spark jobs
+    than the same merge forced onto the Spark-side path
+    (autoBroadcastJoinThreshold=-1).  With inFilterThreshold = 9 it also
+    takes the Spark-side path.  All three publish the same rows."""
+    import random
+    import shutil
+    import uuid
+
+    rng = random.Random(17)
+    schema = "event_id string, v string"
+    tables = [str(tmp_path / name) for name in ("held", "forced", "in9")]
+    keys: list[str] = []
+    for _ in range(3):
+        batch = [uuid.UUID(int=rng.getrandbits(128)).hex for _ in range(200)]
+        keys += batch
+        catalog.snapshot_commit(
+            spark, tables[0],
+            spark.createDataFrame([(k, "a") for k in batch], schema),
+        )
+    for t in tables[1:]:
+        shutil.copytree(tables[0], t)
+    rows = [(k, "U", i % 2 == 1) for i, k in enumerate(rng.sample(keys, 10))]
+    sc = spark.sparkContext
+    jobs = []
+    for t, confs in zip(tables, ({}, {_THRESHOLD: "-1"}, {_IN_MAX: "9"})):
+        group = f"held-merge-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "10-key merge")
+        try:
+            source = spark.createDataFrame(rows, schema + ", _delete boolean")
+            _, spark_side = _merge_with(
+                spark, monkeypatch, confs, t, source, key="event_id"
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert spark_side == bool(confs), confs
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[0] < jobs[1], jobs
+    got = [
+        sorted(tuple(r) for r in catalog.snapshot_read(spark, t).collect())
+        for t in tables
+    ]
+    assert got[0] == got[1] == got[2]
+    assert len(got[0]) == 595
+
+
+def test_wide_merge_source_takes_the_spark_side_path(
+    spark, tmp_path, monkeypatch
+):
+    """A merge source of 8 rows with 8 KB string values, under a 16 KB
+    autoBroadcastJoinThreshold, is not held on the driver.  Built from a
+    Python list (no finite size estimate) it costs one probe of at most
+    inFilterThreshold + 1 rows; read from Parquet (estimated over the
+    threshold) it costs no probe.  Both publish the merged rows."""
+    import os
+    import shutil
+
+    base = str(tmp_path / "base")
+    catalog.snapshot_commit(
+        spark, base,
+        spark.createDataFrame([(k, "b") for k in range(8)], "k bigint, v string"),
+    )
+    rows = [(k, os.urandom(4096).hex(), k % 3 == 0) for k in range(4, 12)]
+    listed = spark.createDataFrame(rows, "k bigint, v string, _delete boolean")
+    listed.write.parquet(str(tmp_path / "src"))
+    stored = spark.read.parquet(str(tmp_path / "src"))
+    want = {k: "b" for k in range(8)}
+    for k, v, d in rows:
+        if d:
+            want.pop(k, None)
+        else:
+            want[k] = v
+
+    probes = []
+    to_arrow = type(listed).toArrow  # the session's DataFrame class
+    monkeypatch.setattr(
+        type(listed), "toArrow", lambda df: probes.append(1) or to_arrow(df)
+    )
+    for name, source, n_probes in (("listed", listed, 1), ("stored", stored, 0)):
+        table = str(tmp_path / name)
+        shutil.copytree(base, table)
+        probes.clear()
+        _, spark_side = _merge_with(
+            spark, monkeypatch, {_THRESHOLD: "16384b"}, table, source, key="k"
+        )
+        assert spark_side and len(probes) == n_probes, (name, probes)
+        got = dict(tuple(r) for r in catalog.snapshot_read(spark, table).collect())
+        assert got == want, name

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 
 def test_entry_smoke(spark):
     import __spark_entry__ as e
@@ -57,6 +59,93 @@ def test_python_workers_import_package_from_any_cwd(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert "rows " in out.stdout
+
+
+@pytest.fixture
+def worker_module():
+    """pyspark_graft_worker's patch installed afresh in this process (its
+    import installs it too); the stock method is restored afterwards, so
+    later tests run without the patch."""
+    import zipimport
+
+    import pyspark_graft_worker
+
+    current = zipimport.zipimporter.invalidate_caches
+    stock = getattr(current, "stock", current)
+    zipimport.zipimporter.invalidate_caches = stock
+    try:
+        assert pyspark_graft_worker._install()
+        yield pyspark_graft_worker
+    finally:
+        zipimport.zipimporter.invalidate_caches = stock
+
+
+def test_worker_module_rereads_a_zip_only_when_it_changed(
+    worker_module, tmp_path
+):
+    """An unchanged archive on sys.path is not re-read by
+    importlib.invalidate_caches(): its _zip_directory_cache entry stays
+    the same object.  After the archive is rewritten with a new module,
+    that module imports."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    archive = str(tmp_path / "mods.zip")
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("graft_zip_a.py", "A = 1\n")
+    sys.path.insert(0, archive)
+    try:
+        import graft_zip_a
+
+        assert graft_zip_a.A == 1
+        importlib.invalidate_caches()  # the read that records its stat
+        before = zipimport._zip_directory_cache[archive]
+        importlib.invalidate_caches()
+        importlib.invalidate_caches()
+        assert zipimport._zip_directory_cache[archive] is before
+
+        with zipfile.ZipFile(archive, "w") as zf:
+            zf.writestr("graft_zip_a.py", "A = 1\n")
+            zf.writestr("graft_zip_b.py", "B = 2\n")
+        importlib.invalidate_caches()
+        assert zipimport._zip_directory_cache[archive] is not before
+        import graft_zip_b
+
+        assert graft_zip_b.B == 2
+    finally:
+        sys.path.remove(archive)
+        sys.path_importer_cache.pop(archive, None)
+        zipimport._zip_directory_cache.pop(archive, None)
+        for name in ("graft_zip_a", "graft_zip_b"):
+            sys.modules.pop(name, None)
+
+
+def test_worker_module_keeps_stock_method_without_private_names(
+    worker_module, monkeypatch
+):
+    import zipimport
+
+    installed = zipimport.zipimporter.invalidate_caches
+    monkeypatch.delattr(zipimport, "_zip_directory_cache")
+    assert not worker_module._install()
+    assert zipimport.zipimporter.invalidate_caches is installed
+
+
+def test_python_tasks_run_the_graft_worker(spark):
+    """get_spark names pyspark_graft_worker as the Python worker module,
+    so a Python task runs with its invalidate_caches."""
+
+    def probe(_):
+        import sys
+        import zipimport
+
+        method = zipimport.zipimporter.invalidate_caches
+        yield ("pyspark_graft_worker" in sys.modules, method.__module__)
+
+    got = spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()
+    assert got == [(True, "pyspark_graft_worker")]
 
 
 def test_codegen_cache_keeps_a_repeated_pass_compiled(spark):
